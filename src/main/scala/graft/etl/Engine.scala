@@ -1,8 +1,20 @@
 package graft.etl
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftPlanBridge
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.etl.dsl.{Ast, Compiler, Parser}
 import graft.functions.GraftFunctions
@@ -24,6 +36,25 @@ import graft.functions.GraftFunctions
   *     own count-job + offset-map implementation of the distributed
   *     prefix sum). No single-partition window anywhere; mappings
   *     without `self[]` never pay any of it.
+  *   - [[runMapping]] reads on the driver only what is small at any
+  *     scale: the Map sheet (the rule table — O(rules), parsed whole)
+  *     and the header line of each one-file sheet it scans (the Source
+  *     and every `_join:` sheet — O(1): only the lines up to the
+  *     header are read). The header becomes the scan's declared
+  *     all-string schema, so no header-inference job runs; the rows
+  *     themselves are only ever read by the scan. A directory or glob
+  *     path (a streaming landing dir, a partitioned export) keeps
+  *     Spark's inference, the only reader for that input. The
+  *     run-history record is written on the driver too (one row).
+  *   - Spark jobs per run, by rule kind: plain rules (`_filter:`,
+  *     `src[]`, `constant:`, `formula:`, `eval2:`, `_plugin:`) fire
+  *     exactly ONE — the Output write, which also counts the rows;
+  *     each `_join:` adds its build side's broadcast job when the
+  *     sheet is small enough to broadcast (shuffle stages otherwise);
+  *     `_type:` adds its one validation aggregate (two jobs under
+  *     AQE: the map stage and the result); `self[]` adds the range
+  *     sort's sampling and the numbering's checkpoint and offsets
+  *     (five to seven); a growth-guard compaction adds its rewrite.
   */
 object Engine {
 
@@ -324,30 +355,6 @@ object Engine {
     }
   }
 
-  /** Full three-sheet run over CSV "sheets" in a directory:
-    * `<dir>/<config.source>.csv` + `<dir>/<config.map>.csv` →
-    * overwrite `<dir>/<config.output>` (CSV, header) —
-    * clear-then-write ≙ `mode("overwrite")` (`main.gs:124-129`).
-    *
-    * With `config.history` set, every invocation appends ONE record
-    * to the parquet table `<dir>/<config.history>` — the reference
-    * roadmap's "Execution history" + "Logging dashboard"
-    * (README.md:124-125): run id, start time, the three sheet names,
-    * an MD5 digest of the rule sheet (audit trail: WHICH rules
-    * produced an output), rows written (-1 on failure), duration,
-    * outcome, and the error message when the run aborted. Failed runs
-    * are recorded AND still rethrown — history observes the fail-fast
-    * contract, it never swallows it. Each run appends ONE file, so
-    * file count tracks run count; the GROWTH GUARD
-    * (`config.historyCompactEvery` / Dashboard
-    * `history_compact_every`) compacts the table in place after
-    * recording whenever it holds that many files — the
-    * millions-of-runs operating procedure, exercised in
-    * CompactionSpec. The swap is two renames with crash recovery on
-    * the next run (a `__compact_old` leftover is restored before
-    * recording); with the guard off (default 0), compose with
-    * `sources.Compaction` manually.
-    */
   /** Crash recovery for the in-place history compaction swap: a run
     * that died between the two renames leaves the data under
     * `__compact_old` and no live table — restore it before touching
@@ -399,31 +406,110 @@ object Engine {
     deleteRecursively(new java.io.File(old))
   }
 
+  /** Append one run record to the history table at `histPath`, on
+    * the driver: Spark's parquet writer factory writes the single row
+    * into a hidden in-progress file (invisible to `spark.read.parquet`
+    * and to the growth guard's file count), which is then renamed into
+    * a `part-` file. No Spark job runs. A crash before the rename
+    * leaves only the hidden file behind; the next compaction drops it.
+    */
+  private def appendHistoryRecord(spark: SparkSession, histPath: String,
+      record: InternalRow): Unit = {
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val factory =
+      GraftPlanBridge.parquetWriterFactory(spark, job, HistorySchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val dir = new Path(histPath)
+    val fs = dir.getFileSystem(job.getConfiguration)
+    val id = java.util.UUID.randomUUID.toString
+    val tmp = new Path(dir, s".$id.inprogress")
+    try {
+      val writer = factory.newInstance(tmp.toString, HistorySchema, ctx)
+      try writer.write(record) finally writer.close()
+      val dst = new Path(dir,
+        s"part-00000-$id-c000${factory.getFileExtension(ctx)}")
+      if (!fs.rename(tmp, dst))
+        throw new java.io.IOException(
+          s"could not commit run record $tmp -> $dst")
+    } catch {
+      case e: Throwable => fs.delete(tmp, false); throw e
+    }
+  }
+
+  /** The run-history schema, exactly as the Spark-written records of
+    * earlier versions carry it in their footers: strings nullable,
+    * longs not.
+    */
+  private val HistorySchema = StructType(Seq(
+    StructField("run_id", StringType),
+    StructField("ts_ms", LongType, nullable = false),
+    StructField("source_sheet", StringType),
+    StructField("map_sheet", StringType),
+    StructField("output_sheet", StringType),
+    StructField("rules_digest", StringType),
+    StructField("rows_out", LongType, nullable = false),
+    StructField("duration_ms", LongType, nullable = false),
+    StructField("status", StringType),
+    StructField("error", StringType)))
+
+  /** Full three-sheet run over CSV "sheets" in a directory:
+    * `<dir>/<config.source>.csv` + `<dir>/<config.map>.csv` →
+    * overwrite `<dir>/<config.output>` (CSV, header) —
+    * clear-then-write ≙ `mode("overwrite")` (`main.gs:124-129`).
+    *
+    * With `config.history` set, every invocation appends ONE record
+    * to the parquet table `<dir>/<config.history>` — the reference
+    * roadmap's "Execution history" + "Logging dashboard"
+    * (README.md:124-125): run id, start time, the three sheet names,
+    * an MD5 digest of the rule sheet (audit trail: WHICH rules
+    * produced an output), rows written (-1 on failure), duration,
+    * outcome, and the error message when the run aborted. Failed runs,
+    * a missing sheet included (digest null when the Map sheet is the
+    * missing one), are recorded AND still rethrown: history observes
+    * the fail-fast contract, it never swallows it. The record is
+    * written on the driver (no Spark job). Each run appends ONE file, so
+    * file count tracks run count; the GROWTH GUARD
+    * (`config.historyCompactEvery` / Dashboard
+    * `history_compact_every`) compacts the table in place after
+    * recording whenever it holds that many files — the
+    * millions-of-runs operating procedure, exercised in
+    * CompactionSpec. The swap is two renames with crash recovery on
+    * the next run (a `__compact_old` leftover is restored before
+    * recording); with the guard off (default 0), compose with
+    * `sources.Compaction` manually.
+    */
   def runMapping(spark: SparkSession, dir: String,
       config: EngineConfig = EngineConfig()): Long = {
     val t0 = System.currentTimeMillis()
-    val source = readSheetCsv(spark, s"$dir/${config.source}.csv")
-    val rules = sheetPairs(readSheetCsv(spark, s"$dir/${config.map}.csv"))
-    val digest = rulesDigest(rules)
+    // stays null when the Map sheet cannot be read
+    var digest: String = null
     def record(rowsOut: Long, status: String, error: String): Unit =
       if (config.history.nonEmpty) {
-        import spark.implicits._
-        recoverHistorySwap(s"$dir/${config.history}")
-        Seq((java.util.UUID.randomUUID.toString, t0, config.source,
-            config.map, config.output, digest, rowsOut,
-            System.currentTimeMillis() - t0, status, error))
-          .toDF("run_id", "ts_ms", "source_sheet", "map_sheet",
-            "output_sheet", "rules_digest", "rows_out", "duration_ms",
-            "status", "error")
-          .coalesce(1).write.mode("append")
-          .parquet(s"$dir/${config.history}")
-        maybeCompactHistory(spark, s"$dir/${config.history}",
-          config.historyCompactEvery)
+        val hist = s"$dir/${config.history}"
+        recoverHistorySwap(hist)
+        def utf8(v: String) = UTF8String.fromString(v)
+        appendHistoryRecord(spark, hist, InternalRow(
+          utf8(java.util.UUID.randomUUID.toString), t0,
+          utf8(config.source), utf8(config.map), utf8(config.output),
+          utf8(digest), rowsOut, System.currentTimeMillis() - t0,
+          utf8(status), utf8(error)))
+        maybeCompactHistory(spark, hist, config.historyCompactEvery)
       }
+    // a missing sheet is the reference-style contextual abort, not a
+    // Spark path error
+    def sheet(name: String, role: String): String = {
+      val path = s"$dir/$name.csv"
+      if (!new java.io.File(path).isFile)
+        throw Ast.DslError(s"""Sheet "$name" does not exist ($role).""")
+      path
+    }
     try {
+      val rules = readSheetPairs(spark, sheet(config.map, "map sheet"))
+      digest = rulesDigest(rules)
+      val source = readSheetCsv(spark, sheet(config.source, "source sheet"))
       // `_join:X` rules name sibling sheets: read `<dir>/X.csv` for
-      // each (missing file → the reference-style contextual abort,
-      // not a Spark path error); Parser re-validates names + headers.
+      // each; Parser re-validates names + headers.
       val sheets = rules.collect {
         case (h, _) if h != null && h.trim.startsWith("_join:") =>
           h.trim.stripPrefix("_join:").trim
@@ -434,10 +520,7 @@ object Engine {
             name.contains(".."))
           throw Ast.DslError(s"""Sheet name "$name" must not """ +
             s"""contain path separators or ".." (rule: "_join:$name").""")
-        if (!new java.io.File(s"$dir/$name.csv").isFile)
-          throw Ast.DslError(
-            s"""Sheet "$name" does not exist (rule: "_join:$name").""")
-        name -> readSheetCsv(spark, s"$dir/$name.csv")
+        name -> readSheetCsv(spark, sheet(name, s"""rule: "_join:$name""""))
       }.toMap
       val out = transform(source, rules, sheets = sheets)
       // the row count rides an observe() metric on the WRITE job — one
@@ -472,25 +555,114 @@ object Engine {
       .map("%02x".format(_)).mkString
   }
 
-  /** All-string CSV read — the file text IS the display value
-    * (`inferSchema=false` keeps getDisplayValues semantics).
+  /** The options every sheet is read with. `inferSchema=false` keeps
+    * the file text as the display value (getDisplayValues semantics);
     * `escape="` reads RFC-4180 doubled-quote escaping (what a
-    * spreadsheet CSV export produces); Spark's default `\` escape
+    * spreadsheet CSV export produces) — Spark's default `\` escape
     * silently mis-parses quoted rule text otherwise.
     */
-  def readSheetCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", true).option("inferSchema", false)
-      .option("escape", "\"").csv(path)
+  private val SheetCsvOptions =
+    Map("header" -> "true", "inferSchema" -> "false", "escape" -> "\"")
+
+  /** All-string CSV read of a sheet. A one-file sheet's header line is
+    * read on the driver (`sheetSchema`) and handed to the scan as its
+    * schema, so no header-inference job runs; a directory (a streaming
+    * landing dir, a partitioned export) or glob keeps Spark's own
+    * inference, the only reader for that input.
+    */
+  def readSheetCsv(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.options(SheetCsvOptions)
+    sheetFile(spark, path) match {
+      case Some(f) =>
+        val opts = sheetOptions(spark)
+        reader.schema(
+          withSheetLines(spark, f, opts)(sheetSchema(spark, opts, _)))
+          .csv(path)
+      case None => reader.csv(path)
+    }
+  }
+
+  /** A sheet's (colA, colB) pairs — [[sheetPairs]] of [[readSheetCsv]]
+    * — parsed on the driver for a one-file sheet: the rule table is
+    * O(rules), so reading it costs no Spark job. Rows come from
+    * Spark's own CSV row parser over the file's lines, so quoting,
+    * blank lines and short or long rows read exactly as a scan reads
+    * them.
+    */
+  def readSheetPairs(spark: SparkSession, path: String): Seq[(String, String)] =
+    sheetFile(spark, path) match {
+      case Some(f) =>
+        val opts = sheetOptions(spark)
+        val lines = withSheetLines(spark, f, opts)(_.toVector)
+        val schema = sheetSchema(spark, opts, lines.iterator)
+        val checker = new CSVHeaderChecker(schema, opts,
+          s"CSV file: $path", true)
+        GraftPlanBridge.parseCsvLines(lines.iterator,
+            new UnivocityParser(schema, schema, opts), checker, schema)
+          .map(r => cellPair(schema.length, r.getUTF8String))
+          .toVector
+      case None => sheetPairs(readSheetCsv(spark, path))
+    }
+
+  private def sheetFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val p = new Path(path)
+    try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)).filter(_.isFile)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  private def sheetOptions(spark: SparkSession): CSVOptions = {
+    val conf = GraftPlanBridge.sqlConf(spark)
+    new CSVOptions(SheetCsvOptions, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+  }
+
+  /** The file's lines, split and decoded by the line reader Spark's CSV
+    * scan uses (LF, CR or CRLF ends a line; a leading UTF-8 BOM is
+    * dropped).
+    */
+  private def withSheetLines[T](spark: SparkSession, f: FileStatus,
+      opts: CSVOptions)(body: Iterator[String] => T): T = {
+    val reader = new HadoopFileLinesReader(
+      PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0,
+        f.getLen),
+      opts.lineSeparatorInRead, spark.sparkContext.hadoopConfiguration)
+    try body(reader.map(t =>
+      new String(t.getBytes, 0, t.getLength, opts.charset)))
+    finally reader.close()
+  }
+
+  /** The schema Spark's CSV inference gives a sheet, derived on the
+    * driver from its header line alone: the header is the first line
+    * that is not blank after trimming spaces (inference's
+    * `length(trim(value)) > 0`), tokenized by univocity and made unique
+    * by `makeSafeHeader` under the session's case sensitivity; every
+    * column is a string. No line at all gives the empty schema.
+    * O(1) in the sheet's size: only the lines up to the header are
+    * read.
+    */
+  private def sheetSchema(spark: SparkSession, opts: CSVOptions,
+      lines: Iterator[String]): StructType =
+    lines.find(_.exists(_ != ' '))
+      .map(new CsvParser(opts.asParserSettings).parseLine) match {
+      case Some(header) if header != null =>
+        StructType(CSVUtils.makeSafeHeader(header,
+            GraftPlanBridge.sqlConf(spark).caseSensitiveAnalysis, opts)
+          .map(StructField(_, StringType)).toSeq)
+      case _ => StructType(Nil)
+    }
 
   /** First two columns of a sheet as (colA, colB) pairs, null-safe —
     * the shape of both the Map rules and the Dashboard key/values.
-    * One definition so null/short-row handling can't drift between
-    * the batch CLI, the stream CLI, and runMapping.
+    * One definition ([[cellPair]]) so null/short-row handling can't
+    * drift between the batch CLI, the stream CLI, and runMapping.
     */
   def sheetPairs(df: DataFrame): Seq[(String, String)] =
-    df.collect().toSeq.map { r =>
-      (Option(r.get(0)).map(_.toString).getOrElse(""),
-       if (r.size > 1) Option(r.get(1)).map(_.toString).getOrElse("")
-       else "")
-    }
+    df.collect().toSeq.map(r => cellPair(r.size, r.get))
+
+  private def cellPair(width: Int, cell: Int => Any): (String, String) = {
+    def text(i: Int) =
+      if (i < width) Option(cell(i)).map(_.toString).getOrElse("") else ""
+    (text(0), text(1))
+  }
 }

@@ -46,8 +46,7 @@ object RunMappingStreamCli {
         else EngineConfig()
       val srcDir = s"$dir/${config.source}"
       val headers = Engine.readSheetCsv(spark, srcDir).columns.toSeq
-      val mapRules = Engine.sheetPairs(
-        Engine.readSheetCsv(spark, s"$dir/${config.map}.csv"))
+      val mapRules = Engine.readSheetPairs(spark, s"$dir/${config.map}.csv")
       val outDir = s"$dir/${config.output}"
       // checkpoint keyed to SOURCE and OUTPUT: re-pointing Dashboard's
       // `output` must not resume from another sink's progress, and

@@ -521,4 +521,90 @@ class EngineSpec extends SparkSpec {
     assert(ok.getString(1) == Engine.rulesDigest(Seq(
       "_filter:k" -> "eval: src[K] == 1", "Val" -> "src[V]")))
   }
+
+  test("a missing Source or Map sheet is the contextual abort AND one " +
+      "recorded failed run (digest null when the Map is unreadable)") {
+    val s = spark
+    for (missing <- Seq("Source", "Map")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-nosheet")
+      if (missing != "Source")
+        java.nio.file.Files.writeString(dir.resolve("Source.csv"),
+          "K,V\n1,a\n")
+      if (missing != "Map")
+        java.nio.file.Files.writeString(dir.resolve("Map.csv"),
+          "out,instr\nVal,src[V]\n")
+      val e = intercept[graft.etl.dsl.Ast.DslError] {
+        Engine.runMapping(s, dir.toString, EngineConfig(history = "Runs"))
+      }
+      assert(e.message.contains(s"""Sheet "$missing" does not exist"""),
+        e.message)
+      val runs = s.read.parquet(s"$dir/Runs")
+        .select("rules_digest", "rows_out", "status", "error").collect()
+      assert(runs.length == 1, runs.toSeq)
+      val r = runs.head
+      assert(r.getLong(1) == -1 && r.getString(2) == "error" &&
+        r.getString(3) == e.message, r)
+      assert(r.isNullAt(0) == (missing == "Map"), r)
+    }
+  }
+
+  /** Call sites (stage details) of the Spark jobs `body` fires. The jobs
+    * are tagged with a job group; a fence job in the same group closes
+    * the window — the listener bus delivers events in order, so once
+    * the fence's start arrives every earlier job has been seen.
+    */
+  private def jobsFiredBy(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "fence")
+            fence.countDown()
+          else jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "")
+      try body
+      finally {
+        sc.setJobDescription("fence")
+        sc.parallelize(Seq(1), 1).count()
+        sc.clearJobGroup()
+      }
+      assert(fence.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.toArray.toSeq.map(_.toString)
+  }
+
+  test("job floor: a plain runMapping with history on fires exactly ONE " +
+      "Spark job (the Output write); a _join: run fires none from a " +
+      "sheet read (headers, rule table and run record stay on the driver)") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobfloor")
+    java.nio.file.Files.writeString(dir.resolve("Source.csv"),
+      "K,V\n1,a\n2,b\n3,c\n")
+    java.nio.file.Files.writeString(dir.resolve("Other.csv"),
+      "K,W\n1,x\n3,z\n")
+    java.nio.file.Files.writeString(dir.resolve("Map.csv"),
+      "out,instr\n_filter:k,eval: src[K] >= 2\nVal,src[V]\n")
+    java.nio.file.Files.writeString(dir.resolve("MapJoin.csv"),
+      "out,instr\n_join:Other,src[K] == other[K]\nVal,src[V]\n" +
+        "W,src[W]\n")
+    val cfg = EngineConfig(history = "Runs")
+    // the first run creates the Output and the history table
+    Engine.runMapping(s, dir.toString, cfg)
+    val plain = jobsFiredBy(Engine.runMapping(s, dir.toString, cfg))
+    assert(plain.length == 1, plain.mkString("\n----\n"))
+    val joined = jobsFiredBy(
+      Engine.runMapping(s, dir.toString, cfg.copy(map = "MapJoin")))
+    assert(!joined.exists(_.contains("Engine$.readSheet")),
+      joined.mkString("\n----\n"))
+    assert(s.read.parquet(s"$dir/Runs").count() == 3)
+  }
 }

@@ -84,6 +84,106 @@ class CompactionSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/Runs__compact_old").isDirectory)
   }
 
+  /** A run-history sheet dir plus the one record earlier versions
+    * appended per run: a one-row Spark write job over the tuple
+    * encoding.
+    */
+  private def historySheets(prefix: String): java.nio.file.Path = {
+    val dir = Files.createTempDirectory(prefix)
+    Files.writeString(dir.resolve("Source.csv"), "K,V\n1,a\n2,b\n")
+    Files.writeString(dir.resolve("Map.csv"), "out,instr\nVal,src[V]\n")
+    dir
+  }
+
+  private def sparkWrittenRecord(histDir: String, runId: String): Unit = {
+    val s = spark
+    import s.implicits._
+    Seq((runId, 1L, "Source", "Map", "Output", "digest", 2L, 3L, "ok",
+        null: String))
+      .toDF("run_id", "ts_ms", "source_sheet", "map_sheet",
+        "output_sheet", "rules_digest", "rows_out", "duration_ms",
+        "status", "error")
+      .coalesce(1).write.mode("append").parquet(histDir)
+  }
+
+  private def partFiles(histDir: String): Seq[java.io.File] =
+    new java.io.File(histDir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet"))
+
+  /** (parquet message type, Spark row schema) from a file's footer. */
+  private def footer(f: java.io.File) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI),
+        spark.sparkContext.hadoopConfiguration))
+    try {
+      val m = r.getFooter.getFileMetaData
+      (m.getSchema, org.apache.spark.sql.types.DataType.fromJson(
+        m.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+    } finally r.close()
+  }
+
+  test("run history: a driver-written record has the SAME footer schema " +
+      "(parquet types, Spark schema, nullability) as a Spark-written one") {
+    val dir = historySheets("graft-histfooter")
+    graft.etl.Engine.runMapping(spark, dir.toString,
+      graft.etl.EngineConfig(history = "Runs"))
+    sparkWrittenRecord(s"$dir/Old", "old")
+    val Seq(driverWritten) = partFiles(s"$dir/Runs")
+    val Seq(sparkWritten) = partFiles(s"$dir/Old")
+    assert(footer(driverWritten) == footer(sparkWritten))
+  }
+
+  test("run history: a table mixing Spark-written and driver-written " +
+      "records reads back and compacts under the growth guard with no " +
+      "record changed") {
+    val s = spark
+    val dir = historySheets("graft-histmixed")
+    val hist = s"$dir/Runs"
+    sparkWrittenRecord(hist, "old-1")
+    sparkWrittenRecord(hist, "old-2")
+    val cfg = graft.etl.EngineConfig(history = "Runs",
+      historyCompactEvery = 4)
+    graft.etl.Engine.runMapping(s, dir.toString, cfg)
+    assert(partFiles(hist).length == 3)
+    val before = s.read.parquet(hist).collect().toSet
+    assert(before.size == 3)
+    // the fourth file trips the guard
+    graft.etl.Engine.runMapping(s, dir.toString, cfg)
+    assert(partFiles(hist).length == 1)
+    val after = s.read.parquet(hist).collect().toSet
+    assert(after.size == 4 && before.subsetOf(after),
+      s"compaction changed a record: ${before -- after}")
+  }
+
+  test("run history: an in-progress record orphaned by a crash is " +
+      "invisible to spark.read.parquet and not counted by the growth " +
+      "guard") {
+    val s = spark
+    val dir = historySheets("graft-historphan")
+    val hist = s"$dir/Runs"
+    val cfg = graft.etl.EngineConfig(history = "Runs",
+      historyCompactEvery = 3)
+    graft.etl.Engine.runMapping(s, dir.toString, cfg)
+    // a writer that died before its rename leaves its hidden
+    // in-progress file, possibly truncated
+    val bytes = Files.readAllBytes(partFiles(hist).head.toPath)
+    val orphans = (1 to 2).map { _ =>
+      val f = new java.io.File(hist, s".${java.util.UUID.randomUUID}.inprogress")
+      Files.write(f.toPath, bytes.take(bytes.length / 2))
+      f
+    }
+    graft.etl.Engine.runMapping(s, dir.toString, cfg)
+    // two runs + two orphans: below the guard, nothing compacted
+    assert(partFiles(hist).length == 2 && orphans.forall(_.exists))
+    assert(s.read.parquet(hist).count() == 2)
+    // the third run compacts around the orphans
+    graft.etl.Engine.runMapping(s, dir.toString, cfg)
+    assert(partFiles(hist).length == 1)
+    assert(s.read.parquet(hist).count() == 3)
+  }
+
   test("compact sees nested partitionBy layouts (recursive listing)") {
     val s = spark
     import s.implicits._
