@@ -1,8 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.BpeReplay
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** BPE vocabulary TRAINING and ENCODING — iterative pair-merge
   * learning, the one classic LLM-pipeline operator the counting-only
@@ -16,28 +21,33 @@ import org.apache.spark.sql.functions._
   * replays the merge list (in learned order) over a vocabulary.
   *
   * Scale shape — the part that matters at 100 TB:
-  *   - The ONLY corpus-sized pass is the word-frequency aggregate
-  *     (partial-agg'd hash count). Training then runs entirely on the
-  *     VOCAB-bounded symbol table (top-K words × avg word length
-  *     rows — millions, not trillions), the standard trick that makes
-  *     BPE training tractable: pair counts are weighted by word
-  *     frequency instead of re-scanning text. Encoding likewise
-  *     segments the DISTINCT vocabulary once; documents then join the
-  *     per-word segmentation — merges never re-run per document.
-  *   - Each merge round is one lead() window over `word` partitions,
-  *     one partial-agg'd pair count, and two skinny keyed joins to
-  *     apply the merge — all distributed; the driver holds only the
-  *     1-row argmax per round (the PageRank loop discipline), and
-  *     `localCheckpoint` truncates the per-round lineage.
-  *   - Determinism: ties break on (count DESC, left, right) with
-  *     binary string order; greedy left-to-right non-overlap inside
-  *     equal-symbol runs is resolved with the gaps-and-islands
-  *     even-offset rule — a pure function of the data, not of
-  *     partitioning. Every round is ONE aggregate + set operations,
-  *     so a SQL engine can re-derive the whole merge table
-  *     round-by-round (`oracleSql` generates that mirror).
+  *   - ONE corpus pass: the partial-agg'd word-frequency count and its
+  *     top-K (`topWords`) cut, collected once. That table is the
+  *     paper's word-frequency dictionary; training never re-scans
+  *     text, pair counts are weighted by word frequency instead.
+  *   - Every merge round then runs on the driver over that dictionary:
+  *     count adjacent pairs, take the argmax, apply only the new merge
+  *     to each word's current symbols — O(merges·topWords·wordlen)
+  *     driver CPU and no Spark job, where a distributed round costs a
+  *     serial driver round trip per merge. The dictionary is bounded
+  *     by `MaxTopWords`.
+  *   - Encoding segments the DISTINCT corpus vocabulary once with one
+  *     map-side projection ([[graft.functions.BpeReplay]]); documents
+  *     then join the per-word segmentation — merges never re-run per
+  *     document.
+  *   - Determinism: ties break on (count DESC, left, right) in binary
+  *     UTF-8 order, exactly Spark's string ordering; merges apply
+  *     greedily left-to-right without overlap, which inside
+  *     equal-symbol runs is the gaps-and-islands even-offset rule. A
+  *     SQL engine re-derives the whole merge table round-by-round with
+  *     ONE aggregate + set operations per round (`oracleSql` generates
+  *     that mirror).
   */
 object BpeTrain {
+
+  /** Largest `topWords` training accepts: the dictionary (word,
+    * frequency, current symbols) lives on the driver. */
+  val MaxTopWords = 1000000
 
   /** Learn `nMerges` merges from the `topWords` most frequent
     * lowercase words of `textCol`. Returns the merge table:
@@ -54,12 +64,19 @@ object BpeTrain {
 
   /** The learned tokenizer applied to the TRAINING vocabulary: the
     * top-K words' subword segmentation — the final symbol table of
-    * the training loop itself.
+    * the training loop itself. (word, f, pos, sym), pos 1-based.
     */
   def segment(docs: DataFrame, textCol: String, topWords: Int,
-      nMerges: Int): DataFrame =
-    trainLoop(docs, textCol, topWords, nMerges)._2
-      .select(col("word"), col("f"), col("pos"), col("sym"))
+      nMerges: Int): DataFrame = {
+    val (_, vocab) = trainLoop(docs, textCol, topWords, nMerges)
+    val rows = for ((w, f, syms) <- vocab; (sym, i) <- syms.zipWithIndex)
+      yield Row(w, f, i + 1, sym)
+    docs.sparkSession.createDataFrame(rows.asJava,
+      StructType(Seq(StructField("word", StringType),
+        StructField("f", LongType, nullable = false),
+        StructField("pos", IntegerType, nullable = false),
+        StructField("sym", StringType, nullable = false))))
+  }
 
   /** The learned tokenizer applied to the FULL corpus vocabulary:
     * train on the top-K words, then replay the merge list (in learned
@@ -70,165 +87,72 @@ object BpeTrain {
     * documents is then a join against this table.
     *
     * The replay itself is ONE map-side projection —
-    * [[graft.functions.BpeReplay]], the apply-side scale shape: the
-    * merge list is driver-held and vocab-bounded, each word's
-    * segmentation depends on nothing else, so running the relational
-    * per-round machinery (lead window + two joins per merge, built
-    * for training's corpus-global pair counts) over the full
-    * vocabulary was ~20 sequential shuffles where a single projection
-    * suffices. BpeTrainSpec pins the expression equal to the
-    * relational replay symbol-for-symbol.
+    * [[graft.functions.BpeReplay]]: the merge list is driver-held and
+    * vocab-bounded and each word's segmentation depends on nothing
+    * else, so no per-merge shuffle is needed. BpeTrainSpec pins the
+    * expression equal to a relational replay symbol-for-symbol.
     */
   def encode(docs: DataFrame, textCol: String, topWords: Int,
       nMerges: Int): DataFrame = {
     val (merges, _) = trainLoop(docs, textCol, topWords, nMerges)
-    graft.functions.BpeReplay.register(docs.sparkSession)
+    BpeReplay.register(docs.sparkSession)
     val flat = merges.flatMap { case (_, l, rr, _) => Seq(l, rr) }
     words(docs, textCol)
       .groupBy("word").agg(count(lit(1)).as("f"))
       .select(col("word"), col("f"),
-        posexplode(graft.functions.BpeReplay.bpe_replay(col("word"),
-          flat)).as(Seq("p0", "sym")))
+        posexplode(BpeReplay.bpe_replay(col("word"), flat))
+          .as(Seq("p0", "sym")))
       .select(col("word"), col("f"),
         (col("p0") + 1).cast("int").as("pos"), col("sym"))
   }
 
-  /** The relational replay of `encode` — training's per-round
-    * machinery driven over the full vocabulary. Kept as the
-    * differential baseline BpeTrainSpec pins `encode` against (the
-    * two must agree symbol-for-symbol on every word, including greedy
-    * equal-run behavior).
-    */
-  private[graft] def encodeRelational(docs: DataFrame, textCol: String,
-      topWords: Int, nMerges: Int): DataFrame = {
-    val (merges, _) = trainLoop(docs, textCol, topWords, nMerges)
-    val allFreq = words(docs, textCol)
-      .groupBy("word").agg(count(lit(1)).as("f"))
-    var tok = initTok(allFreq)
-    for ((_, l, rr, _) <- merges) tok = applyMerge(tok, l, rr)
-    tok.select(col("word"), col("f"), col("pos"), col("sym"))
-  }
-
-  private def words(docs: DataFrame, textCol: String): DataFrame =
+  /** Lowercase letter-run words, one row each. */
+  private[ext] def words(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(regexp_extract_all(lower(col(textCol)),
       lit("[a-z]+"), lit(0))).as("word"))
 
-  /** Character-level init; the last character carries the end-of-word
-    * marker so merges cannot cross word boundaries. sequence+substr
-    * (not split(word, "")) — Spark's regex split emits a trailing
-    * empty element the SQL mirror would not.
-    */
-  private def initTok(freq: DataFrame): DataFrame = freq
-    .select(col("word"), col("f"),
-      explode(sequence(lit(1), length(col("word")))).as("pos"))
-    .select(col("word"), col("f"), col("pos"),
-      concat(expr("substr(word, pos, 1)"),
-        when(col("pos") === length(col("word")), lit("</w>"))
-          .otherwise(lit(""))).as("sym"))
-    .localCheckpoint(false)
-
-  /** One merge application: replace every non-overlapping adjacent
-    * (l, rr) pair with the concatenated symbol, renumber positions.
-    * Greedy left-to-right non-overlap: in a run of consecutive
-    * candidates (only possible when l == rr, e.g. "a a a a"), keep
-    * the even offsets from the run start — gaps-and-islands, no
-    * sequential scan needed.
-    */
-  private def applyMerge(tok: DataFrame, l: String, rr: String)
-      : DataFrame = {
-    val byWord = Window.partitionBy("word").orderBy("pos")
-    val cand = tok
-      .withColumn("nxt", lead(col("sym"), 1).over(byWord))
-      .filter(col("sym") === l && col("nxt") === rr)
-      .select("word", "pos")
-    val sel = cand
-      .withColumn("grp", col("pos") - row_number().over(byWord))
-      .withColumn("off", col("pos") -
-        min(col("pos")).over(Window.partitionBy("word", "grp")))
-      .filter(col("off") % 2 === 0)
-      .select(col("word"), col("pos")).localCheckpoint(false)
-    val mSel = sel.select(col("word").as("mword"), col("pos").as("mpos"))
-    val dSel = sel.select(col("word").as("dword"), col("pos").as("dpos"))
-    tok
-      .join(mSel, col("word") === col("mword") &&
-        col("pos") === col("mpos"), "left")
-      .join(dSel, col("word") === col("dword") &&
-        col("pos") === col("dpos") + 1, "left")
-      .filter(col("dpos").isNull)
-      .select(col("word"), col("f"), col("pos"),
-        when(col("mpos").isNotNull, concat(col("sym"), lit(rr)))
-          .otherwise(col("sym")).as("sym"))
-      .withColumn("pos", row_number().over(byWord))
-      .localCheckpoint(false)
-  }
-
-  /** The training loop: returns (merge list, final symbol table) so
-    * train / segment / encode share one implementation. */
-  /** The training loop, with each round's symbol table REPLAYED from
-    * the checkpointed frequency table by
-    * [[graft.functions.BpeReplay]] (replay of merges 1..r equals r
-    * iterated `applyMerge`s — exactly the equivalence the encode
-    * differential in BpeTrainSpec pins), and the pair inventory
-    * computed map-side by zip-shift instead of a lead window. Per
-    * round: ONE projection + one partial-agg'd pair count + the 1-row
-    * argmax collect — no window exchange, no joins, no per-round
-    * checkpoint chain. Re-replaying r merges per round over the
-    * topWords-bounded table is O(rounds²·wordlen) driver-scheduled
-    * work on a vocab-bounded input — cheap where the old per-round
-    * shuffle machinery (kept as `applyMerge` for the differential
-    * baseline) was the whole family's bench cost.
+  /** The training loop, shared by train / segment / encode: the one
+    * corpus pass collects the top-K dictionary, then every merge is
+    * learned on the driver. Returns (merge list, the dictionary as
+    * (word, f, final symbols)).
     */
   private def trainLoop(docs: DataFrame, textCol: String, topWords: Int,
-      nMerges: Int): (Seq[(Long, String, String, Long)], DataFrame) = {
-    // corpus pass: lowercase letter-run words, frequency, top-K
-    // (deterministic tie-break on the word itself)
-    val freq = words(docs, textCol)
+      nMerges: Int): (Seq[(Long, String, String, Long)],
+        Seq[(String, Long, Array[String])]) = {
+    require(topWords <= MaxTopWords,
+      s"BpeTrain: topWords $topWords exceeds $MaxTopWords — training " +
+        "holds the top-K vocabulary (word, frequency, current symbols) " +
+        "on the driver")
+    // deterministic tie-break on the word itself
+    val dict = words(docs, textCol)
       .groupBy("word").agg(count(lit(1)).as("f"))
       .orderBy(desc("f"), asc("word")).limit(topWords)
-      .localCheckpoint(false)
-    graft.functions.BpeReplay.register(docs.sparkSession)
-    // materialize the corpus pass under the session's normal AQE,
-    // then run the vocab-bounded merge rounds (one 1-row argmax
-    // action per round over the checkpointed topWords-row table)
-    // under the loop conf — fewer query-stage jobs per round, loop
-    // partitions derived from the vocab size (IterConf scaladoc)
-    freq.count()
-    // r18: the merge loop runs on the caller's session under normal
-    // AQE — the r17 loop-conf scope was re-measured after the
-    // isolation rewrite and reverted (one 1-row argmax ACTION per
-    // round either way; measured flat, and the vocab-bounded rounds
-    // never shuffle enough bytes for the conf to matter)
-    val fq = freq
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val syms = dict.map { case (w, _) => BpeReplay.initSyms(w) }
+    // argmax tie-break: sym, then nxt ASC in binary UTF-8 order
+    // (Spark's string ordering)
+    implicit val binary: Ordering[String] = (a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
     val merges = Seq.newBuilder[(Long, String, String, Long)]
-    var flat = Seq.empty[String]
     var r = 1
     var done = false
     while (r <= nMerges && !done) {
-      val syms = graft.functions.BpeReplay.bpe_replay(col("word"), flat)
-      val n = greatest(size(col("s")) - 1, lit(0))
-      val best = fq.select(col("f"), syms.as("s"))
-        .select(col("f"), explode(zip_with(
-          slice(col("s"), lit(1), n), slice(col("s"), lit(2), n),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("sym"), col("p.r").as("nxt"))
-        .agg(sum(col("f")).as("cnt"))
-        .orderBy(desc("cnt"), asc("sym"), asc("nxt")).limit(1)
-        .collect()
-      if (best.isEmpty) done = true
+      val pairs = mutable.HashMap.empty[(String, String), Long]
+      for (i <- syms.indices; j <- 0 until syms(i).length - 1) {
+        val k = (syms(i)(j), syms(i)(j + 1))
+        pairs(k) = pairs.getOrElse(k, 0L) + dict(i)._2
+      }
+      if (pairs.isEmpty) done = true
       else {
-        val (l, rr, c) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        val ((l, rr), c) = pairs.minBy { case ((a, b), n) => (-n, a, b) }
         merges += ((r.toLong, l, rr, c))
-        flat = flat ++ Seq(l, rr)
+        for (i <- syms.indices)
+          syms(i) = BpeReplay.mergeOnce(syms(i), l, rr)
         r += 1
       }
     }
-    val tok = fq.select(col("word"), col("f"),
-      posexplode(graft.functions.BpeReplay.bpe_replay(col("word"), flat))
-        .as(Seq("p0", "sym")))
-      .select(col("word"), col("f"),
-        (col("p0") + 1).cast("int").as("pos"), col("sym"))
-    (merges.result(), tok)
+    (merges.result(),
+      dict.zip(syms).map { case ((w, f), s) => (w, f, s) }.toSeq)
   }
 
   /** DuckDB re-derivation of the merge table: one CTE block per round

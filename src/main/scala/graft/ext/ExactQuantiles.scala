@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
  *            rank are filtered out (≈ n/B rows each) and sorted
  *            PER BUCKET by a window — a distributed per-partition
  *            sort, never a global one.
+ *  Small input: when the ranged (min < max) keys hold at most
+ *  `refineLimit` rows in total — the most one candidate-bucket sort may
+ *  take — passes 2 and 3 collapse into ONE windowed pass: row_number
+ *  over (group, column) ordered by value, keeping only the target
+ *  ranks. No histogram and no broadcast; the rows shuffled and the
+ *  rows any task sorts stay within the same limit.
  *  Skew/ties guard: a candidate bucket with min == max IS the answer
  *  (no sort); a bucket still larger than `refineLimit` with min < max
  *  recurses on its own sub-range, so heavy ties converge to the
@@ -123,7 +129,28 @@ object ExactQuantiles {
 
     val resolved: Map[(Any, Int), Map[Long, Double]] =
       if (ranged.isEmpty) Map.empty
-      else {
+      else if (ranged.map(_.n).sum <= refineLimit) {
+        // small input: every ranged key's rows together fit the one
+        // sort a candidate bucket may take — rank them in ONE windowed
+        // pass, no histogram, stats broadcast or candidate broadcast
+        val keep = ranged.groupMap(_.c)(_.g)
+          .map { case (c, gs) => col("c") === c && col("g").isin(gs: _*) }
+          .reduce(_ || _)
+        val wanted: Set[(Any, Int, Long)] = ranged.flatMap(t =>
+          t.targets.flatMap(x => Seq(x._1, x._2)).map(r => (t.g, t.c, r)))
+          .toSet
+        val rankSet = wanted.map(_._3).toSeq.distinct.sorted
+        base.filter(keep)
+          .withColumn("r", row_number().over(
+            Window.partitionBy("g", "c").orderBy("v")))
+          .filter(col("r").isin(rankSet: _*))
+          .select(col("g"), col("c"), col("r"), col("v")).collect()
+          .map(r => (r.get(0), r.getInt(1), r.getInt(2).toLong,
+            r.getDouble(3)))
+          .filter(x => wanted.contains((x._1, x._2, x._3)))
+          .groupMap(x => (x._1, x._2))(x => x._3 -> x._4)
+          .map { case (k, xs) => k -> xs.toMap }
+      } else {
         // histogram pass: bucket width is per-(group, column),
         // delivered to every row by a broadcast join on the (tiny)
         // stats table

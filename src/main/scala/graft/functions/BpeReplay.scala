@@ -17,17 +17,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the APPLY side of `graft.ext.BpeTrain` — per-word work
   * that needs no global state beyond the (driver-held, vocab-bounded)
-  * merge list, so it belongs in ONE codegen'd projection. The
-  * relational replay (`BpeTrain.applyMerge` — lead window +
-  * gaps-and-islands even-offset + two keyed joins, per merge round)
-  * is the right shape for TRAINING, where each round's pair counts
-  * are corpus-global aggregates; replaying it per round over the full
-  * vocabulary made encode the most expensive bench query (~20
-  * sequential windows/joins for 10 merges). BpeTrainSpec pins this
-  * expression equal to the relational replay symbol-for-symbol,
-  * including greedy behavior inside equal-symbol runs (merge at
-  * positions p, p+2, ... of a candidate run, exactly the
-  * even-offset rule).
+  * merge list, so it belongs in ONE codegen'd projection. The replay
+  * code lives in the companion object, which `BpeTrain`'s driver-side
+  * training loop calls too (one merge per round over the top-K
+  * words), so training and encoding share one copy. BpeTrainSpec pins
+  * this expression equal to a relational replay (lead window +
+  * gaps-and-islands even-offset + two keyed joins per merge, the
+  * DuckDB oracle's shape) symbol-for-symbol, including greedy
+  * behavior inside equal-symbol runs (merge at positions p, p+2, ...
+  * of a candidate run, exactly the even-offset rule).
   *
   * Children: (word string, mergesFlat array<string> FOLDABLE
   * [l0, r0, l1, r1, ...] in learned order). Returns array<string>.
@@ -64,36 +62,6 @@ case class BpeReplay(word: Expression, mergesFlat: Expression)
     out
   }
 
-  /** The replay itself — shared verbatim by eval and the generated
-    * code (which calls back into this static-shaped helper via a
-    * reference object; the loop is data-dependent string work, where
-    * inlined Java would buy nothing over a direct call).
-    */
-  private[functions] def replay(w: String): Array[String] = {
-    val n = w.length
-    var syms = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      syms(i) = if (i == n - 1) w.substring(i) + "</w>"
-        else w.substring(i, i + 1)
-      i += 1
-    }
-    var m = 0
-    while (m < mergeArr.length) {
-      val l = mergeArr(m); val r = mergeArr(m + 1)
-      val out = new java.util.ArrayList[String](syms.length)
-      var j = 0
-      while (j < syms.length) {
-        if (j + 1 < syms.length && syms(j) == l && syms(j + 1) == r) {
-          out.add(l + r); j += 2 // greedy, non-overlapping
-        } else { out.add(syms(j)); j += 1 }
-      }
-      syms = out.toArray(new Array[String](out.size()))
-      m += 2
-    }
-    syms
-  }
-
   private def toArrayData(syms: Array[String]): GenericArrayData =
     new GenericArrayData(
       syms.map(s => UTF8String.fromString(s): Any))
@@ -101,7 +69,8 @@ case class BpeReplay(word: Expression, mergesFlat: Expression)
   override def eval(input: InternalRow): Any = {
     val w = word.eval(input)
     if (w == null) return null
-    toArrayData(replay(w.asInstanceOf[UTF8String].toString))
+    toArrayData(
+      BpeReplay.replay(w.asInstanceOf[UTF8String].toString, mergeArr))
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -133,7 +102,7 @@ case class BpeReplay(word: Expression, mergesFlat: Expression)
 
   /** Codegen entry point (must be public for Janino). */
   def genReplay(w: UTF8String): ArrayData =
-    toArrayData(replay(w.toString))
+    toArrayData(BpeReplay.replay(w.toString, mergeArr))
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -141,6 +110,46 @@ case class BpeReplay(word: Expression, mergesFlat: Expression)
 }
 
 object BpeReplay {
+  /** A word's starting symbols: its characters, the word-final one
+    * carrying the `</w>` marker so merges never cross words. */
+  private[graft] def initSyms(w: String): Array[String] = {
+    val n = w.length
+    Array.tabulate(n)(i =>
+      if (i == n - 1) w.substring(i) + "</w>" else w.substring(i, i + 1))
+  }
+
+  /** One merge: every adjacent (l, r) becomes l+r, greedy
+    * left-to-right and non-overlapping. */
+  private[graft] def mergeOnce(syms: Array[String], l: String, r: String)
+      : Array[String] = {
+    val out = new java.util.ArrayList[String](syms.length)
+    var j = 0
+    while (j < syms.length) {
+      if (j + 1 < syms.length && syms(j) == l && syms(j + 1) == r) {
+        out.add(l + r); j += 2
+      } else { out.add(syms(j)); j += 1 }
+    }
+    out.toArray(new Array[String](out.size()))
+  }
+
+  /** The replay itself — shared by eval and the generated code (which
+    * calls back into it through a reference object; the loop is
+    * data-dependent string work, where inlined Java would buy nothing
+    * over a direct call). BpeTrain's training loop runs the same two
+    * steps, one merge per round. `mergesFlat` is [l0, r0, l1, r1, ...]
+    * in learned order.
+    */
+  private[functions] def replay(w: String, mergesFlat: Array[String])
+      : Array[String] = {
+    var syms = initSyms(w)
+    var m = 0
+    while (m < mergesFlat.length) {
+      syms = mergeOnce(syms, mergesFlat(m), mergesFlat(m + 1))
+      m += 2
+    }
+    syms
+  }
+
   /** Register `bpe_replay(word, mergesFlat)`. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     Registration.registerOnce(spark, "bpe_replay")(

@@ -506,7 +506,8 @@ object ExtendedQueries {
     // executor-memory wall — the same scale-killer the equi-depth
     // histogram had). Bounded passes instead: grouped min/max/count,
     // per-group-range histogram via broadcast stats join, one windowed
-    // candidate scan — and the MULTI-column variant computes both
+    // candidate scan (input within refineLimit: one windowed rank
+    // pass instead) — and the MULTI-column variant computes both
     // value columns' stats and histograms in the SAME scans (r07 ran
     // the machinery once per column, 2× the passes and an 8× local
     // regression).

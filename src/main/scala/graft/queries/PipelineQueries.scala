@@ -2638,11 +2638,11 @@ object PipelineQueries {
 
     // BPE vocabulary TRAINING (ext/BpeTrain): iterative pair-merge
     // learning over the top-K word frequencies — the corpus-sized
-    // work is ONE partial-agg'd word count; every merge round then
-    // runs on the vocab-bounded symbol table (driver-looped like
-    // PageRank, 1-row argmax collect per round, deterministic
-    // tie-breaks). Oracle is a generated DuckDB CTE chain re-deriving
-    // the merge table round-by-round.
+    // work is ONE partial-agg'd word count, collected once; every
+    // merge round then runs on the driver over that vocab-bounded
+    // dictionary (deterministic tie-breaks, no Spark job per round).
+    // Oracle is a generated DuckDB CTE chain re-deriving the merge
+    // table round-by-round.
     "text_bpe_train" -> ((s, d) =>
       graft.ext.BpeTrain.train(documents(s, d), "text",
         BpeTopWords, BpeMerges)),

@@ -548,40 +548,6 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  /** Call sites (stage details) of the Spark jobs `body` fires. The jobs
-    * are tagged with a job group; a fence job in the same group closes
-    * the window — the listener bus delivers events in order, so once
-    * the fence's start arrives every earlier job has been seen.
-    */
-  private def jobsFiredBy(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val fence = new java.util.concurrent.CountDownLatch(1)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "fence")
-            fence.countDown()
-          else jobs.add(e.stageInfos.map(_.details).mkString("\n"))
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "")
-      try body
-      finally {
-        sc.setJobDescription("fence")
-        sc.parallelize(Seq(1), 1).count()
-        sc.clearJobGroup()
-      }
-      assert(fence.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.toArray.toSeq.map(_.toString)
-  }
-
   test("job floor: a plain runMapping with history on fires exactly ONE " +
       "Spark job (the Output write); a _join: run fires none from a " +
       "sheet read (headers, rule table and run record stay on the driver)") {
@@ -599,10 +565,10 @@ class EngineSpec extends SparkSpec {
     val cfg = EngineConfig(history = "Runs")
     // the first run creates the Output and the history table
     Engine.runMapping(s, dir.toString, cfg)
-    val plain = jobsFiredBy(Engine.runMapping(s, dir.toString, cfg))
+    val plain = sparkWorkOf(Engine.runMapping(s, dir.toString, cfg)).jobs
     assert(plain.length == 1, plain.mkString("\n----\n"))
-    val joined = jobsFiredBy(
-      Engine.runMapping(s, dir.toString, cfg.copy(map = "MapJoin")))
+    val joined = sparkWorkOf(
+      Engine.runMapping(s, dir.toString, cfg.copy(map = "MapJoin"))).jobs
     assert(!joined.exists(_.contains("Engine$.readSheet")),
       joined.mkString("\n----\n"))
     assert(s.read.parquet(s"$dir/Runs").count() == 3)

@@ -1,6 +1,9 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** BpeTrain must reproduce the classic hand-derivable merge sequences:
   * the Sennrich et al. example corpus, and an equal-symbol run where a
@@ -88,6 +91,28 @@ class BpeTrainSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
   }
 
+  test("job floor: every merge is learned on the driver — 1 and 8 " +
+      "merges fire the same Spark jobs, at most 5") {
+    val docs = corpus("banana" -> 4, "bandana" -> 2, "cabana" -> 3)
+    def jobs(n: Int) = sparkWorkOf {
+      assert(BpeTrain.train(docs, "text", 10, n).collect().length == n)
+    }.jobs
+    val (one, eight) = (jobs(1), jobs(8))
+    assert(one.length == eight.length && eight.length <= 5,
+      s"1 merge: ${one.length} jobs, 8 merges: ${eight.length} jobs\n" +
+        eight.mkString("\n----\n"))
+  }
+
+  test("topWords above MaxTopWords fails before any Spark job runs") {
+    val docs = corpus("low" -> 5, "lower" -> 2)
+    val work = sparkWorkOf {
+      val e = intercept[IllegalArgumentException](
+        BpeTrain.segment(docs, "text", BpeTrain.MaxTopWords + 1, 5))
+      assert(e.getMessage.contains("on the driver"), e.getMessage)
+    }
+    assert(work.jobs.isEmpty, work.jobs.mkString("\n----\n"))
+  }
+
   test("map-side encode equals the relational replay " +
       "symbol-for-symbol, including greedy equal-symbol runs") {
     def asMap(rows: Array[org.apache.spark.sql.Row]) = rows
@@ -104,9 +129,78 @@ class BpeTrainSpec extends SparkSpec {
       "aaab" -> 2, "cabana" -> 2, "abracadabra" -> 1)
     val fast = asMap(BpeTrain.encode(docs, "text", 3, 8).collect())
     val slow = asMap(
-      BpeTrain.encodeRelational(docs, "text", 3, 8).collect())
+      BpeTrainSpec.encodeRelational(docs, "text", 3, 8).collect())
     assert(fast == slow, s"\nfast $fast\nslow $slow")
     assert(fast.nonEmpty &&
       fast.keys.map(_._1).toSet.contains("abracadabra"))
+  }
+}
+
+object BpeTrainSpec {
+  /** The relational replay of `BpeTrain.encode` — the SQL oracle's
+    * per-round machinery (lead window, even-offset overlap rule, two
+    * keyed joins per merge) driven over the full vocabulary. The
+    * differential baseline `encode` is pinned against: the two must
+    * agree symbol-for-symbol on every word, including greedy
+    * equal-run behavior.
+    */
+  def encodeRelational(docs: DataFrame, textCol: String,
+      topWords: Int, nMerges: Int): DataFrame = {
+    val merges = BpeTrain.train(docs, textCol, topWords, nMerges)
+      .collect().map(r => (r.getString(1), r.getString(2)))
+    val allFreq = BpeTrain.words(docs, textCol)
+      .groupBy("word").agg(count(lit(1)).as("f"))
+    var tok = initTok(allFreq)
+    for ((l, rr) <- merges) tok = applyMerge(tok, l, rr)
+    tok.select(col("word"), col("f"), col("pos"), col("sym"))
+  }
+
+  /** Character-level init; the last character carries the end-of-word
+    * marker so merges cannot cross word boundaries. sequence+substr
+    * (not split(word, "")) — Spark's regex split emits a trailing
+    * empty element the SQL mirror would not.
+    */
+  private def initTok(freq: DataFrame): DataFrame = freq
+    .select(col("word"), col("f"),
+      explode(sequence(lit(1), length(col("word")))).as("pos"))
+    .select(col("word"), col("f"), col("pos"),
+      concat(expr("substr(word, pos, 1)"),
+        when(col("pos") === length(col("word")), lit("</w>"))
+          .otherwise(lit(""))).as("sym"))
+    .localCheckpoint(false)
+
+  /** One merge application: replace every non-overlapping adjacent
+    * (l, rr) pair with the concatenated symbol, renumber positions.
+    * Greedy left-to-right non-overlap: in a run of consecutive
+    * candidates (only possible when l == rr, e.g. "a a a a"), keep
+    * the even offsets from the run start — gaps-and-islands, no
+    * sequential scan needed.
+    */
+  private def applyMerge(tok: DataFrame, l: String, rr: String)
+      : DataFrame = {
+    val byWord = Window.partitionBy("word").orderBy("pos")
+    val cand = tok
+      .withColumn("nxt", lead(col("sym"), 1).over(byWord))
+      .filter(col("sym") === l && col("nxt") === rr)
+      .select("word", "pos")
+    val sel = cand
+      .withColumn("grp", col("pos") - row_number().over(byWord))
+      .withColumn("off", col("pos") -
+        min(col("pos")).over(Window.partitionBy("word", "grp")))
+      .filter(col("off") % 2 === 0)
+      .select(col("word"), col("pos")).localCheckpoint(false)
+    val mSel = sel.select(col("word").as("mword"), col("pos").as("mpos"))
+    val dSel = sel.select(col("word").as("dword"), col("pos").as("dpos"))
+    tok
+      .join(mSel, col("word") === col("mword") &&
+        col("pos") === col("mpos"), "left")
+      .join(dSel, col("word") === col("dword") &&
+        col("pos") === col("dpos") + 1, "left")
+      .filter(col("dpos").isNull)
+      .select(col("word"), col("f"), col("pos"),
+        when(col("mpos").isNotNull, concat(col("sym"), lit(rr)))
+          .otherwise(col("sym")).as("sym"))
+      .withColumn("pos", row_number().over(byWord))
+      .localCheckpoint(false)
   }
 }

@@ -154,6 +154,73 @@ class ExactQuantilesSpec extends SparkSpec {
     assert(got("g2") == (Some(5.0), Some(15.0)))
   }
 
+  /** Whether any SQL execution of `work` broadcast a table — the
+    * histogram pass joins its stats by broadcast; the small-input
+    * windowed pass joins nothing. */
+  private def broadcasts(work: graft.SparkSpec.Work): Boolean =
+    work.plans.exists(_.contains("BroadcastExchange"))
+
+  test("small input: groupedPercentiles under refineLimit fires no " +
+      "histogram pass") {
+    val df = Seq.tabulate(1000)(i => (s"g${i % 4}", (i * 37 % 1000)
+      .toDouble)).toDF("g", "v")
+    val work = sparkWorkOf(ExactQuantiles.groupedPercentiles(df, "g",
+      "v", Seq(0.5, 0.9)).collect())
+    assert(work.plans.nonEmpty && !broadcasts(work),
+      work.plans.mkString("\n----\n"))
+  }
+
+  test("small-input gate boundary: ranged rows exactly refineLimit " +
+      "(windowed pass) and refineLimit + 1 (histogram path) both match " +
+      "exact percentile — ties, singletons, nulls, an all-null column") {
+    val rnd = new scala.util.Random(29)
+    val rows: Seq[(String, Option[Double], Option[Double])] =
+      Seq.tabulate(60)(i => ("smooth",
+        if (i % 7 == 0) None else Some(rnd.nextDouble() * 100),
+        Some(rnd.nextGaussian()))) ++
+      // x: three tied values; y: constant (min == max, not ranged)
+      Seq.tabulate(30)(i => ("ties", Some((i % 3).toDouble),
+        if (i % 4 == 0) None else Some(7.0))) ++
+      Seq(("solo", Some(3.5), Some(-1.0))) ++
+      // x all-null in this group
+      Seq.tabulate(20)(i => ("xnull", None, Some((i % 5).toDouble)))
+    val df = rows.toDF("g", "x", "y")
+    val xs = Seq(0.0, 0.3, 0.5, 0.9, 1.0)
+    val ys = Seq(0.25, 0.75)
+    val ranged = Seq[((String, Option[Double], Option[Double])) =>
+        Option[Double]](_._2, _._3)
+      .map(f => rows.groupMap(_._1)(f).values.map(_.flatten)
+        .filter(v => v.nonEmpty && v.min != v.max).map(_.size).sum)
+      .sum
+    val want = df.groupBy("g").agg(
+        org.apache.spark.sql.functions.expr(
+          s"percentile(x, array(${xs.map(p => s"${p}d").mkString(",")}))"),
+        org.apache.spark.sql.functions.expr(
+          s"percentile(y, array(${ys.map(p => s"${p}d").mkString(",")}))"))
+      .collect().map(r => r.getString(0) ->
+        (Option(r.getSeq[Double](1)).getOrElse(xs.map(_ => Double.NaN)) ++
+          Option(r.getSeq[Double](2)).getOrElse(ys.map(_ => Double.NaN))))
+      .toMap
+    for ((limit, windowed) <- Seq(ranged.toLong -> true,
+        (ranged - 1).toLong -> false)) {
+      var got = Map.empty[String, Seq[Double]]
+      val work = sparkWorkOf {
+        got = ExactQuantiles.groupedPercentilesMulti(df, "g",
+            Seq("x" -> xs, "y" -> ys), buckets = 4, refineLimit = limit)
+          .collect().map(r => r.getString(0) -> (1 to xs.size + ys.size)
+            .map(i => if (r.isNullAt(i)) Double.NaN else r.getDouble(i)))
+          .toMap
+      }
+      assert(broadcasts(work) != windowed,
+        s"refineLimit $limit over $ranged ranged rows took the wrong path")
+      assert(got.keySet == want.keySet)
+      for (g <- want.keySet; (w, v) <- want(g).zip(got(g)))
+        assert(if (w.isNaN) v.isNaN else math.abs(v - w) <=
+          math.max(math.ulp(w) * 4, math.abs(w) * 1e-12),
+          s"refineLimit $limit group $g: got ${got(g)} want ${want(g)}")
+    }
+  }
+
   test("property: random multisets (duplicates, negatives, extreme " +
       "magnitudes) match exact percentile at random cut points") {
     import org.scalacheck.Gen
