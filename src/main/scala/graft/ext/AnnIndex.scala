@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *       `codebooks/` (sm, c, vals[sub]) — m·nCentroids rows;
   *       `coarse/`    (cell, vec[dim]) — nCells rows;
   *       `meta/`      1 row of format version + geometry + scale.
-  *     A `INDEX_READY` marker (format version, params, corpus
-  *     fingerprint) is written LAST — a killed build leaves no
-  *     readable index, and `load` refuses a markerless dir.
+  *     The `INDEX_READY` marker (format version, params, corpus
+  *     fingerprint) commits it — the shared protocol of
+  *     [[IndexLifecycle]] (marker, lease, tombstones, groups at rest).
   *   - `search` reads the three bounded side tables (driver-side,
   *     nCells + m·nCentroids rows), picks probe cells exactly like
   *     `ivfPqTopK`, ADC-scores ONLY the probed partitions with the
@@ -36,11 +36,8 @@ import org.apache.spark.sql.functions._
   *     nCand shortlist against the corpus. No training stage exists
   *     in the plan: the only corpus scan is the broadcast-semi-joined
   *     rescore leg (pinned).
-  *   - `ensureBuilt` makes the lifecycle idempotent: rebuild iff the
-  *     marker is missing or its params/corpus fingerprint changed
-  *     (fingerprint = file sizes + mtimes of the corpus parquet — a
-  *     metadata read, never a data scan, so the serve path stays
-  *     training-free even when the check runs every query).
+  *   - `ensureBuilt` fingerprints the corpus by file metadata
+  *     ([[parquetFingerprint]]), so a warm serve stays training-free.
   *
   * 100 TB posture: build is one training pass + one encode pass +
   * one partitioned write (all linear, run once, amortized across
@@ -52,8 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  private val Marker = "INDEX_READY"
-  private val Lease = ".MAINT_LEASE"
   /** Bump when the on-disk layout changes shape. v2: optional
     * `deletes/` tombstone table beside the codes table. v3: `hier`
     * column in meta/ — the coarse-assignment hierarchy recorded at
@@ -63,33 +58,8 @@ object AnnIndex {
     */
   private val FormatVersion = 3
 
-  // ── Hadoop-FS helpers ──────────────────────────────────────────────
-  // Every filesystem touch goes through the Hadoop FileSystem resolved
-  // from `dir`'s scheme, like parquetFingerprint always did — a
-  // java.nio marker on an HDFS/S3 index dir would land on LOCAL disk
-  // and silently disagree with the actual remote index state
-  // (ADVICE r12). Single-writer maintenance is ENFORCED by an
-  // exclusive lease file (see withLease): a second concurrent
-  // build/append/delete/compact aborts loudly. Concurrent SEARCHES
-  // never take the lease and are always fine.
-
-  private def hfs(spark: SparkSession, dir: String)
-      : org.apache.hadoop.fs.FileSystem = IndexFs.hfs(spark, dir)
-
-  private def hpath(parts: String*): org.apache.hadoop.fs.Path =
-    IndexFs.hpath(parts: _*)
-
-  private def readMarker(spark: SparkSession, dir: String)
-      : Option[String] = IndexFs.readMarker(spark, dir, Marker)
-
-  /** Single-writer maintenance guard — see [[IndexFs.withLease]]. */
-  private def withLease[T](spark: SparkSession, dir: String)
-      (body: => T): T =
-    IndexFs.withLease(spark, dir, Lease, "ANN index")(body)
-
-  /** Marker commit via tmp + rename — see [[IndexFs.writeMarker]]. */
-  private def writeMarker(spark: SparkSession, dir: String,
-      text: String): Unit = IndexFs.writeMarker(spark, dir, Marker, text)
+  private[graft] val core = new IndexLifecycle("ann", "ANN index")
+  private val groups = new GroupsLifecycle(core, FormatVersion)
 
   final case class Meta(nCells: Int, m: Int, nCentroids: Int, sub: Int,
       scale: Double, hier: Int)
@@ -99,15 +69,19 @@ object AnnIndex {
     * catches regenerated testdata, which file paths alone would miss.
     */
   def parquetFingerprint(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
     var n = 0L; var bytes = 0L; var mtime = 0L
-    while (it.hasNext) {
-      val f = it.next()
+    filesUnder(spark, path).foreach { f =>
       n += 1; bytes += f.getLen; mtime = math.max(mtime, f.getModificationTime)
     }
     s"files=$n bytes=$bytes mtime=$mtime"
+  }
+
+  private def filesUnder(spark: SparkSession, path: String)
+      : Iterator[org.apache.hadoop.fs.LocatedFileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
   }
 
   /** EXACT row count of a parquet table read from its file FOOTERS —
@@ -119,24 +93,19 @@ object AnnIndex {
     * `spark.read.parquet(path).count()` bit for bit.
     */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
+    filesUnder(spark, path).map { f =>
       val name = f.getPath.getName
-      if (f.isFile && f.getLen > 0 &&
-          !name.startsWith("_") && !name.startsWith(".")) {
+      if (!f.isFile || f.getLen == 0 || name.startsWith("_") ||
+          name.startsWith(".")) 0L
+      else {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
             .fromStatus(f, conf))
-        try n += r.getRecordCount
+        try r.getRecordCount
         finally r.close()
       }
-    }
-    n
+    }.sum
   }
 
   private def markerText(nCells: Int, m: Int, nCentroids: Int,
@@ -150,69 +119,53 @@ object AnnIndex {
   def build(df: DataFrame, idCol: String, vecCol: String, dir: String,
       nCells: Int = 16, m: Int = 8, nCentroids: Int = 16,
       iters: Int = 3, fingerprint: String = "", hier: Int = 0): Unit =
-    withLease(df.sparkSession, dir) {
-      doBuild(df, idCol, vecCol, dir, nCells, m, nCentroids, iters,
-        fingerprint, hier)
+    core.withLease(df.sparkSession, dir) {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val coarse = Similarity.ivfCentroids(df, idCol, vecCol, nCells)
+      val dim = coarse.head.length
+      val sub = dim / m
+      require(m * sub == dim, s"dim $dim must divide into $m subspaces")
+      val (scale, codes, cents) =
+        Similarity.pqTrainCore(df, idCol, vecCol, m, nCentroids, iters)
+      core.liftMarker(spark, dir)
+      // a full rebuild retires any streaming segment (its rows were
+      // encoded with the PREVIOUS quantizers) and folds tombstones away
+      // (the rebuilt corpus is the source of truth)
+      core.remove(spark, dir, "codes_stream", "deletes")
+      val cellDf = df.select(col(idCol).cast("long").as("id"),
+        cellCol(df, col(vecCol), coarse, hier).as("cell"))
+      val aD = col("a").cast("array<double>")
+      codes
+        .select(col("id"),
+          Similarity.dot(df, aD, aD).cast("long").as("naa"),
+          Similarity.pqBestCol(codes, cents, m, nCentroids, sub).as("bc"))
+        .join(cellDf, "id")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$dir/codes")
+      cents.toSeq.map { case ((sm, c), vals) => (sm, c, vals) }
+        .toDF("sm", "c", "vals")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+      coarse.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cell", "vec")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
+      Seq((FormatVersion, nCells, m, nCentroids, sub, scale, hier))
+        .toDF("version", "n_cells", "m", "n_centroids", "sub", "scale",
+          "hier")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      core.writeMarker(spark, dir,
+        markerText(nCells, m, nCentroids, hier, fingerprint))
     }
 
-  private def doBuild(df: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCells: Int, m: Int, nCentroids: Int,
-      iters: Int, fingerprint: String, hier: Int): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val coarse = Similarity.ivfCentroids(df, idCol, vecCol, nCells)
-    val dim = coarse.head.length
-    val sub = dim / m
-    require(m * sub == dim, s"dim $dim must divide into $m subspaces")
-    val (scale, codes, cents) =
-      Similarity.pqTrainCore(df, idCol, vecCol, m, nCentroids, iters)
-    // the marker is the commit record: remove it FIRST so a crash
-    // mid-overwrite can never leave a stale marker over mixed tables
-    val fs = hfs(spark, dir)
-    fs.mkdirs(hpath(dir))
-    fs.delete(hpath(dir, Marker), false)
-    // a full rebuild retires any streaming segment (its rows were
-    // encoded with the PREVIOUS quantizers) and folds tombstones away
-    // (the rebuilt corpus is the source of truth)
-    fs.delete(hpath(dir, "codes_stream"), true)
-    fs.delete(hpath(dir, "deletes"), true)
-    val cellDf = df.select(col(idCol).cast("long").as("id"),
-      cellCol(df, col(vecCol), coarse, hier).as("cell"))
-    val aD = col("a").cast("array<double>")
-    codes
-      .select(col("id"),
-        Similarity.dot(df, aD, aD).cast("long").as("naa"),
-        Similarity.pqBestCol(codes, cents, m, nCentroids, sub).as("bc"))
-      .join(cellDf, "id")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    cents.toSeq.map { case ((sm, c), vals) => (sm, c, vals) }
-      .toDF("sm", "c", "vals")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    coarse.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cell", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
-    Seq((FormatVersion, nCells, m, nCentroids, sub, scale, hier))
-      .toDF("version", "n_cells", "m", "n_centroids", "sub", "scale",
-        "hier")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    writeMarker(spark, dir,
-      markerText(nCells, m, nCentroids, hier, fingerprint))
-  }
-
-  /** Build unless a committed index with the same params AND corpus
-    * fingerprint already sits at `dir`. Returns true iff it built.
-    */
+  /** [[IndexLifecycle.ensureBuilt]] at these params; true iff built. */
   def ensureBuilt(df: DataFrame, idCol: String, vecCol: String,
       dir: String, nCells: Int = 16, m: Int = 8, nCentroids: Int = 16,
       iters: Int = 3, fingerprint: String = "",
-      hier: Int = 0): Boolean = {
-    val want = markerText(nCells, m, nCentroids, hier, fingerprint)
-    val fresh = readMarker(df.sparkSession, dir).contains(want)
-    if (!fresh)
+      hier: Int = 0): Boolean =
+    core.ensureBuilt(df.sparkSession, dir,
+        markerText(nCells, m, nCentroids, hier, fingerprint)) {
       build(df, idCol, vecCol, dir, nCells, m, nCentroids, iters,
         fingerprint, hier)
-    !fresh
-  }
+    }
 
   /** Incremental index maintenance: encode NEW vectors with the
     * FROZEN quantizers (stored scale, codebooks, coarse centroids)
@@ -225,73 +178,34 @@ object AnnIndex {
     * Codes of vectors outside the trained scale simply exceed ±127 —
     * integer columns, no clamping, same arithmetic both engines.
     *
-    * The marker gains a `+append[fingerprint]` line per append (any
-    * NUMBER of appends compose), so a later `ensureBuilt` against any
-    * single-corpus fingerprint sees staleness and triggers the full
-    * rebuild — the rebuild cadence falls out of the same staleness
-    * check. The marker update is tmp+rename (a crashed append leaves
-    * the previous marker, never a truncated one); maintenance ops are
-    * single-writer — run one build/append/delete/compact at a time.
+    * Each append stamps `+append[fingerprint]` (any number compose), so
+    * a later `ensureBuilt` rebuilds ([[IndexLifecycle]]).
     */
   def append(df: DataFrame, idCol: String, vecCol: String,
       dir: String, fingerprint: String = ""): Unit =
-    withLease(df.sparkSession, dir) {
-      doAppend(df, idCol, vecCol, dir, fingerprint)
+    core.withLease(df.sparkSession, dir) {
+      val spark = df.sparkSession
+      val (meta, coarse, cents) = load(spark, dir)
+      // one shared map-side encode with the streaming ingest (PqBestCodes
+      // takes the code array as ONE child, so the inlined transform(...)
+      // is evaluated once per row — not the per-element re-inline that
+      // OOM'd Janino in the element_at formulation, see Similarity)
+      encodeWith(df, idCol, vecCol, meta, coarse, cents)
+        .write.mode("append").partitionBy("cell")
+        .parquet(s"$dir/codes")
+      core.stamp(spark, dir, core.appendLine(fingerprint))
     }
 
-  private def doAppend(df: DataFrame, idCol: String, vecCol: String,
-      dir: String, fingerprint: String): Unit = {
-    val spark = df.sparkSession
-    val (meta, coarse, cents) = load(spark, dir)
-    // one shared map-side encode with the streaming ingest (PqBestCodes
-    // takes the code array as ONE child, so the inlined transform(...)
-    // is evaluated once per row — not the per-element re-inline that
-    // OOM'd Janino in the element_at formulation, see Similarity)
-    encodeWith(df, idCol, vecCol, meta, coarse, cents)
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/codes")
-    val prev = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(s"marker vanished at $dir"))
-    writeMarker(spark, dir, prev + s"\n+append[$fingerprint]")
-  }
-
-  /** Tombstone ids out of the index: queued in a skinny `deletes/`
-    * table that [[search]] anti-joins on the fly, physically folded in
-    * by [[compactSegment]] (rewrites the codes table without them) or
-    * by the next full [[build]]. The marker gains a `+delete[n]` line,
-    * so the `ensureBuilt*` single-corpus freshness checks correctly
-    * see a mutated index as stale. This is how a dedup pipeline that
-    * REMOVES documents maintains the index between rebuilds — an
-    * append-only lifecycle would serve ghosts.
+  /** Tombstone ids out of the index ([[IndexLifecycle]]'s queue):
+    * [[search]] anti-joins them; [[compactSegment]] or a [[build]]
+    * folds them — how a dedup pipeline that REMOVES documents keeps
+    * the index between rebuilds without serving ghosts.
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    withLease(spark, dir) { doDelete(spark, dir, ids) }
+    core.delete(spark, dir, ids, _.cast("long"))
 
-  private def doDelete(spark: SparkSession, dir: String,
-      ids: DataFrame): Unit = {
-    val prev = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed ANN index at $dir — nothing to delete from"))
-    // materialize the ids ONCE: a non-deterministic source (a sampled
-    // frame, a limit without order) re-executed for the count could
-    // record a marker count that differs from the written rows
-    val skinny = ids.select(ids.columns.head).toDF("id")
-      .select(col("id").cast("long").as("id"))
-      .localCheckpoint(true)
-    val n = skinny.count()
-    // marker FIRST: a crash between the two steps leaves a marker that
-    // no longer matches any pristine-corpus fingerprint, so ensureBuilt
-    // forces a (spurious but safe) rebuild — the reverse order would
-    // leave a mutated index under a fresh-looking marker, silently
-    // serving with rows missing
-    writeMarker(spark, dir, prev + s"\n+delete[$n]")
-    skinny.write.mode("append").parquet(s"$dir/deletes")
-  }
-
-  def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    delete(spark, dir, ids.toDF("id"))
-  }
+  def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    core.delete(spark, dir, ids, _.cast("long"))
 
   /** One encoded code row per input vector, using the FROZEN
     * quantizers of the committed index at `dir` — shared by the batch
@@ -384,26 +298,15 @@ object AnnIndex {
     * the segment — its rows were encoded with the previous quantizers.
     * No state store, no shuffle, no training on the hot path: this is
     * the Vespa/Milvus "memory segment + base segment" shape on plain
-    * parquet.
+    * parquet. The ingest is a writer: it holds the lease for its
+    * lifetime and stamps `+ingest` ([[IndexLifecycle]]).
     */
   def ingestStream(stream: DataFrame, idCol: String, vecCol: String,
       dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // The ingest is a WRITER, so it participates in the single-writer
-    // protocol: it holds the maintenance lease for the query's whole
-    // lifetime — a concurrent build/compact fail-fasts instead of
-    // deleting the segment under the live sink — and stamps a
-    // `+ingest` marker line up front so ensureBuilt freshness checks
-    // see the mutation (at START: an empty ingest merely looks stale —
-    // spurious-but-safe rebuild). The lease releases within ~1 s of
-    // the query terminating; a crashed driver leaves it for
-    // [[breakLease]].
     val spark = stream.sparkSession
     val (meta, coarse, cents) = load(spark, dir)
-    IndexFs.withStreamLease(spark, dir, Lease, "ANN index") {
-      val prev = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(s"marker vanished at $dir"))
-      writeMarker(spark, dir, prev + "\n+ingest")
+    core.ingest(spark, dir) {
       encodeWith(stream, idCol, vecCol, meta, coarse, cents)
         .writeStream.format("parquet")
         .option("path", s"$dir/codes_stream")
@@ -414,17 +317,12 @@ object AnnIndex {
     }
   }
 
-  /** Force-break a CRASHED writer's orphaned maintenance lease — see
-    * [[IndexFs.breakLease]] (refuses while the holder's heartbeat is
-    * live; re-reads the committed marker under the post-break state
-    * as the fencing step).
-    *
-    * @return the marker committed at `dir` after the break; None means
-    *         the crashed writer died pre-commit — rebuild before use
+  /** Break a crashed writer's stale lease ([[IndexFs.breakLease]]);
+    * None = no committed marker, rebuild before use.
     */
   def breakLease(spark: SparkSession, dir: String,
       staleMillis: Long = IndexFs.DefaultStaleMillis): Option[String] =
-    IndexFs.breakLease(spark, dir, Lease, Marker, staleMillis)
+    core.breakLease(spark, dir, staleMillis)
 
   /** Offline maintenance: fold the streaming segment's rows into the
     * base codes table and retire the segment — the "seal the memory
@@ -439,30 +337,21 @@ object AnnIndex {
     *
     * When tombstones ([[delete]]) are queued, compaction additionally
     * REWRITES the codes table without the deleted ids and clears
-    * `deletes/` — the physical fold. That path costs a full
-    * codes-table rewrite (the codes are m bytes/vector — cheap
-    * relative to the corpus) staged through `codes_tmp` + rename,
-    * with the marker lifted during the swap so a crash mid-swap
-    * leaves an unreadable-by-construction index instead of a
-    * half-swapped one. Served results are identical before and after
-    * (search already anti-joined the queue).
+    * `deletes/` — a full codes-table rewrite (m bytes/vector — cheap
+    * relative to the corpus) staged through `codes_tmp` + rename. The
+    * compaction rules are [[IndexLifecycle]]'s.
     *
     * @return rows moved from the segment (0 when only tombstones
     *         were folded)
     */
   def compactSegment(spark: SparkSession, dir: String): Long =
-    withLease(spark, dir) { doCompactSegment(spark, dir) }
+    core.compact(spark, dir) { doCompactSegment(spark, dir) }
 
   private def doCompactSegment(spark: SparkSession, dir: String): Long = {
-    val fs = hfs(spark, dir)
-    val segPath = hpath(dir, "codes_stream")
-    val delPath = hpath(dir, "deletes")
-    val hasSeg = fs.exists(segPath)
-    val hasDel = fs.exists(delPath)
+    val hasSeg = core.has(spark, dir, "codes_stream")
+    val hasDel = core.hasDeletes(spark, dir)
     if (!hasSeg && !hasDel) return 0L
-    val marker = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed ANN index at $dir"))
+    val marker = core.committed(spark, dir)
     // Marker LIFTED across the WHOLE fold (r17 fault sweep): the
     // segment fold is an APPEND to codes/ plus a segment delete — a
     // crash between the two used to leave the folded rows in BOTH
@@ -472,8 +361,8 @@ object AnnIndex {
     // rebuilds) — the family's fail-closed discipline; the marker
     // text is rewritten VERBATIM at the end, so generation guards
     // observe the same digest across a completed compaction.
-    fs.delete(hpath(dir, Marker), false)
-    IndexFs.fail("ann.compact.unmarked")
+    core.liftMarker(spark, dir)
+    core.fail("compact.unmarked")
     val segN = if (!hasSeg) 0L else {
       val seg = spark.read.parquet(s"$dir/codes_stream")
         .select("id", "naa", "bc", "cell")
@@ -482,56 +371,44 @@ object AnnIndex {
         .localCheckpoint(true)
       val n = seg.count()
       seg.write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-      IndexFs.fail("ann.compact.segfolded")
-      fs.delete(segPath, true)
+      core.fail("compact.segfolded")
+      core.remove(spark, dir, "codes_stream")
       n
     }
     if (hasDel) {
-      val kept = spark.read.parquet(s"$dir/codes")
-        .join(spark.read.parquet(s"$dir/deletes"), Seq("id"),
-          "left_anti")
-      kept.write.mode("overwrite").partitionBy("cell")
+      core.withoutDeletes(spark, dir, spark.read.parquet(s"$dir/codes"))
+        .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/codes_tmp")
-      IndexFs.fail("ann.compact.staged")
-      fs.delete(hpath(dir, "codes"), true)
-      if (!fs.rename(hpath(dir, "codes_tmp"), hpath(dir, "codes")))
-        throw new java.io.IOException(
-          s"could not swap compacted codes table at $dir")
-      fs.delete(delPath, true)
+      core.fail("compact.staged")
+      core.swapStaged(spark, dir, "codes")
+      core.remove(spark, dir, "deletes")
     }
-    IndexFs.fail("ann.compact.swapped")
-    writeMarker(spark, dir, marker)
+    core.fail("compact.swapped")
+    core.writeMarker(spark, dir, marker)
     segN
   }
 
-  /** Idempotent two-step lifecycle: a base build plus ONE append of
-    * `extra`, re-run from scratch only when params or the corpus
-    * fingerprint changed (the composed marker encodes both steps, so
-    * a repeat invocation with a warm index does nothing — no
-    * retraining AND no duplicate append). Returns true iff it built.
+  /** [[IndexLifecycle.ensureBuiltWithAppend]]: build `base`, append
+    * `extra`; true iff built.
     */
   def ensureBuiltWithAppend(base: DataFrame, extra: DataFrame,
       idCol: String, vecCol: String, dir: String, nCells: Int = 16,
       m: Int = 8, nCentroids: Int = 16, iters: Int = 3,
-      fingerprint: String = "", hier: Int = 0): Boolean = {
-    val want = markerText(nCells, m, nCentroids, hier, fingerprint) +
-      s"\n+append[$fingerprint]"
-    val fresh = readMarker(base.sparkSession, dir).contains(want)
-    if (!fresh) {
+      fingerprint: String = "", hier: Int = 0): Boolean =
+    core.ensureBuiltWithAppend(base.sparkSession, dir,
+        markerText(nCells, m, nCentroids, hier, fingerprint),
+        fingerprint) {
       build(base, idCol, vecCol, dir, nCells, m, nCentroids, iters,
         fingerprint, hier)
-      append(extra, idCol, vecCol, dir, fingerprint)
-    }
-    !fresh
-  }
+    }(append(extra, idCol, vecCol, dir, fingerprint))
 
   /** Bounded side tables of a committed index: meta row, coarse
     * centroids (by cell id), PQ codebooks (by (sm, c)).
     */
   def load(spark: SparkSession, dir: String)
       : (Meta, Seq[Seq[Float]], Map[(Int, Int), Seq[Int]]) = {
-    require(hfs(spark, dir).exists(hpath(dir, Marker)),
-      s"no committed ANN index at $dir (missing $Marker — " +
+    require(core.readMarker(spark, dir).isDefined,
+      s"${core.notCommitted(dir)} (missing ${IndexLifecycle.Marker} — " +
         "build() did not finish?)")
     // the three bounded side-table reads are independent — run them
     // CONCURRENTLY (guide §2.6: actions are only sequential because
@@ -577,15 +454,12 @@ object AnnIndex {
     * the union into both pruned scans.
     */
   private def codesTable(spark: SparkSession, dir: String): DataFrame = {
-    val fs = hfs(spark, dir)
     val base = spark.read.parquet(s"$dir/codes")
-    val unioned = if (fs.exists(hpath(dir, "codes_stream")))
+    core.withoutDeletes(spark, dir,
+      if (core.has(spark, dir, "codes_stream"))
         base.unionByName(spark.read.parquet(s"$dir/codes_stream")
           .select("id", "naa", "bc", "cell"))
-      else base
-    if (!fs.exists(hpath(dir, "deletes"))) unioned
-    else unioned.join(spark.read.parquet(s"$dir/deletes"),
-      Seq("id"), "left_anti")
+      else base)
   }
 
   /** ANN-assisted near-duplicate pairs — the 100 TB route for the
@@ -718,6 +592,15 @@ object AnnIndex {
           .repartition(wp, col("id_a"), col("id_b"))
           .distinct()
       }
+    cosineVerified(corpus, cand, n, threshold)
+  }
+
+  /** Exact cosine of candidate pairs (id_a, id_b) against the (id, v,
+    * nrm) rows of `n`: (id_a, id_b, cos) at cos >= `threshold` — the
+    * verify leg of every pair miner here.
+    */
+  private def cosineVerified(corpus: DataFrame, cand: DataFrame,
+      n: DataFrame, threshold: Double): DataFrame =
     cand
       .join(n.select(col("id").as("id_a"), col("v").as("va"),
         col("nrm").as("na")), "id_a")
@@ -727,7 +610,6 @@ object AnnIndex {
         (Similarity.dot(corpus, col("va"), col("vb")) /
           (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= threshold)
-  }
 
   /** The (id, cell, v) probe assignment of [[cosinePairsIndexed]] over
     * a frame with columns (id, v): flat top-`probes` ranking when
@@ -868,10 +750,7 @@ object AnnIndex {
     val nAll = csp.select(col(idCol).cast("long").as("id"),
         col(vecCol).as("v"),
         Similarity.l2norm(csp, col(vecCol)).as("nrm"))
-    (if (!hfs(spark, dir).exists(hpath(dir, "deletes"))) nAll
-     else nAll.join(spark.read.parquet(s"$dir/deletes"),
-       Seq("id"), "left_anti"))
-      .localCheckpoint(false)
+    core.withoutDeletes(spark, dir, nAll).localCheckpoint(false)
   }
 
   /** Super-cell count of the two-level hierarchy: ceil(sqrt(nCells))
@@ -895,12 +774,8 @@ object AnnIndex {
     val (meta, coarse, cents) = load(spark, dir)
     require(query.length == meta.m * meta.sub,
       s"query dim ${query.length} != index dim ${meta.m * meta.sub}")
-    val qd = query.map(_.toDouble)
-    def sdot(c: Seq[Float]): Double =
-      qd.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble)
-    val probeCells = coarse.zipWithIndex
-      .map { case (c, j) => (sdot(c), j) }
-      .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
+    val (probeCells, qdots) =
+      queryPlan(query, meta, coarse, cents, probes)
     // cell is the PARTITION column of codes/ — this filter prunes to
     // `probes` directories before any row is read (pinned in spec).
     // A streaming segment (ingestStream) unions in when present; the
@@ -909,14 +784,9 @@ object AnnIndex {
     // id list, AQE broadcasts it; compactSegment folds it physically.
     val codes = codesTable(spark, dir)
       .filter(col("cell").isin(probeCells: _*))
-    val qdotArr: Int => Column = sm =>
-      array((0 until meta.nCentroids).map { c =>
-        val cent = cents((sm, c))
-        val qm = qd.slice(sm * meta.sub, (sm + 1) * meta.sub)
-        lit(qm.zip(cent).foldLeft(0.0)((acc, p) => acc + p._1 * p._2))
-      }: _*)
     val qsum = (0 until meta.m).map(sm =>
-      element_at(qdotArr(sm), element_at(col("bc"), sm + 1) + 1))
+      element_at(array(qdots(sm).map(lit): _*),
+        element_at(col("bc"), sm + 1) + 1))
       .reduce(_ + _)
     val cand = codes
       .select(col("id").as(idCol),
@@ -934,6 +804,28 @@ object AnnIndex {
             Similarity.l2norm(corpus, qlit))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
+  }
+
+  /** Driver-side serve arithmetic of one query, shared by [[search]]
+    * and [[searchBatch]]: its top-`probes` cells (dot DESC, cell ASC)
+    * and its m x nCentroids codebook dot table, by fixed left folds.
+    */
+  private def queryPlan(query: Seq[Float], meta: Meta,
+      coarse: Seq[Seq[Float]], cents: Map[(Int, Int), Seq[Int]],
+      probes: Int): (Seq[Int], Seq[Seq[Double]]) = {
+    val qd = query.map(_.toDouble)
+    val cells = coarse.zipWithIndex
+      .map { case (c, j) =>
+        (qd.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble),
+          j)
+      }
+      .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
+    val qdots = (0 until meta.m).map { sm =>
+      val qm = qd.slice(sm * meta.sub, (sm + 1) * meta.sub)
+      (0 until meta.nCentroids).map(c =>
+        qm.zip(cents((sm, c))).foldLeft(0.0)((acc, p) => acc + p._1 * p._2))
+    }
+    (cells, qdots)
   }
 
   /** BATCH serve: answer a TABLE of queries in ONE pass over the
@@ -985,19 +877,7 @@ object AnnIndex {
     // per query: probe cells + the m×nCentroids qdot table, via the
     // SAME driver folds as search() — bit-identical by construction
     val probeRows = qrows.flatMap { case (qid, q) =>
-      val qd = q.map(_.toDouble)
-      def sdot(c: Seq[Float]): Double =
-        qd.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble)
-      val probeCells = coarse.zipWithIndex
-        .map { case (c, j) => (sdot(c), j) }
-        .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
-      val qdots: Seq[Seq[Double]] = (0 until meta.m).map { sm =>
-        (0 until meta.nCentroids).map { c =>
-          val cent = cents((sm, c))
-          val qm = qd.slice(sm * meta.sub, (sm + 1) * meta.sub)
-          qm.zip(cent).foldLeft(0.0)((acc, p) => acc + p._1 * p._2)
-        }
-      }
+      val (probeCells, qdots) = queryPlan(q, meta, coarse, cents, probes)
       probeCells.map(cell => (qid, cell, qdots))
     }
     val probeDf = probeRows.toDF("__qid", "cell", "__qd")
@@ -1200,119 +1080,57 @@ object AnnIndex {
       .select(col("__qid").as("qid"), col(idCol), col("score"))
   }
 
-  // --- semantic-dup GROUPS at rest (r16) ----------------------------
-  //
-  // dedup_embed_ann_groups re-mines cosinePairsIndexed's pairs and
-  // re-runs connected components over the whole corpus on every
-  // invocation; the group structure only changes when the index does.
-  // Same at-rest treatment MinHashIndex's groups got in r15:
-  // buildGroups commits the full CC labels once (GROUPS_READY digests
-  // the index marker it was built against, plus the mining params);
-  // appendGroups folds a just-appended batch in through the shared
-  // super-node CC (ConnectedComponents.foldIncrement), bounded by the
-  // batch's reach plus one shuffle-free map pass assigning corpus
-  // probe cells (the one per-corpus cost a probe-side candidate rule
-  // cannot avoid without persisting the probe-cell table — documented
-  // trade; the expensive legs, pair verify and CC, stay batch-bounded).
+  // --- semantic-dup GROUPS at rest ([[GroupsLifecycle]]) ----------
+  // Pair miners: [[cosinePairsIndexed]] over the corpus; the batch's
+  // probe cells against the corpus probe-cell assignment under the
+  // index's frozen centroids (the same probe x probe rule restricted
+  // to pairs touching the batch — the corpus side holds the batch, so
+  // batch-internal pairs are included; the corpus assignment is one
+  // shuffle-free map pass, the one per-corpus cost of this fold); and
+  // the probe x probe self-join over the touched members (cells are
+  // deterministic per vector, so this finds every rebuild pair among
+  // them). Rebuild equality pinned in AnnIndexSpec / LayoutSpec.
 
-  private val GroupsMarker = "GROUPS_READY"
+  private def groupsParams(threshold: Double, probes: Int,
+      superProbes: Int): String =
+    s"threshold=$threshold probes=$probes superProbes=$superProbes"
 
-  private def groupsMarkerText(indexMarker: String, threshold: Double,
-      probes: Int, superProbes: Int): String =
-    s"format=$FormatVersion threshold=$threshold probes=$probes " +
-      s"superProbes=$superProbes " +
-      s"index[${IndexFs.markerDigest(indexMarker)}]"
-
-  /** True iff a committed groups table exists AND matches the CURRENT
-    * index marker at these mining params. Any append/delete/ingest
-    * since it was built flips the digest; compaction preserves the
-    * marker text and is result-invisible, so groups stay fresh
-    * across it.
+  /** True iff a committed groups table matches the CURRENT index
+    * marker at these mining params.
     */
   def groupsFresh(spark: SparkSession, dir: String, threshold: Double,
       probes: Int = 4, superProbes: Int = 0): Boolean =
-    readMarker(spark, dir).exists { idx =>
-      IndexFs.readMarker(spark, dir, GroupsMarker).contains(
-        groupsMarkerText(idx, threshold, probes, superProbes))
-    }
+    groups.fresh(spark, dir, groupsParams(threshold, probes, superProbes))
 
-  /** The committed groups marker and whether it digests the CURRENT
-    * index marker — the ops-CLI staleness view (None = no groups
-    * table committed).
-    */
+  /** [[GroupsLifecycle]]'s staleness view (None = no groups table). */
   def groupsStatus(spark: SparkSession, dir: String)
-      : Option[(String, Boolean)] =
-    IndexFs.readMarker(spark, dir, GroupsMarker).map { gm =>
-      val cur = readMarker(spark, dir).map(IndexFs.markerDigest)
-      (gm, cur.exists(d => gm.contains(s"index[$d]")))
-    }
+      : Option[(String, Boolean)] = IndexLifecycle.groupsStatus(spark, dir)
 
-  /** The committed groups table: (id, label) for every vector in some
-    * near-dup pair; label = min id of its group. Unpaired vectors are
-    * absent (their group is trivially themselves).
+  /** The committed groups table: (id, label), label = min id of the
+    * group; unpaired vectors are absent.
     */
-  def readGroups(spark: SparkSession, dir: String): DataFrame = {
-    require(IndexFs.readMarker(spark, dir, GroupsMarker).nonEmpty,
-      s"no committed groups table at $dir (missing $GroupsMarker)")
-    spark.read.parquet(s"$dir/groups")
-  }
+  def readGroups(spark: SparkSession, dir: String): DataFrame =
+    groups.read(spark, dir)
 
-  /** Full connected-components pass over [[cosinePairsIndexed]]'s
-    * probe-confined pairs, committed as the at-rest `groups/` table.
-    * Marker LAST, digesting the index marker + mining params it was
-    * built against.
-    */
+  /** Full connected components over [[cosinePairsIndexed]]'s pairs. */
   def buildGroups(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, threshold: Double, probes: Int = 4,
       superProbes: Int = 0): Unit =
-    withLease(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      val want = groupsMarkerText(readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed ANN index at $dir — build first")),
-        threshold, probes, superProbes)
-      hfs(spark, dir).delete(hpath(dir, GroupsMarker), false)
-      graft.operators.ConnectedComponents.labels(
-          cosinePairsIndexed(corpus, idCol, vecCol, dir, threshold,
-            probes, superProbes)
-            .select(col("id_a"), col("id_b")))
-        .write.mode("overwrite").parquet(s"$dir/groups")
-      IndexFs.writeMarker(spark, dir, GroupsMarker, want)
+    groups.build(corpus.sparkSession, dir,
+        groupsParams(threshold, probes, superProbes)) {
+      cosinePairsIndexed(corpus, idCol, vecCol, dir, threshold, probes,
+        superProbes)
     }
 
-  /** Fold a JUST-APPENDED batch into the committed groups table
-    * incrementally. Preconditions mirror `MinHashIndex.appendGroups`
-    * (the r17 suffix walk: GROUPS_READY digests a prefix of the index
-    * marker and the NEXT un-folded line must be this batch's
-    * `+append`/`+ingest` — a multi-mutation suffix folds as bounded
-    * calls in marker order; see [[IndexFs.requireFoldable]]);
-    * `corpus` is the full post-append corpus and must contain the
-    * batch ids.
-    *
-    * New pairs = the batch's probe cells joined against the corpus
-    * probe-cell assignment under the index's OWN frozen centroids —
-    * exactly [[cosinePairsIndexed]]'s probe×probe co-occurrence rule
-    * restricted to pairs touching the batch (every pair a full
-    * re-mine would add has a batch endpoint; batch-internal pairs are
-    * included since the corpus side contains the batch) — exact
-    * cosine on candidates only, then the shared super-node CC fold.
-    * Result equals a full rebuild (pinned in AnnIndexSpec).
+  /** Fold a JUST-APPENDED batch; `corpus` is the full post-append
+    * corpus and must contain the batch ids.
     */
   def appendGroups(batch: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, dir: String, threshold: Double, probes: Int = 4,
       superProbes: Int = 0): Unit =
-    withLease(batch.sparkSession, dir) {
-      val spark = batch.sparkSession
-      val fs = hfs(spark, dir)
-      val idx = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed ANN index at $dir — build first"))
-      val stamp = IndexFs.requireFoldable(spark, dir, GroupsMarker,
-        idx, "appendGroups",
-        l => l.startsWith("+append[") || l == "+ingest",
-        "+append/+ingest",
-        prev => groupsMarkerText(prev, threshold, probes, superProbes))
-      val (_, coarse, _) = load(spark, dir)
+    groups.foldAppend(batch.sparkSession, dir,
+        groupsParams(threshold, probes, superProbes)) {
+      val (_, coarse, _) = load(batch.sparkSession, dir)
       val n = normalized(corpus, idCol, vecCol, dir)
       val bN = n.join(
         batch.select(col(idCol).cast("long").as("id")).distinct(),
@@ -1320,111 +1138,36 @@ object AnnIndex {
       val bProbe = probeCells(bN, coarse, probes, superProbes)
         .select(col("id").as("id_a"), col("cell"))
         .localCheckpoint(false)
-      // corpus-side probe assignment: one shuffle-free map pass,
-      // pruned to the batch's probed cells before the candidate join
+      // corpus side pruned to the batch's probed cells before the join
       val cProbe = probeCells(n, coarse, probes, superProbes)
         .select(col("id").as("id_b"), col("cell"))
         .join(bProbe.select("cell").distinct(), Seq("cell"),
           "left_semi")
-      val cand = bProbe.join(cProbe, "cell")
+      cosineVerified(corpus, bProbe.join(cProbe, "cell")
         .filter(col("id_a") =!= col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct()
-      val newPairs = cand
-        .join(n.select(col("id").as("id_a"), col("v").as("va"),
-          col("nrm").as("na")), "id_a")
-        .join(n.select(col("id").as("id_b"), col("v").as("vb"),
-          col("nrm").as("nb")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          (Similarity.dot(corpus, col("va"), col("vb")) /
-            (col("na") * col("nb"))).as("cos"))
-        .filter(col("cos") >= threshold)
-        .select(col("id_a"), col("id_b"))
-      // EAGER checkpoint: the update reads groups/, then overwrites it
-      val updated = graft.operators.ConnectedComponents
-        .foldIncrement(spark.read.parquet(s"$dir/groups"), newPairs)
-        .localCheckpoint(true)
-      fs.delete(hpath(dir, GroupsMarker), false)
-      IndexFs.fail("ann.groups.unmarked")
-      updated.write.mode("overwrite").parquet(s"$dir/groups")
-      IndexFs.fail("ann.groups.written")
-      IndexFs.writeMarker(spark, dir, GroupsMarker, stamp)
+        .select(col("id_a"), col("id_b")).distinct(), n, threshold)
     }
 
-  /** Fold a JUST-QUEUED [[delete]] into the committed groups table
-    * incrementally — `MinHashIndex.deleteGroups`' embedding dual. A
-    * delete can SPLIT a group (bridge removal), which the append
-    * fold's super-node trick cannot express, so components are
-    * recomputed ONLY over the touched groups' surviving members:
-    * their probe cells re-assigned under the frozen quantizer
-    * (deterministic per vector, so the confined candidate set equals
-    * a full re-mine's pairs among them — a touched-member ↔
-    * untouched-doc pair would have put both in ONE group already),
-    * exact cosine on candidates only, CC over the confined pairs, and
-    * the shared delete-fold relabel. Work is bounded by the touched
-    * groups' member count, never corpus-sized. Preconditions: the
-    * next un-folded marker line after the prefix GROUPS_READY digests
-    * must be a `+delete[n]` (the r17 suffix walk —
-    * [[IndexFs.requireFoldable]]; tombstones are applied IN FULL at
-    * every fold, so with several deletes queued an earlier fold may
-    * clean a later delete's groups early — the later fold then
-    * no-ops for them). The drained sequence equals a full
-    * [[buildGroups]] over the same index state (pinned in
-    * AnnIndexSpec).
+  /** Fold a JUST-QUEUED [[delete]]; `corpus` is the post-delete corpus
+    * (tombstoned vectors are excluded by id either way).
     */
   def deleteGroups(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, threshold: Double, probes: Int = 4,
       superProbes: Int = 0): Unit =
-    withLease(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      val fs = hfs(spark, dir)
-      val idx = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed ANN index at $dir — build first"))
-      val stamp = IndexFs.requireFoldable(spark, dir, GroupsMarker,
-        idx, "deleteGroups", l => l.startsWith("+delete["),
-        "+delete[n]",
-        prev => groupsMarkerText(prev, threshold, probes, superProbes))
-      val g = spark.read.parquet(s"$dir/groups")
-        .localCheckpoint(false)
-      val del = spark.read.parquet(s"$dir/deletes").select(col("id"))
-      val touched = g.join(del, Seq("id"), "left_semi")
-        .select(col("label")).distinct()
-      // surviving members of touched groups — the confined re-mine
-      // universe; EAGER: reads groups/, which the fold overwrites
-      val members = g.join(touched, Seq("label"), "left_semi")
-        .join(del, Seq("id"), "left_anti")
-        .select(col("id")).localCheckpoint(true)
-      val (_, coarse, _) = load(spark, dir)
-      val n = normalized(corpus, idCol, vecCol, dir) // tombstones out
-      val mN = n.join(members, Seq("id"), "left_semi")
+    groups.foldDelete(corpus.sparkSession, dir,
+        groupsParams(threshold, probes, superProbes)) { members =>
+      val (_, coarse, _) = load(corpus.sparkSession, dir)
+      val mN = normalized(corpus, idCol, vecCol, dir)
+        .join(members, Seq("id"), "left_semi")
         .localCheckpoint(false)
       val probe0 = probeCells(mN, coarse, probes, superProbes)
         .select(col("id"), col("cell"))
       val probe =
         if (superProbes <= 0) probe0 else probe0.localCheckpoint(false)
-      val cand = probe
+      cosineVerified(corpus, probe
         .join(probe.select(col("id").as("id2"), col("cell")), "cell")
         .filter(col("id") < col("id2"))
         .select(col("id").as("id_a"), col("id2").as("id_b"))
-        .distinct()
-      val pairs = cand
-        .join(mN.select(col("id").as("id_a"), col("v").as("va"),
-          col("nrm").as("na")), "id_a")
-        .join(mN.select(col("id").as("id_b"), col("v").as("vb"),
-          col("nrm").as("nb")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          (Similarity.dot(corpus, col("va"), col("vb")) /
-            (col("na") * col("nb"))).as("cos"))
-        .filter(col("cos") >= threshold)
-        .select(col("id_a"), col("id_b"))
-      val relabeled = graft.operators.ConnectedComponents
-        .labels(pairs).localCheckpoint(true)
-      val updated = graft.operators.ConnectedComponents
-        .foldDelete(g, touched, relabeled).localCheckpoint(true)
-      fs.delete(hpath(dir, GroupsMarker), false)
-      IndexFs.fail("ann.groups.unmarked")
-      updated.write.mode("overwrite").parquet(s"$dir/groups")
-      IndexFs.fail("ann.groups.written")
-      IndexFs.writeMarker(spark, dir, GroupsMarker, stamp)
+        .distinct(), mN, threshold)
     }
 }

@@ -12,17 +12,15 @@ import graft.functions.BloomContains
   * invocation — linear-in-corpus work to answer a batch-sized
   * question. The bitmap is a few MB at any corpus size (m is a
   * cardinality-budget constant) and only changes when the corpus
-  * does, so it gets the same at-rest lifecycle as the other index
-  * families (shared `IndexFs` primitives: marker-last commit,
-  * exclusive heartbeat lease, `breakLease` recovery):
+  * does, so it gets the at-rest lifecycle of the other index
+  * families ([[IndexLifecycle]]: marker-last commit, lease, stamps):
   *
   *   - `build` folds the corpus's k bit positions into the m-bit
   *     bitmap (`Bloom.buildBitmap` — one corpus pass) and commits TWO
   *     tables under `dir`: `bitmap/` (one row, m/8 bytes binary) and
   *     `keys/` (the DISTINCT canonical md5 keys — one skinny string
   *     per unique document, the exact-verify side the gate's
-  *     `exact_dup` ground-truth flag needs). Marker (format, k,
-  *     mBits, corpus fingerprint) LAST.
+  *     `exact_dup` ground-truth flag needs).
   *   - `gate` answers an incoming batch from the INDEX ALONE: the
   *     bitmap row is read driver-side (bounded by design) and probed
   *     map-side via the codegen'd `bloom_contains`; `exact_dup` joins
@@ -30,11 +28,9 @@ import graft.functions.BloomContains
   *     `Bloom.gate(batch, corpus, ...)` over the corpus the index was
   *     built from — no corpus scan anywhere at probe time.
   *   - `append` ORs a new batch's bits into the bitmap (driver-side
-  *     OR of two bounded bitmaps) and appends its keys; the marker
-  *     gains `+append[fingerprint]`. DELETION is impossible on a
-  *     plain Bloom filter (bits are shared) — removing documents
-  *     means a rebuild; `ensureBuilt` against the post-delete corpus
-  *     fingerprint triggers exactly that.
+  *     OR of two bounded bitmaps) and appends its keys. DELETION is
+  *     impossible on a plain Bloom filter (bits are shared) —
+  *     removing documents means a rebuild.
   *
   * 100 TB posture: build is one map-side position pass + a
   * (#partitions × m/8)-byte tree-reduce; the gate is a broadcast
@@ -45,16 +41,9 @@ import graft.functions.BloomContains
   */
 object BloomIndex {
 
-  private val Marker = "INDEX_READY"
-  private val Lease = ".MAINT_LEASE"
   private val FormatVersion = 1
 
-  private def withLease[T](spark: SparkSession, dir: String)
-      (body: => T): T =
-    IndexFs.withLease(spark, dir, Lease, "Bloom index")(body)
-
-  private def readMarker(spark: SparkSession, dir: String)
-      : Option[String] = IndexFs.readMarker(spark, dir, Marker)
+  private[graft] val core = new IndexLifecycle("bloom", "Bloom index")
 
   final case class Meta(k: Int, mBits: Int)
 
@@ -79,15 +68,14 @@ object BloomIndex {
     */
   def build(corpus: DataFrame, idCol: String, keyExpr: Column,
       dir: String, k: Int, mBits: Int, fingerprint: String = ""): Unit =
-    withLease(corpus.sparkSession, dir) {
+    core.withLease(corpus.sparkSession, dir) {
       val spark = corpus.sparkSession
       import spark.implicits._
-      IndexFs.hfs(spark, dir).delete(IndexFs.hpath(dir, Marker), false)
+      core.liftMarker(spark, dir)
       // a rebuild retires any streaming segment from the index's
       // previous life (the MinHash/Ann rebuild discipline) — the next
       // ingest needs a fresh checkpoint
-      IndexFs.hfs(spark, dir)
-        .delete(IndexFs.hpath(dir, "keys_stream"), true)
+      core.remove(spark, dir, "keys_stream")
       val keyed = Bloom.keyed(corpus, idCol, keyExpr)
         .localCheckpoint(false) // feeds the position pass AND keys/
       val bitmap = Bloom.buildBitmap(
@@ -96,22 +84,17 @@ object BloomIndex {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/bitmap")
       keyed.select(col("key")).distinct()
         .write.mode("overwrite").parquet(s"$dir/keys")
-      IndexFs.writeMarker(spark, dir, Marker,
-        markerText(k, mBits, fingerprint))
+      core.writeMarker(spark, dir, markerText(k, mBits, fingerprint))
     }
 
-  /** Rebuild iff the marker is missing or its params/corpus
-    * fingerprint changed — a metadata check, never a corpus scan.
-    * @return true iff a rebuild ran.
-    */
+  /** [[IndexLifecycle.ensureBuilt]] at these params; true iff built. */
   def ensureBuilt(corpus: DataFrame, idCol: String, keyExpr: Column,
       dir: String, k: Int, mBits: Int,
-      fingerprint: String = ""): Boolean = {
-    val want = markerText(k, mBits, fingerprint)
-    val fresh = readMarker(corpus.sparkSession, dir).contains(want)
-    if (!fresh) build(corpus, idCol, keyExpr, dir, k, mBits, fingerprint)
-    !fresh
-  }
+      fingerprint: String = ""): Boolean =
+    core.ensureBuilt(corpus.sparkSession, dir,
+        markerText(k, mBits, fingerprint)) {
+      build(corpus, idCol, keyExpr, dir, k, mBits, fingerprint)
+    }
 
   /** OR a new batch's bits into the committed bitmap and append its
     * keys — the incremental ingest path (a Bloom filter composes
@@ -122,27 +105,17 @@ object BloomIndex {
     */
   def append(df: DataFrame, idCol: String, keyExpr: Column,
       dir: String, fingerprint: String = ""): Unit =
-    withLease(df.sparkSession, dir) {
+    core.withLease(df.sparkSession, dir) {
       val spark = df.sparkSession
       import spark.implicits._
-      val prev = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed Bloom index at $dir — build first"))
-      val meta = paramsOf(prev, dir)
+      val meta = paramsOf(core.committed(spark, dir), dir)
       val keyed = Bloom.keyed(df, idCol, keyExpr)
         .localCheckpoint(false)
-      val add = Bloom.buildBitmap(
-        Bloom.positions(keyed, meta.k, meta.mBits), meta.mBits)
-      val bits = loadBitmap(spark, dir)
-      var i = 0
-      while (i < bits.length) {
-        bits(i) = (bits(i) | add(i)).toByte; i += 1
-      }
+      val bits = orBits(keyed, meta)(loadBitmap(spark, dir))
       // marker FIRST (the delete discipline): a crash mid-swap leaves
       // a stale-looking index that forces a spurious-but-safe rebuild,
       // never a fresh-looking one missing the batch's bits
-      IndexFs.writeMarker(spark, dir, Marker,
-        prev + s"\n+append[$fingerprint]")
+      core.stamp(spark, dir, core.appendLine(fingerprint))
       Seq(Tuple1(bits)).toDF("bits")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/bitmap")
       keyed.select(col("key")).distinct()
@@ -154,6 +127,22 @@ object BloomIndex {
       : Array[Byte] =
     spark.read.parquet(s"$dir/bitmap").head().getAs[Array[Byte]](0)
 
+  /** `base` (read after the fold) ORed in place with the bitmap of
+    * `keyed`'s (h1, h2) rows — the OR of two bitmaps IS the bitmap of
+    * the unioned corpus.
+    */
+  private def orBits(keyed: DataFrame, meta: Meta)(
+      base: => Array[Byte]): Array[Byte] = {
+    val add = Bloom.buildBitmap(
+      Bloom.positions(keyed, meta.k, meta.mBits), meta.mBits)
+    val bits = base
+    var i = 0
+    while (i < bits.length) {
+      bits(i) = (bits(i) | add(i)).toByte; i += 1
+    }
+    bits
+  }
+
   /** Streaming ingest into the committed index: arriving documents'
     * canonical keys are hashed MAP-SIDE (`Bloom.keyed` — the same
     * family every batch path uses, so stream and batch can never
@@ -162,22 +151,17 @@ object BloomIndex {
     * touched by the stream (a byte-wise OR is not an appendable file
     * op); instead [[gate]] folds the segment in at probe time — work
     * linear in SEGMENT size, never corpus size — and [[compact]]
-    * seals it into `bitmap/` + `keys/` offline. Holds the maintenance
-    * lease for the query's lifetime (a concurrent build/append/compact
-    * fails fast instead of deleting the segment under a live sink;
-    * released within ~1 s of termination) and stamps a `+ingest`
-    * marker line first, so `ensureBuilt` sees the mutation.
+    * seals it into `bitmap/` + `keys/` offline. A writer: it holds
+    * the lease for its lifetime and stamps `+ingest`
+    * ([[IndexLifecycle]]).
     */
   def ingestStream(stream: DataFrame, idCol: String, keyExpr: Column,
       dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = stream.sparkSession
-    val marker = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed Bloom index at $dir — build first"))
-    paramsOf(marker, dir) // format check before mutating anything
-    IndexFs.withStreamLease(spark, dir, Lease, "Bloom index") {
-      IndexFs.writeMarker(spark, dir, Marker, marker + "\n+ingest")
+    // format check before mutating anything
+    paramsOf(core.committed(spark, dir), dir)
+    core.ingest(spark, dir) {
       Bloom.keyed(stream, idCol, keyExpr)
         .select(col("key"), col("h1"), col("h2"))
         .writeStream.format("parquet")
@@ -200,8 +184,7 @@ object BloomIndex {
     */
   private def segment(spark: SparkSession, dir: String)
       : Option[DataFrame] =
-    if (!IndexFs.hfs(spark, dir)
-        .exists(IndexFs.hpath(dir, "keys_stream"))) None
+    if (!core.has(spark, dir, "keys_stream")) None
     else Some(spark.read.parquet(s"$dir/keys_stream")
       .select(col("key"), col("h1"), col("h2")).distinct()
       .localCheckpoint(true))
@@ -219,39 +202,30 @@ object BloomIndex {
     * @return number of keys at rest after the seal
     */
   def compact(spark: SparkSession, dir: String): Long =
-    withLease(spark, dir) {
+    core.compact(spark, dir) {
       import spark.implicits._
-      val fs = IndexFs.hfs(spark, dir)
-      val marker = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed Bloom index at $dir"))
+      val marker = core.committed(spark, dir)
       val meta = paramsOf(marker, dir)
       segment(spark, dir) match {
         case None => spark.read.parquet(s"$dir/keys").count()
         case Some(seg) => // already eagerly materialized by segment()
-          val add = Bloom.buildBitmap(
-            Bloom.positions(seg.withColumn("id", lit(0L)),
-              meta.k, meta.mBits), meta.mBits)
-          val bits = loadBitmap(spark, dir)
-          var i = 0
-          while (i < bits.length) {
-            bits(i) = (bits(i) | add(i)).toByte; i += 1
-          }
+          val bits = orBits(seg.withColumn("id", lit(0L)), meta)(
+            loadBitmap(spark, dir))
           // EAGER checkpoint: fresh reads keys/ and is then APPENDED
           // to keys/ — materialize before the write job lists the dir
           val fresh = seg.select(col("key"))
             .join(spark.read.parquet(s"$dir/keys"),
               Seq("key"), "left_anti")
             .localCheckpoint(true)
-          fs.delete(IndexFs.hpath(dir, Marker), false)
-          IndexFs.fail("bloom.compact.unmarked")
+          core.liftMarker(spark, dir)
+          core.fail("compact.unmarked")
           Seq(Tuple1(bits)).toDF("bits").coalesce(1)
             .write.mode("overwrite").parquet(s"$dir/bitmap")
-          IndexFs.fail("bloom.compact.bitmap")
+          core.fail("compact.bitmap")
           fresh.write.mode("append").parquet(s"$dir/keys")
-          fs.delete(IndexFs.hpath(dir, "keys_stream"), true)
-          IndexFs.fail("bloom.compact.sealed")
-          IndexFs.writeMarker(spark, dir, Marker, marker)
+          core.remove(spark, dir, "keys_stream")
+          core.fail("compact.sealed")
+          core.writeMarker(spark, dir, marker)
           spark.read.parquet(s"$dir/keys").count()
       }
     }
@@ -265,8 +239,7 @@ object BloomIndex {
     */
   def gate(batch: DataFrame, idCol: String, keyExpr: Column,
       dir: String): DataFrame = {
-    val spark = batch.sparkSession
-    val (meta, bitmap, keys) = gateParts(spark, dir)
+    val (meta, bitmap, keys) = gateParts(batch.sparkSession, dir)
     val kb = Bloom.keyed(batch, idCol, keyExpr)
     kb.withColumn("bloom_hit", BloomContains.bloom_contains(
         bitmap, col("h1"), col("h2"), meta.k, meta.mBits))
@@ -287,21 +260,11 @@ object BloomIndex {
     */
   def gateParts(spark: SparkSession, dir: String)
       : (Meta, Array[Byte], DataFrame) = {
-    val marker = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed Bloom index at $dir"))
-    val meta = paramsOf(marker, dir)
-    val bitmap = loadBitmap(spark, dir)
+    val meta = paramsOf(core.committed(spark, dir), dir)
+    val committed = loadBitmap(spark, dir)
     val seg = segment(spark, dir)
-    seg.foreach { sg =>
-      val add = Bloom.buildBitmap(
-        Bloom.positions(sg.withColumn("id", lit(0L)),
-          meta.k, meta.mBits), meta.mBits)
-      var i = 0
-      while (i < bitmap.length) {
-        bitmap(i) = (bitmap(i) | add(i)).toByte; i += 1
-      }
-    }
+    val bitmap = seg.fold(committed)(sg =>
+      orBits(sg.withColumn("id", lit(0L)), meta)(committed))
     val keys = seg match {
       case None => spark.read.parquet(s"$dir/keys")
       case Some(sg) => spark.read.parquet(s"$dir/keys")
@@ -310,10 +273,10 @@ object BloomIndex {
     (meta, bitmap, keys)
   }
 
-  /** Force-break a CRASHED writer's orphaned maintenance lease — see
-    * [[IndexFs.breakLease]].
+  /** Break a crashed writer's stale lease ([[IndexFs.breakLease]]);
+    * None = no committed marker, rebuild before use.
     */
   def breakLease(spark: SparkSession, dir: String,
       staleMillis: Long = IndexFs.DefaultStaleMillis): Option[String] =
-    IndexFs.breakLease(spark, dir, Lease, Marker, staleMillis)
+    core.breakLease(spark, dir, staleMillis)
 }

@@ -2,9 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.SparkSession
 
-/** Hadoop-FS primitives shared by the persisted index lifecycles
-  * (`AnnIndex`, `MinHashIndex`, `BloomIndex`): marker read/commit and
-  * the exclusive maintenance lease. Every filesystem touch resolves
+/** Hadoop-FS primitives under [[IndexLifecycle]], the commit protocol
+  * of the persisted index families: marker read/commit and the
+  * exclusive maintenance lease. Every filesystem touch resolves
   * the Hadoop FileSystem from the index dir's scheme — a java.nio
   * marker on an HDFS/S3 index dir would land on LOCAL disk and
   * silently disagree with the actual remote index state.
@@ -140,21 +140,30 @@ private[ext] object IndexFs {
     */
   def withLease[T](spark: SparkSession, dir: String, lease: String,
       what: String)(body: => T): T = {
-    val fs = hfs(spark, dir)
-    fs.mkdirs(hpath(dir))
-    val p = hpath(dir, lease)
-    if (!tryAcquire(fs, p, what))
-      throw new IllegalStateException(
-        s"$what maintenance lease held at $p — another " +
-          "build/append/delete/compact is running (or crashed: break " +
-          s"the lease with breakLease once its heartbeat is stale; " +
-          s"holder: ${readMarker(spark, dir, lease).getOrElse("unknown")})")
+    val (fs, p) = acquire(spark, dir, lease, what)
     val beat = heartbeat(fs, p)
     try body
     finally {
       beat.interrupt()
       fs.delete(p, false); ()
     }
+  }
+
+  /** Take the lease at `dir/lease` or refuse loudly, naming its holder. */
+  private def acquire(spark: SparkSession, dir: String, lease: String,
+      what: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val fs = hfs(spark, dir)
+    fs.mkdirs(hpath(dir))
+    val p = hpath(dir, lease)
+    if (!tryAcquire(fs, p, what))
+      throw new IllegalStateException(
+        s"$what maintenance lease held at $p — another " +
+          "build/append/delete/compact (or an ingest stream) is running " +
+          "(or crashed: break the lease with breakLease once its " +
+          "heartbeat is stale); holder: " +
+          readMarker(spark, dir, lease).getOrElse("unknown"))
+    (fs, p)
   }
 
   /** Daemon thread touching `p`'s mtime every [[HeartbeatMillis]]
@@ -225,16 +234,7 @@ private[ext] object IndexFs {
       what: String)(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fs = hfs(spark, dir)
-    fs.mkdirs(hpath(dir))
-    val p = hpath(dir, lease)
-    if (!tryAcquire(fs, p, s"$what streaming ingest"))
-      throw new IllegalStateException(
-        s"$what maintenance lease held at $p — a " +
-          "build/append/delete/compact (or another ingest stream) is " +
-          "running (or crashed: break the lease with breakLease once " +
-          "its heartbeat is stale); holder: " +
-          readMarker(spark, dir, lease).getOrElse("unknown"))
+    val (fs, p) = acquire(spark, dir, lease, s"$what streaming ingest")
     val q =
       try start
       catch { case e: Throwable => fs.delete(p, false); throw e }
@@ -259,67 +259,6 @@ private[ext] object IndexFs {
     t.setDaemon(true)
     t.start()
     q
-  }
-
-  /** md5 hex digest of a marker text — the groups-marker fingerprint
-    * of the index state a groups table was built against.
-    */
-  def markerDigest(text: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(text.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  /** Incremental-fold precondition shared by the groups lifecycles
-    * (ADVICE r15, relaxed to MUTATION SUFFIXES in r17 — VERDICT r16
-    * #4): a committed groups marker must digest some PREFIX of the
-    * index marker's lines, and the NEXT un-folded line must be the
-    * mutation kind `op` folds (per `accept`). A multi-mutation marker
-    * (append, append, delete since the last fold) is then folded as a
-    * SEQUENCE of bounded folds IN MARKER ORDER — the strict
-    * one-trailing-line rule made any second mutation throw toward a
-    * corpus-sized buildGroups, which at a production ingest cadence
-    * meant frequent full rebuilds. Folding out of order (asking for a
-    * delete fold while the next un-folded line is an append, or vice
-    * versa) still throws, as does a groups marker digesting NO prefix
-    * (parameters differ, or folds were skipped) — an existence-only
-    * check would stamp the fold's result with the CURRENT marker
-    * digest and silently launder intervening mutations into a
-    * fresh-looking groups table.
-    *
-    * @return the groups-marker text to STAMP after this fold —
-    *         `wantFor(folded prefix + the one line being folded)`, so
-    *         the digest advances exactly one mutation per fold and
-    *         reaches the full-marker digest (== `groupsFresh`) when
-    *         the suffix is drained
-    */
-  def requireFoldable(spark: SparkSession, dir: String,
-      groupsMarker: String, idx: String, op: String,
-      accept: String => Boolean, expected: String,
-      wantFor: String => String): String = {
-    val gm = readMarker(spark, dir, groupsMarker).getOrElse(
-      throw new IllegalStateException(
-        s"no committed groups table at $dir — buildGroups first"))
-    val lines = idx.linesIterator.toSeq
-    if (gm == wantFor(idx))
-      throw new IllegalStateException(
-        s"groups table at $dir is already fresh — nothing to fold")
-    // the folded prefix: the longest (== only, digests are unique per
-    // prefix) prefix of marker lines the committed groups marker
-    // digests; everything after it is the un-folded mutation suffix
-    val foldedTo = (1 until lines.size)
-      .find(k => gm == wantFor(lines.take(k).mkString("\n")))
-      .getOrElse(throw new IllegalStateException(
-        s"groups table at $dir digests no prefix of the index marker " +
-          "(the parameters differ, or it predates a rebuild) — " +
-          s"$op cannot fold; rebuild with buildGroups"))
-    val next = lines(foldedTo)
-    if (!accept(next))
-      throw new IllegalStateException(
-        s"the next un-folded mutation at $dir is '$next', not the " +
-          s"$expected this $op folds — fold mutations in marker " +
-          "order (run the matching groups fold first), or rebuild " +
-          "with buildGroups")
-    wantFor(lines.take(foldedTo + 1).mkString("\n"))
   }
 
   /** Write the marker via tmp + rename: a crashed write leaves either

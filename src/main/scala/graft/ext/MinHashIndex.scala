@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * production ingest loop where batches arrive continuously against a
   * slowly-growing corpus. At 100 TB the corpus-side signature pass IS
   * the job; the signatures it produces are 32 longs per document and
-  * never change while the document doesn't. This object persists them,
-  * mirroring the `AnnIndex` lifecycle (same marker/lease/fingerprint
-  * discipline, shared `IndexFs` primitives):
+  * never change while the document doesn't. This object persists them
+  * under the shared commit protocol ([[IndexLifecycle]]: marker,
+  * lease, tombstones, groups at rest):
   *
   *   - `build` computes MinHash signatures over word 3-gram shingles
   *     (`Dedup.shingleRows`, the prose default) or char 5-grams
@@ -23,15 +23,13 @@ import org.apache.spark.sql.functions._
   *     whole corpus and
   *     writes ONE skinny table under `dir`:
   *       `sigs/` (id LONG, m0..m{n-1} LONG) — numHashes longs/doc,
-  *     then commits an `INDEX_READY` marker (format version, params,
-  *     corpus fingerprint) LAST: a killed build leaves no readable
-  *     index, and `load` refuses a markerless dir.
+  *     then commits the `INDEX_READY` marker (format version, params,
+  *     corpus fingerprint).
   *   - `append` signs ONLY the new documents (the hash family is
   *     content-deterministic — md5 of the shingle text — so appended
   *     signatures are bit-identical to what a full rebuild would
-  *     produce) and parquet-appends them; the marker gains a
-  *     `+append[fingerprint]` line so single-corpus freshness checks
-  *     see the mutation.
+  *     produce) and parquet-appends them under a
+  *     `+append[fingerprint]` stamp.
   *   - `probe` answers an incoming batch from the INDEX ALONE: sign
   *     the batch (the only text work is batch-sized), derive band keys
   *     map-side on BOTH sides from the skinny signature rows, bucket
@@ -53,9 +51,7 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB posture: the index is numHashes longs per document
   * (~0.03% of a 1 KB-doc corpus); probe shuffles only band keys and
-  * signature rows of candidates. Maintenance is single-writer
-  * (exclusive lease) exactly like `AnnIndex`; concurrent probes never
-  * take the lease.
+  * signature rows of candidates.
   *
   * Reference anchor: the reference engine's dedup story is exact
   * row-level (`main.gs:240-249` filters); this is the scale path the
@@ -63,16 +59,10 @@ import org.apache.spark.sql.functions._
   */
 object MinHashIndex {
 
-  private val Marker = "INDEX_READY"
-  private val Lease = ".MAINT_LEASE"
   private val FormatVersion = 1
 
-  private def withLease[T](spark: SparkSession, dir: String)
-      (body: => T): T =
-    IndexFs.withLease(spark, dir, Lease, "MinHash index")(body)
-
-  private def readMarker(spark: SparkSession, dir: String)
-      : Option[String] = IndexFs.readMarker(spark, dir, Marker)
+  private[graft] val core = new IndexLifecycle("minhash", "MinHash index")
+  private val groups = new GroupsLifecycle(core, FormatVersion)
 
   /** Index geometry, recorded in the marker. `grams` selects the
     * shingle unit: "word3" (word 3-grams — `Dedup.shingleRows`, the
@@ -137,44 +127,30 @@ object MinHashIndex {
   def build(corpus: DataFrame, idCol: String, textCol: String,
       dir: String, numHashes: Int = 32, bands: Int = 8,
       fingerprint: String = "", grams: String = "word3"): Unit =
-    withLease(corpus.sparkSession, dir) {
+    core.withLease(corpus.sparkSession, dir) {
       require(numHashes % bands == 0,
         s"bands=$bands must divide numHashes=$numHashes")
       require(GramsUnits(grams), s"unknown shingle unit '$grams'")
       val spark = corpus.sparkSession
-      // lift the marker FIRST (the AnnIndex doBuild discipline): the
-      // rebuild overwrites sigs/ over a corpus-scan-long window, and a
-      // crash mid-overwrite — or a concurrent probe, which never takes
-      // the lease — must see "no committed index", never the previous
-      // geometry's marker over mixed tables
-      IndexFs.hfs(spark, dir)
-        .delete(IndexFs.hpath(dir, Marker), false)
+      core.liftMarker(spark, dir)
       signatures(corpus, idCol, textCol, Meta(numHashes, bands, grams))
         .write.mode("overwrite").parquet(s"$dir/sigs")
       // a rebuild retires queued tombstones AND the streaming segment:
       // both referred to the previous index's contents
-      IndexFs.hfs(spark, dir)
-        .delete(IndexFs.hpath(dir, "deletes"), true)
-      IndexFs.hfs(spark, dir)
-        .delete(IndexFs.hpath(dir, "sigs_stream"), true)
-      IndexFs.writeMarker(spark, dir, Marker,
+      core.remove(spark, dir, "deletes", "sigs_stream")
+      core.writeMarker(spark, dir,
         markerText(numHashes, bands, grams, fingerprint))
     }
 
-  /** Rebuild iff the marker is missing or its params/corpus
-    * fingerprint changed — a metadata check, never a corpus scan.
-    * @return true iff a rebuild ran.
-    */
+  /** [[IndexLifecycle.ensureBuilt]] at these params; true iff built. */
   def ensureBuilt(corpus: DataFrame, idCol: String, textCol: String,
       dir: String, numHashes: Int = 32, bands: Int = 8,
-      fingerprint: String = "", grams: String = "word3"): Boolean = {
-    val want = markerText(numHashes, bands, grams, fingerprint)
-    val fresh = readMarker(corpus.sparkSession, dir).contains(want)
-    if (!fresh)
+      fingerprint: String = "", grams: String = "word3"): Boolean =
+    core.ensureBuilt(corpus.sparkSession, dir,
+        markerText(numHashes, bands, grams, fingerprint)) {
       build(corpus, idCol, textCol, dir, numHashes, bands, fingerprint,
         grams)
-    !fresh
-  }
+    }
 
   /** Sign ONLY `df` with the committed index's (content-deterministic)
     * hash family and shingle unit and parquet-append the rows; the
@@ -185,34 +161,26 @@ object MinHashIndex {
     */
   def append(df: DataFrame, idCol: String, textCol: String,
       dir: String, fingerprint: String = ""): Unit =
-    withLease(df.sparkSession, dir) {
+    core.withLease(df.sparkSession, dir) {
       val spark = df.sparkSession
-      val prev = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed MinHash index at $dir — build first"))
-      signatures(df, idCol, textCol, paramsOf(prev, dir))
+      signatures(df, idCol, textCol,
+          paramsOf(core.committed(spark, dir), dir))
         .write.mode("append").parquet(s"$dir/sigs")
-      IndexFs.writeMarker(spark, dir, Marker,
-        prev + s"\n+append[$fingerprint]")
+      core.stamp(spark, dir, core.appendLine(fingerprint))
     }
 
-  /** Idempotent build+append composition: serve-only when the marker
-    * already records exactly this (base, extra) history.
+  /** [[IndexLifecycle.ensureBuiltWithAppend]]: build `base`, append
+    * `extra`; true iff built.
     */
   def ensureBuiltWithAppend(base: DataFrame, extra: DataFrame,
       idCol: String, textCol: String, dir: String, numHashes: Int = 32,
       bands: Int = 8, fingerprint: String = "",
-      grams: String = "word3"): Boolean = {
-    val want = markerText(numHashes, bands, grams, fingerprint) +
-      s"\n+append[$fingerprint]"
-    val fresh = readMarker(base.sparkSession, dir).contains(want)
-    if (!fresh) {
+      grams: String = "word3"): Boolean =
+    core.ensureBuiltWithAppend(base.sparkSession, dir,
+        markerText(numHashes, bands, grams, fingerprint), fingerprint) {
       build(base, idCol, textCol, dir, numHashes, bands, fingerprint,
         grams)
-      append(extra, idCol, textCol, dir, fingerprint)
-    }
-    !fresh
-  }
+    }(append(extra, idCol, textCol, dir, fingerprint))
 
   private def paramsOf(marker: String, dir: String): Meta = {
     val m =
@@ -226,27 +194,18 @@ object MinHashIndex {
     Meta(m.group(2).toInt, m.group(3).toInt, m.group(4))
   }
 
-  /** The committed signature table (queued tombstones anti-joined
-    * away) and its params. Refuses a markerless dir — a killed build
-    * is unreadable by construction.
+  /** The committed signature table (streaming segment unioned,
+    * tombstones anti-joined) and its params.
     */
   def load(spark: SparkSession, dir: String): (Meta, DataFrame) = {
-    val marker = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed MinHash index at $dir"))
-    val meta = paramsOf(marker, dir)
-    val fs = IndexFs.hfs(spark, dir)
+    val meta = paramsOf(core.committed(spark, dir), dir)
     val base = spark.read.parquet(s"$dir/sigs")
     val unioned =
-      if (!fs.exists(IndexFs.hpath(dir, "sigs_stream"))) base
+      if (!core.has(spark, dir, "sigs_stream")) base
       else base.unionByName(
         spark.read.parquet(s"$dir/sigs_stream").select(base.columns
           .map(col).toIndexedSeq: _*))
-    val sigs =
-      if (!fs.exists(IndexFs.hpath(dir, "deletes"))) unioned
-      else unioned.join(spark.read.parquet(s"$dir/deletes"), Seq("id"),
-        "left_anti")
-    (meta, sigs)
+    (meta, core.withoutDeletes(spark, dir, unioned))
   }
 
   /** STREAMING index ingest — the online half of the lifecycle:
@@ -265,33 +224,21 @@ object MinHashIndex {
     * state store, no shuffle: this is the AnnIndex.ingestStream shape
     * for text.
     *
-    * The ingest is a WRITER, so it participates in the single-writer
-    * protocol (ADVICE r14): it holds the maintenance lease for the
-    * query's whole lifetime — a concurrent build/compact fail-fasts
-    * instead of deleting the segment under the live sink — and stamps
-    * a `+ingest` marker line up front so `ensureBuilt` freshness
-    * checks see the mutation (stamped at START: if the stream ingests
-    * nothing the index merely looks stale — a spurious-but-safe
-    * rebuild, never a fresh-looking mutated index). The lease is
-    * released within ~1 s of the query terminating (stop it, then run
-    * compact); a crashed driver leaves it for [[breakLease]].
+    * The ingest is a writer: it holds the lease for its lifetime and
+    * stamps `+ingest` ([[IndexLifecycle]]); stop it, then compact.
     */
   def ingestStream(stream: DataFrame, idCol: String, textCol: String,
       dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = stream.sparkSession
-    val marker = readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed MinHash index at $dir — build first"))
-    val meta = paramsOf(marker, dir)
+    val meta = paramsOf(core.committed(spark, dir), dir)
     val hs = meta.grams match {
       case "word3" => Dedup.shingleHashesCol(col(textCol))
       case "char5" => Dedup.charGramHashesCol(col(textCol), n = 5)
       case other => throw new IllegalStateException(
         s"index at $dir has unknown shingle unit '$other'")
     }
-    IndexFs.withStreamLease(spark, dir, Lease, "MinHash index") {
-      IndexFs.writeMarker(spark, dir, Marker, marker + "\n+ingest")
+    core.ingest(spark, dir) {
       stream
         .select(idLong(col(idCol)).as("id"), hs.as("__hs"))
         .filter(size(col("__hs")) > 0)
@@ -305,85 +252,48 @@ object MinHashIndex {
     }
   }
 
-  /** Force-break a CRASHED writer's orphaned maintenance lease — see
-    * [[IndexFs.breakLease]] (refuses while the holder's heartbeat is
-    * live; re-reads the committed marker under the post-break state
-    * as the fencing step).
-    *
-    * @return the marker committed at `dir` after the break; None means
-    *         the crashed writer died pre-commit — rebuild before use
+  /** Break a crashed writer's stale lease ([[IndexFs.breakLease]]);
+    * None = no committed marker, rebuild before use.
     */
   def breakLease(spark: SparkSession, dir: String,
       staleMillis: Long = IndexFs.DefaultStaleMillis): Option[String] =
-    IndexFs.breakLease(spark, dir, Lease, Marker, staleMillis)
+    core.breakLease(spark, dir, staleMillis)
 
-  /** Tombstone ids out of the index: queued in a skinny `deletes/`
-    * table that every probe path anti-joins on the fly, physically
-    * folded in by [[compact]] or the next full [[build]]. Marker
-    * FIRST (a crash between the two steps forces a spurious-but-safe
-    * rebuild, never a fresh-looking index silently serving removed
-    * docs), ids localCheckpointed so the recorded count always equals
-    * the written rows — the AnnIndex.delete discipline.
+  /** Tombstone ids out of the index ([[IndexLifecycle]]'s queue): every
+    * probe path anti-joins them; [[compact]] or a [[build]] folds them.
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    withLease(spark, dir) {
-      val prev = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed MinHash index at $dir — nothing to delete " +
-            "from"))
-      val skinny = ids.select(ids.columns.head).toDF("id")
-        .select(idLong(col("id")).as("id"))
-        .localCheckpoint(true)
-      val n = skinny.count()
-      IndexFs.writeMarker(spark, dir, Marker, prev + s"\n+delete[$n]")
-      skinny.write.mode("append").parquet(s"$dir/deletes")
-    }
+    core.delete(spark, dir, ids, idLong)
 
-  def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    delete(spark, dir, ids.toDF("id"))
-  }
+  def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    core.delete(spark, dir, ids, idLong)
 
   /** Offline maintenance: rewrite the signature table without queued
     * tombstones, with the streaming segment folded in (stop any
     * running [[ingestStream]] first; the next ingest needs a FRESH
     * checkpoint — its sink log is retired with the segment), and with
     * healthy file sizes (every [[append]] adds files; a long-lived
-    * ingest index accumulates small files). Result-invisible: probes
-    * are identical before and after (they already unioned the segment
-    * and anti-joined the queue). Staged through `sigs_tmp` + rename
-    * with the marker LIFTED during the swap — a crash mid-swap leaves
-    * an unreadable-by-construction index, never a half-swapped one.
+    * ingest index accumulates small files). Staged through
+    * `sigs_tmp` + rename with the marker lifted across the swap; the
+    * compaction rules are [[IndexLifecycle]]'s.
     *
     * @return signature rows kept
     */
   def compact(spark: SparkSession, dir: String): Long =
-    withLease(spark, dir) {
-      val fs = IndexFs.hfs(spark, dir)
-      val marker = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed MinHash index at $dir"))
-      val delPath = IndexFs.hpath(dir, "deletes")
-      val segPath = IndexFs.hpath(dir, "sigs_stream")
-      val hasDel = fs.exists(delPath)
-      val hasSeg = fs.exists(segPath)
+    core.compact(spark, dir) {
+      val marker = core.committed(spark, dir)
       // the folded frame IS what probes read — reuse load()'s
       // segment-union + tombstone-anti-join so the "result-invisible"
       // guarantee can't drift from the serve path
       val kept = load(spark, dir)._2
       kept.write.mode("overwrite").parquet(s"$dir/sigs_tmp")
-      IndexFs.fail("minhash.compact.staged")
-      fs.delete(IndexFs.hpath(dir, Marker), false)
-      IndexFs.fail("minhash.compact.unmarked")
-      fs.delete(IndexFs.hpath(dir, "sigs"), true)
-      if (!fs.rename(IndexFs.hpath(dir, "sigs_tmp"),
-          IndexFs.hpath(dir, "sigs")))
-        throw new java.io.IOException(
-          s"could not swap compacted sigs table at $dir")
-      if (hasSeg) fs.delete(segPath, true)
-      if (hasDel) fs.delete(delPath, true)
-      IndexFs.fail("minhash.compact.swapped")
-      IndexFs.writeMarker(spark, dir, Marker, marker)
+      core.fail("compact.staged")
+      core.liftMarker(spark, dir)
+      core.fail("compact.unmarked")
+      core.swapStaged(spark, dir, "sigs")
+      core.remove(spark, dir, "sigs_stream", "deletes")
+      core.fail("compact.swapped")
+      core.writeMarker(spark, dir, marker)
       spark.read.parquet(s"$dir/sigs").count()
     }
 
@@ -407,10 +317,15 @@ object MinHashIndex {
     */
   def bandedSignatures(spark: SparkSession, dir: String): DataFrame = {
     val (meta, sigs) = load(spark, dir)
-    sigs.select(col("id"), posexplode(
+    bandRows(sigs, meta)
+  }
+
+  /** (id, band, bk): one row per LSH band of each signature row. */
+  private def bandRows(sigs: DataFrame, meta: Meta,
+      id: Column = col("id")): DataFrame =
+    sigs.select(id, posexplode(
       Dedup.bandKeys(meta.bands, meta.numHashes / meta.bands))
       .as(Seq("band", "bk")))
-  }
 
   /** All (batch doc, indexed doc) pairs whose ESTIMATED Jaccard —
     * MinHash component agreement / numHashes — reaches `threshold`.
@@ -422,22 +337,27 @@ object MinHashIndex {
       dir: String, threshold: Double, hotCap: Int = 4096,
       salts: Int = 16): DataFrame = {
     val (meta, sigs) = load(incoming.sparkSession, dir)
-    val numHashes = meta.numHashes
-    val rowsPerBand = numHashes / meta.bands
     // the batch signature frame feeds a band leg and the agreement
     // join; checkpoint so the batch text is shingled once
     val sigNew = signatures(incoming, idCol, textCol, meta)
       .localCheckpoint(false)
-    def banded(sig: DataFrame, as: String) =
-      sig.select(col("id").as(as),
-        posexplode(Dedup.bandKeys(meta.bands, rowsPerBand))
-          .as(Seq("band", "bk")))
-    val cand = Dedup.bucketJoinPairs(banded(sigNew, "id_a"),
-        banded(sigs, "id_b"), hotCap, salts, ordered = false)
+    val cand = Dedup.bucketJoinPairs(
+        bandRows(sigNew, meta, col("id").as("id_a")),
+        bandRows(sigs, meta, col("id").as("id_b")), hotCap, salts,
+        ordered = false)
       .distinct()
-    val a = sigNew.select(col("id").as("id_a") +:
+    agreementScored(cand, sigNew, sigs, meta.numHashes, threshold)
+  }
+
+  /** Candidate pairs (id_a from `sigA`, id_b from `sigB`) scored by
+    * MinHash agreement / numHashes: (id_a, id_b, est_jaccard) at
+    * est_jaccard >= `threshold`.
+    */
+  private def agreementScored(cand: DataFrame, sigA: DataFrame,
+      sigB: DataFrame, numHashes: Int, threshold: Double): DataFrame = {
+    val a = sigA.select(col("id").as("id_a") +:
       (0 until numHashes).map(i => col(s"m$i").as(s"a$i")): _*)
-    val b = sigs.select(col("id").as("id_b") +:
+    val b = sigB.select(col("id").as("id_b") +:
       (0 until numHashes).map(i => col(s"m$i").as(s"b$i")): _*)
     val agree = (0 until numHashes)
       .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
@@ -465,18 +385,7 @@ object MinHashIndex {
   def pairs(spark: SparkSession, dir: String, threshold: Double,
       hotCap: Int = 4096, salts: Int = 16): DataFrame = {
     val (meta, sigs, cand) = bandedCandidates(spark, dir, hotCap, salts)
-    val numHashes = meta.numHashes
-    val a = sigs.select(col("id").as("id_a") +:
-      (0 until numHashes).map(i => col(s"m$i").as(s"a$i")): _*)
-    val b = sigs.select(col("id").as("id_b") +:
-      (0 until numHashes).map(i => col(s"m$i").as(s"b$i")): _*)
-    val agree = (0 until numHashes)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        (agree.cast("double") / numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    agreementScored(cand, sigs, sigs, meta.numHashes, threshold)
   }
 
   /** Shared candidate generation of the corpus-wide pair paths: the
@@ -488,11 +397,8 @@ object MinHashIndex {
       hotCap: Int, salts: Int): (Meta, DataFrame, DataFrame) = {
     val (meta, sigs0) = load(spark, dir)
     val sigs = sigs0.localCheckpoint(false)
-    val banded = sigs.select(col("id"),
-      posexplode(
-        Dedup.bandKeys(meta.bands, meta.numHashes / meta.bands))
-        .as(Seq("band", "bk")))
-    (meta, sigs, Dedup.bucketPairs(banded, hotCap, salts).distinct())
+    (meta, sigs,
+      Dedup.bucketPairs(bandRows(sigs, meta), hotCap, salts).distinct())
   }
 
   /** [[pairs]]' candidates EXACT-verified — the index-served
@@ -518,9 +424,7 @@ object MinHashIndex {
     // EQUAL to the mining leg rather than approximately so
     val (meta, cand0) =
       if (estThreshold > 0) {
-        val m = paramsOf(readMarker(spark, dir).getOrElse(
-          throw new IllegalStateException(
-            s"no committed MinHash index at $dir")), dir)
+        val m = paramsOf(core.committed(spark, dir), dir)
         (m, pairs(spark, dir, estThreshold, hotCap, salts))
       } else {
         val (m, _, c) = bandedCandidates(spark, dir, hotCap, salts)
@@ -546,17 +450,27 @@ object MinHashIndex {
     val sh = shingles(
       corpus.join(candIds, Seq(idCol), "left_semi"), idCol, textCol,
       meta).localCheckpoint(false)
+    exactJaccard(cand, sh, sh, threshold)
+  }
+
+  /** Exact Jaccard of candidate pairs (id_a, id_b) over the (id,
+    * shingle) rows of each side: (id_a, id_b, jaccard) at jaccard >=
+    * `threshold`.
+    */
+  private def exactJaccard(cand: DataFrame, shA: DataFrame,
+      shB: DataFrame, threshold: Double): DataFrame = {
     val inter = cand
-      .join(sh.select(col("id").as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("shingle")),
+      .join(shA.select(col("id").as("id_a"), col("shingle")), "id_a")
+      .join(shB.select(col("id").as("id_b"), col("shingle")),
         Seq("id_b", "shingle"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val cnt = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    val cntA = shA.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    val cntB = shB.groupBy(col("id")).agg(count(lit(1)).as("n"))
     inter
-      .join(cnt.select(col("id").as("id_a"), col("n").as("na")),
+      .join(cntA.select(col("id").as("id_a"), col("n").as("na")),
         "id_a")
-      .join(cnt.select(col("id").as("id_b"), col("n").as("nb")),
+      .join(cntB.select(col("id").as("id_b"), col("n").as("nb")),
         "id_b")
       .select(col("id_a"), col("id_b"),
         (col("n_inter").cast("double") /
@@ -591,10 +505,7 @@ object MinHashIndex {
   def verifyPairs(cand0: DataFrame, incoming: DataFrame,
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       threshold: Double): DataFrame = {
-    val spark = incoming.sparkSession
-    val meta = paramsOf(readMarker(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed MinHash index at $dir")), dir)
+    val meta = paramsOf(core.committed(incoming.sparkSession, dir), dir)
     val cand = cand0.select("id_a", "id_b").localCheckpoint(false)
     val shNew = shingles(
       incoming.join(cand.select(col("id_a").as(idCol)).distinct(),
@@ -602,263 +513,70 @@ object MinHashIndex {
     val shCor = shingles(
       corpus.join(cand.select(col("id_b").as(idCol)).distinct(),
         Seq(idCol), "left_semi"), idCol, textCol, meta)
-    val inter = cand
-      .join(shNew.select(col("id").as("id_a"), col("shingle")), "id_a")
-      .join(shCor.select(col("id").as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val cntNew = shNew.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val cntCor = shCor.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    inter
-      .join(cntNew.select(col("id").as("id_a"), col("n").as("na")),
-        "id_a")
-      .join(cntCor.select(col("id").as("id_b"), col("n").as("nb")),
-        "id_b")
-      .select(col("id_a"), col("id_b"),
-        (col("n_inter").cast("double") /
-          (col("na") + col("nb") - col("n_inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    exactJaccard(cand, shNew, shCor, threshold)
   }
 
-  // --- near-dup GROUPS at rest -------------------------------------
-  //
-  // dedup_groups re-mines every pair and re-runs connected components
-  // over the WHOLE corpus on every invocation. The group structure
-  // only changes when the corpus does, and an arriving batch can only
-  // (a) join existing groups, (b) form new ones, or (c) MERGE
-  // existing groups it bridges — all three are decided by the batch's
-  // pairs alone. So groups get the same at-rest treatment as the
-  // signatures: buildGroups commits the full CC labels once;
-  // appendGroups folds a just-appended batch in by running CC over
-  // the SUPER-NODE graph (one node per touched existing group label
-  // or new id — bounded by the batch's reach, never corpus-sized)
-  // and relabeling only members of merged groups (a broadcast-sized
-  // label map). The result is EQUAL to a full re-mine + CC by
-  // construction: existing components stay internally connected, and
-  // the new edges are exactly the pairs a full mine would add
-  // (probeVerified at estThreshold=0 sees every banded candidate of
-  // the batch, batch-internal ones included once the batch is in the
-  // index) — pinned by sharing dedup_groups' oracle and by the
-  // rebuild-equality spec.
+  // --- near-dup GROUPS at rest ([[GroupsLifecycle]]) ---------------
+  // Pair miners: [[pairsVerified]] over the corpus; [[probeVerified]]
+  // of the batch at estThreshold=0, which sees every banded candidate
+  // of the batch (batch-internal ones included once the batch is in
+  // the index); and the banded self-join + exact verify confined to
+  // the touched members' at-rest signatures. Pinned by sharing
+  // dedup_groups' oracle and by the rebuild-equality specs.
 
-  private val GroupsMarker = "GROUPS_READY"
+  private def groupsParams(threshold: Double): String =
+    s"threshold=$threshold"
 
-  private def groupsMarkerText(indexMarker: String,
-      threshold: Double): String =
-    s"format=$FormatVersion threshold=$threshold " +
-      s"index[${IndexFs.markerDigest(indexMarker)}]"
-
-  /** The incremental-fold precondition — see [[IndexFs.requireFoldable]]:
-    * the committed GROUPS_READY digests a PREFIX of the index marker
-    * and the next un-folded line is the mutation kind being folded, so
-    * a multi-mutation suffix folds as a sequence of bounded folds in
-    * marker order (r17). Returns the groups-marker text this fold
-    * stamps — the digest advanced by exactly the one folded line.
-    */
-  private def requireFoldable(spark: SparkSession, dir: String,
-      idx: String, threshold: Double, op: String,
-      accept: String => Boolean, expected: String): String =
-    IndexFs.requireFoldable(spark, dir, GroupsMarker, idx, op, accept,
-      expected, prev => groupsMarkerText(prev, threshold))
-
-  /** The committed groups marker and whether it digests the CURRENT
-    * index marker — the ops-CLI staleness view (None = no groups
-    * table committed).
-    */
+  /** [[GroupsLifecycle]]'s staleness view (None = no groups table). */
   def groupsStatus(spark: SparkSession, dir: String)
-      : Option[(String, Boolean)] =
-    IndexFs.readMarker(spark, dir, GroupsMarker).map { gm =>
-      val cur = readMarker(spark, dir).map(IndexFs.markerDigest)
-      (gm, cur.exists(d => gm.contains(s"index[$d]")))
-    }
+      : Option[(String, Boolean)] = IndexLifecycle.groupsStatus(spark, dir)
 
-  /** True iff a committed groups table exists AND matches the CURRENT
-    * index marker (any append/delete/ingest since it was built flips
-    * the digest) at this `threshold`. Compaction preserves the marker
-    * text and is result-invisible, so groups stay fresh across it.
+  /** True iff a committed groups table matches the CURRENT index
+    * marker at this `threshold`.
     */
   def groupsFresh(spark: SparkSession, dir: String,
       threshold: Double): Boolean =
-    readMarker(spark, dir).exists { idx =>
-      IndexFs.readMarker(spark, dir, GroupsMarker)
-        .contains(groupsMarkerText(idx, threshold))
-    }
+    groups.fresh(spark, dir, groupsParams(threshold))
 
-  /** The committed groups table: (id, label) for every document in
-    * some near-dup pair; label = min id of its group. Unpaired docs
-    * are absent (their group is trivially themselves).
+  /** The committed groups table: (id, label), label = min id of the
+    * group; unpaired docs are absent.
     */
-  def readGroups(spark: SparkSession, dir: String): DataFrame = {
-    require(IndexFs.readMarker(spark, dir, GroupsMarker).nonEmpty,
-      s"no committed groups table at $dir (missing $GroupsMarker)")
-    spark.read.parquet(s"$dir/groups")
-  }
+  def readGroups(spark: SparkSession, dir: String): DataFrame =
+    groups.read(spark, dir)
 
-  /** Full connected-components pass over [[pairsVerified]]'s exact
-    * pairs, committed as the at-rest `groups/` table. Marker LAST,
-    * digesting the index marker it was built against.
-    */
+  /** Full connected components over [[pairsVerified]]'s exact pairs. */
   def buildGroups(corpus: DataFrame, idCol: String, textCol: String,
       dir: String, threshold: Double): Unit =
-    withLease(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      val want = groupsMarkerText(readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed MinHash index at $dir — build first")),
-        threshold)
-      IndexFs.hfs(spark, dir)
-        .delete(IndexFs.hpath(dir, GroupsMarker), false)
-      graft.operators.ConnectedComponents.labels(
-          pairsVerified(corpus, idCol, textCol, dir, threshold)
-            .select(col("id_a"), col("id_b")))
-        .write.mode("overwrite").parquet(s"$dir/groups")
-      IndexFs.writeMarker(spark, dir, GroupsMarker, want)
+    groups.build(corpus.sparkSession, dir, groupsParams(threshold)) {
+      pairsVerified(corpus, idCol, textCol, dir, threshold)
     }
 
-  /** Fold a JUST-APPENDED batch into the committed groups table
-    * incrementally — no corpus-wide re-mine, no corpus-wide CC.
-    * Preconditions: the batch's signatures are already in the index
-    * ([[append]] or a compacted ingest), `corpus` is the full
-    * post-append corpus (the exact-verify side reads candidate text
-    * from it), and a groups table is committed.
-    *
-    * Work is bounded by the batch's reach: one [[probeVerified]]
-    * (batch-sized probe, candidate-only verify), CC over the
-    * super-node graph (touched group labels + newly-paired ids), and
-    * a relabel join against the label map. Result equals a full
-    * rebuild's labels — the min of a merged component is the min over
-    * its super-node ids, since every member id >= its group's label.
-    *
-    * STALENESS is checked against the fold ORDER (ADVICE r15,
-    * relaxed to mutation suffixes in r17 — VERDICT r16 #4): the
-    * committed GROUPS_READY must digest a prefix of the index marker
-    * whose NEXT line is an `+append`/`+ingest` — the batch being
-    * folded. A multi-mutation suffix (append, append, delete) folds
-    * as a sequence of bounded calls in marker order, each advancing
-    * the groups digest by one line; folding out of order (the next
-    * un-folded line is a `+delete`) throws toward [[deleteGroups]] /
-    * [[buildGroups]]. The caller passes the batch MATCHING the next
-    * un-folded line — the fold machinery verifies order and kind, the
-    * batch contents are the caller's contract (as before).
-    *
-    * With later mutations still queued, note the probe side reads the
-    * index AS IT IS — later-appended signatures participate as
-    * candidate partners and queued tombstones are anti-joined
-    * ([[load]]) even before their own folds run. Every pair that adds
-    * is one the final rebuild has, and the remaining folds add the
-    * rest, so the DRAINED sequence equals a full [[buildGroups]]
-    * (spec-pinned); intermediate states are valid conservative
-    * approximations of their prefix.
+  /** Fold a JUST-APPENDED batch (already in the index; `corpus` is the
+    * full post-append corpus the verify reads text from). With later
+    * mutations queued, the probe reads the index as it is — every pair
+    * it adds is one the final rebuild has, so the drained sequence
+    * equals [[buildGroups]].
     */
   def appendGroups(batch: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, dir: String, threshold: Double): Unit =
-    withLease(batch.sparkSession, dir) {
-      val spark = batch.sparkSession
-      val fs = IndexFs.hfs(spark, dir)
-      val idx = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed MinHash index at $dir — build first"))
-      val stamp = requireFoldable(spark, dir, idx, threshold,
-        "appendGroups",
-        l => l.startsWith("+append[") || l == "+ingest",
-        "+append/+ingest")
-      val newPairs = probeVerified(batch, corpus, idCol, textCol,
-          dir, threshold, estThreshold = 0.0)
-        .select(col("id_a"), col("id_b"))
-      // super-node CC fold + relabel (shared with AnnIndex.appendGroups);
-      // EAGER checkpoint: the update reads groups/ and then overwrites it
-      val updated = graft.operators.ConnectedComponents
-        .foldIncrement(spark.read.parquet(s"$dir/groups"), newPairs)
-        .localCheckpoint(true)
-      fs.delete(IndexFs.hpath(dir, GroupsMarker), false)
-      IndexFs.fail("minhash.groups.unmarked")
-      updated.write.mode("overwrite").parquet(s"$dir/groups")
-      IndexFs.fail("minhash.groups.written")
-      IndexFs.writeMarker(spark, dir, GroupsMarker, stamp)
+    groups.foldAppend(batch.sparkSession, dir, groupsParams(threshold)) {
+      probeVerified(batch, corpus, idCol, textCol, dir, threshold,
+        estThreshold = 0.0)
     }
 
-  /** Fold a JUST-QUEUED [[delete]] into the committed groups table
-    * incrementally — the dual of [[appendGroups]]. A delete can SPLIT
-    * a group (removing a bridge doc disconnects its component), which
-    * the append fold's super-node trick cannot express; instead
-    * components are recomputed ONLY over the touched groups' surviving
-    * members — bounded by group reach, never corpus-sized:
-    *
-    *   - touched groups = groups with a tombstoned member; untouched
-    *     groups cannot change (a pair between a touched-group member
-    *     and an untouched-group one would have put them in ONE group
-    *     already — pairwise Jaccard doesn't depend on other docs);
-    *   - the re-mine is the banded self-join + exact verify CONFINED
-    *     to the touched groups' surviving members (their at-rest
-    *     signatures semi-joined, tombstones already anti-joined by
-    *     [[load]]), so its cost is |touched members|, and every pair a
-    *     full rebuild would find among them is found (both endpoints
-    *     are in the confined set — see the untouched argument above);
-    *   - untouched rows carry over verbatim; re-mined components get
-    *     min-id labels (equal to a full rebuild's: each component is a
-    *     subset of the confined set, so its min is unchanged); members
-    *     left unpaired drop out, matching the "unpaired docs are
-    *     absent" contract.
-    *
-    * Preconditions (the [[appendGroups]] suffix-walk, dual): the
-    * next un-folded marker line after the prefix GROUPS_READY digests
-    * must be a `+delete[n]` — out-of-order folds throw toward the
-    * matching fold / [[buildGroups]]. `corpus` is the post-delete
-    * corpus (the verify leg re-reads candidate text from it;
-    * tombstoned docs may be present or absent — they are excluded by
-    * id either way). The `deletes/` queue is applied IN FULL at every
-    * fold (tombstones are authoritative), so with several deletes
-    * queued an earlier delete's fold may re-mine a later delete's
-    * touched groups early — that later fold then finds its groups
-    * already clean and no-ops for them; the drained sequence equals a
-    * full rebuild (pinned in MinHashIndexSpec, including a bridge
-    * delete that splits a group and a 3-mutation
-    * append/append/delete sequence).
+  /** Fold a JUST-QUEUED [[delete]]; `corpus` is the post-delete corpus
+    * (tombstoned docs may be present — they are excluded by id).
     */
   def deleteGroups(corpus: DataFrame, idCol: String, textCol: String,
       dir: String, threshold: Double, hotCap: Int = 4096,
       salts: Int = 16): Unit =
-    withLease(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      val fs = IndexFs.hfs(spark, dir)
-      val idx = readMarker(spark, dir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed MinHash index at $dir — build first"))
-      val stamp = requireFoldable(spark, dir, idx, threshold,
-        "deleteGroups", l => l.startsWith("+delete["), "+delete[n]")
-      val g = spark.read.parquet(s"$dir/groups")
-        .localCheckpoint(false)
-      val del = spark.read.parquet(s"$dir/deletes").select(col("id"))
-      val touched = g.join(del, Seq("id"), "left_semi")
-        .select(col("label")).distinct()
-      // surviving members of touched groups — the confined re-mine
-      // universe; EAGER: reads groups/, which the fold overwrites
-      val members = g.join(touched, Seq("label"), "left_semi")
-        .join(del, Seq("id"), "left_anti")
-        .select(col("id"))
-        .localCheckpoint(true)
-      val (meta, sigs) = load(spark, dir) // tombstones anti-joined
+    groups.foldDelete(corpus.sparkSession, dir,
+        groupsParams(threshold)) { members =>
+      val (meta, sigs) = load(corpus.sparkSession, dir)
       val sigsM = sigs.join(members, Seq("id"), "left_semi")
         .localCheckpoint(false)
-      val banded = sigsM.select(col("id"),
-        posexplode(
-          Dedup.bandKeys(meta.bands, meta.numHashes / meta.bands))
-          .as(Seq("band", "bk")))
-      val cand = Dedup.bucketPairs(banded, hotCap, salts).distinct()
-      val relabeled = graft.operators.ConnectedComponents.labels(
-          verifyPairs(corpus, idCol, textCol, meta, cand, threshold)
-            .select(col("id_a"), col("id_b")))
-        .localCheckpoint(true)
-      // shared delete-fold relabel (with AnnIndex.deleteGroups);
-      // EAGER: reads groups/, which the write below overwrites
-      val updated = graft.operators.ConnectedComponents
-        .foldDelete(g, touched, relabeled)
-        .localCheckpoint(true)
-      fs.delete(IndexFs.hpath(dir, GroupsMarker), false)
-      IndexFs.fail("minhash.groups.unmarked")
-      updated.write.mode("overwrite").parquet(s"$dir/groups")
-      IndexFs.fail("minhash.groups.written")
-      IndexFs.writeMarker(spark, dir, GroupsMarker, stamp)
+      verifyPairs(corpus, idCol, textCol, meta,
+        Dedup.bucketPairs(bandRows(sigsM, meta), hotCap, salts)
+          .distinct(), threshold)
     }
 }

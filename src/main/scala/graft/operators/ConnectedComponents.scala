@@ -124,75 +124,4 @@ object ConnectedComponents {
     }
     labels
   }
-
-  /** Incremental fold of NEW edges into a committed (id, label)
-    * groups table — the batch-append CC shared by the MinHash and ANN
-    * groups lifecycles. New edges can only (a) join existing groups,
-    * (b) form new ones, or (c) MERGE groups they bridge, so CC runs
-    * over the SUPER-NODE graph (each endpoint replaced by its
-    * committed label, or itself when unlabeled — bounded by the new
-    * edges' reach, never corpus-sized) and members of merged groups
-    * relabel through the resulting label map. Equal to a full
-    * rebuild's labels: existing components stay internally connected,
-    * and the min of a merged component is the min over its super-node
-    * ids since every member id >= its group's label.
-    *
-    * @param groups committed (id, label) — label = min id of group
-    * @param newPairs new undirected edges (id_a, id_b), self-loops
-    *                 allowed (dropped)
-    * @return the updated (id, label), lazily planned — callers
-    *         materialize before overwriting the groups table
-    */
-  def foldIncrement(groups: DataFrame, newPairs: DataFrame)
-      : DataFrame = {
-    val g = groups.localCheckpoint(false)
-    val superEdges = newPairs
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .join(g.select(col("id").as("id_a"), col("label").as("__la")),
-        Seq("id_a"), "left")
-      .join(g.select(col("id").as("id_b"), col("label").as("__lb")),
-        Seq("id_b"), "left")
-      .select(coalesce(col("__la"), col("id_a")).as("id_a"),
-        coalesce(col("__lb"), col("id_b")).as("id_b"))
-      .filter(col("id_a") =!= col("id_b"))
-    val comp = labels(superEdges).localCheckpoint(true)
-    // members of touched groups relabel through the (old label ->
-    // final label) map; super-nodes that were never members (batch
-    // ids, previously-unpaired ids) enter as fresh rows
-    val relabeled = g
-      .join(comp.select(col("id").as("label"),
-        col("label").as("__nl")), Seq("label"), "left")
-      .select(col("id"),
-        coalesce(col("__nl"), col("label")).as("label"))
-    val freshRows = comp
-      .join(g.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("label"))
-    relabeled.unionByName(freshRows)
-  }
-
-  /** The delete-fold relabel shared by the groups lifecycles: given
-    * the committed (id, label) groups, the TOUCHED group labels (those
-    * that lost a member), and the freshly recomputed (id, label)
-    * components over the touched groups' survivors, produce the
-    * updated groups — untouched rows keep their label, touched rows
-    * take their re-mined label or DROP when left unpaired (the
-    * "unpaired docs are absent" contract; deleted ids are touched and
-    * never re-mined, so they drop too). One join-based relabel over
-    * `groups` — NOT a union of the untouched and re-mined halves
-    * (Union over those join-derived children trips Catalyst's union
-    * constraint rewriting even behind checkpoints). Lazily planned —
-    * callers materialize before overwriting the groups table.
-    */
-  def foldDelete(groups: DataFrame, touchedLabels: DataFrame,
-      relabeled: DataFrame): DataFrame =
-    groups
-      .join(touchedLabels.select(col("label"))
-        .withColumn("__t", lit(true)), Seq("label"), "left")
-      .join(relabeled.select(col("id"), col("label").as("__nl")),
-        Seq("id"), "left")
-      .filter(col("__t").isNull || col("__nl").isNotNull)
-      .select(col("id"),
-        when(col("__t").isNotNull, col("__nl"))
-          .otherwise(col("label")).as("label"))
 }

@@ -398,21 +398,12 @@ object StreamingOps {
     * a test failure, not a silent un-guarded stream.
     */
   def withGenerationGuard(df: DataFrame, indexDir: String,
-      marker: String = "INDEX_READY"): DataFrame = {
+      marker: String = graft.ext.IndexLifecycle.Marker): DataFrame = {
     val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/$marker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
+    val text = graft.ext.IndexLifecycle.marker(spark, indexDir, marker)
+    require(text.nonEmpty,
       s"no committed index marker at $indexDir/$marker — build first")
-    val bytes = {
-      val in = fs.open(p)
-      try {
-        val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(b); b
-      } finally in.close()
-    }
-    val expect = java.security.MessageDigest.getInstance("MD5")
-      .digest(bytes).map("%02x".format(_)).mkString
+    val expect = graft.ext.IndexLifecycle.digest(text.get)
     val guard = spark.read.format("binaryFile")
       .load(s"$indexDir/$marker")
       .select(when(md5(col("content")) === lit(expect), lit(1))

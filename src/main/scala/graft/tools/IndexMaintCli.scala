@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import org.apache.hadoop.fs.Path
 
-import graft.ext.{AnnIndex, BloomIndex, MinHashIndex}
+import graft.ext.{AnnIndex, BloomIndex, IndexLifecycle, MinHashIndex}
 
 /** Operational CLI for the three persisted-index families — the
   * documented form of the maintenance ops their scaladocs promise
@@ -36,15 +36,49 @@ import graft.ext.{AnnIndex, BloomIndex, MinHashIndex}
   * groups lifecycle (`buildGroups` / `appendGroups` / `deleteGroups`).
   * A MULTI-mutation marker folds as a sequence of `groups-append` /
   * `groups-delete` calls IN MARKER ORDER, one bounded fold per
-  * mutation line (r17 — `IndexFs.requireFoldable` walks the suffix);
-  * a fold whose kind does not match the next un-folded line refuses
-  * loudly. `groups` alone reports freshness.
+  * mutation line; a fold whose kind does not match the next un-folded
+  * line refuses loudly, and `compact` refuses while a `+delete` is
+  * un-folded (`graft.ext.IndexLifecycle` describes the protocol).
+  * `groups` alone reports freshness.
   */
 object IndexMaintCli {
 
   private val SideDirs = Seq("codes", "codes_stream", "sigs",
     "sigs_stream", "bitmap", "keys", "keys_stream", "deletes",
     "coarse", "codebooks", "meta", "groups")
+
+  /** One index family as the CLI drives it; `groups` is None for a
+    * family without groups at rest (Bloom).
+    */
+  private final case class Kind(core: IndexLifecycle,
+      compact: (SparkSession, String) => Long,
+      groups: Option[GroupsOps])
+
+  /** (corpus, idCol, contentCol, dir, threshold) for build/delete;
+    * append takes the batch first.
+    */
+  private final case class GroupsOps(
+      build: (DataFrame, String, String, String, Double) => Unit,
+      append: (DataFrame, DataFrame, String, String, String, Double) =>
+        Unit,
+      delete: (DataFrame, String, String, String, Double) => Unit)
+
+  private val Kinds: Map[String, Kind] = Map(
+    "ann" -> Kind(AnnIndex.core, AnnIndex.compactSegment,
+      Some(GroupsOps(AnnIndex.buildGroups(_, _, _, _, _),
+        AnnIndex.appendGroups(_, _, _, _, _, _),
+        AnnIndex.deleteGroups(_, _, _, _, _)))),
+    "minhash" -> Kind(MinHashIndex.core, MinHashIndex.compact,
+      Some(GroupsOps(MinHashIndex.buildGroups, MinHashIndex.appendGroups,
+        MinHashIndex.deleteGroups(_, _, _, _, _)))),
+    "bloom" -> Kind(BloomIndex.core, BloomIndex.compact, None))
+
+  private def kindOf(name: String): Kind = Kinds.getOrElse(name,
+    sys.error(s"unknown index kind '$name' (ann | minhash | bloom)"))
+
+  private def groupsOf(name: String): GroupsOps =
+    kindOf(name).groups.getOrElse(sys.error(
+      s"index kind '$name' has no groups at rest (ann | minhash)"))
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -64,59 +98,35 @@ object IndexMaintCli {
     spark.stop()
   }
 
-  private def run(spark: SparkSession, args: Seq[String]): Unit =
+  private[tools] def run(spark: SparkSession, args: Seq[String]): Unit =
     args match {
       case Seq("status", dir) =>
         status(spark, dir)
       case Seq("compact", kind, dir) =>
-        val kept = kind match {
-          case "ann" => AnnIndex.compactSegment(spark, dir)
-          case "minhash" => MinHashIndex.compact(spark, dir)
-          case "bloom" => BloomIndex.compact(spark, dir)
-          case other => sys.error(s"unknown index kind '$other' " +
-            "(ann | minhash | bloom)")
-        }
+        val kept = kindOf(kind).compact(spark, dir)
         println(s"[index-maint] compacted $kind index at $dir: " +
           s"$kept rows at rest")
       case Seq("break-lease", kind, dir) =>
-        breakLease(spark, kind, dir, None)
+        leaseBroken(dir, kindOf(kind).core.breakLease(spark, dir))
       case Seq("break-lease", kind, dir, stale) =>
-        breakLease(spark, kind, dir, Some(stale.toLong))
+        leaseBroken(dir,
+          kindOf(kind).core.breakLease(spark, dir, stale.toLong))
       case Seq("groups", kind, dir) =>
-        groupsReport(spark, kind, dir)
+        groupsOf(kind)
+        groupsReport(spark, dir)
       case Seq("groups-build", kind, dir, corpus, idCol, cCol, thr) =>
-        kind match {
-          case "minhash" => MinHashIndex.buildGroups(
-            spark.read.parquet(corpus), idCol, cCol, dir, thr.toDouble)
-          case "ann" => AnnIndex.buildGroups(
-            spark.read.parquet(corpus), idCol, cCol, dir, thr.toDouble)
-          case other => sys.error(s"unknown groups kind '$other' " +
-            "(ann | minhash)")
-        }
+        groupsOf(kind).build(spark.read.parquet(corpus), idCol, cCol,
+          dir, thr.toDouble)
         println(s"[index-maint] groups built for $kind index at $dir")
       case Seq("groups-append", kind, dir, batch, corpus, idCol, cCol,
           thr) =>
-        kind match {
-          case "minhash" => MinHashIndex.appendGroups(
-            spark.read.parquet(batch), spark.read.parquet(corpus),
-            idCol, cCol, dir, thr.toDouble)
-          case "ann" => AnnIndex.appendGroups(
-            spark.read.parquet(batch), spark.read.parquet(corpus),
-            idCol, cCol, dir, thr.toDouble)
-          case other => sys.error(s"unknown groups kind '$other' " +
-            "(ann | minhash)")
-        }
+        groupsOf(kind).append(spark.read.parquet(batch),
+          spark.read.parquet(corpus), idCol, cCol, dir, thr.toDouble)
         println(s"[index-maint] batch folded into $kind groups at $dir")
       case Seq("groups-delete", kind, dir, corpus, idCol, cCol,
           thr) =>
-        kind match {
-          case "minhash" => MinHashIndex.deleteGroups(
-            spark.read.parquet(corpus), idCol, cCol, dir, thr.toDouble)
-          case "ann" => AnnIndex.deleteGroups(
-            spark.read.parquet(corpus), idCol, cCol, dir, thr.toDouble)
-          case other => sys.error(s"unknown groups kind '$other' " +
-            "(ann | minhash)")
-        }
+        groupsOf(kind).delete(spark.read.parquet(corpus), idCol, cCol,
+          dir, thr.toDouble)
         println(s"[index-maint] tombstones folded into $kind " +
           s"groups at $dir")
       case _ =>
@@ -128,17 +138,10 @@ object IndexMaintCli {
           "groups-delete <kind> <dir> <corpus> <idCol> <contentCol> <thr>")
     }
 
-  private def groupsReport(spark: SparkSession, kind: String,
-      dir: String): Unit = {
-    val st = kind match {
-      case "minhash" => MinHashIndex.groupsStatus(spark, dir)
-      case "ann" => AnnIndex.groupsStatus(spark, dir)
-      case other => sys.error(s"unknown groups kind '$other' " +
-        "(ann | minhash)")
-    }
-    st match {
+  private def groupsReport(spark: SparkSession, dir: String): Unit =
+    IndexLifecycle.groupsStatus(spark, dir) match {
       case Some((marker, fresh)) =>
-        println(s"[index-maint] $dir groups: GROUPS_READY " +
+        println(s"[index-maint] $dir groups: ${IndexLifecycle.GroupsMarker} " +
           (if (fresh) "(FRESH vs current index marker)"
            else "(STALE — index mutated since; fold the trailing " +
              "mutation with groups-append/groups-delete, or " +
@@ -148,21 +151,8 @@ object IndexMaintCli {
         println(s"[index-maint] $dir groups: ABSENT (groups-build " +
           "to create)")
     }
-  }
 
-  private def breakLease(spark: SparkSession, kind: String,
-      dir: String, staleMillis: Option[Long]): Unit = {
-    val marker = (kind, staleMillis) match {
-      case ("ann", Some(ms)) => AnnIndex.breakLease(spark, dir, ms)
-      case ("ann", None) => AnnIndex.breakLease(spark, dir)
-      case ("minhash", Some(ms)) =>
-        MinHashIndex.breakLease(spark, dir, ms)
-      case ("minhash", None) => MinHashIndex.breakLease(spark, dir)
-      case ("bloom", Some(ms)) => BloomIndex.breakLease(spark, dir, ms)
-      case ("bloom", None) => BloomIndex.breakLease(spark, dir)
-      case (other, _) => sys.error(s"unknown index kind '$other' " +
-        "(ann | minhash | bloom)")
-    }
+  private def leaseBroken(dir: String, marker: Option[String]): Unit =
     marker match {
       case Some(m) =>
         println(s"[index-maint] lease cleared at $dir (no-op if none" +
@@ -173,47 +163,28 @@ object IndexMaintCli {
           "marker — the crashed writer died pre-commit, rebuild " +
           "before serving")
     }
-  }
 
-  // status is read-only introspection, so it speaks Hadoop FS
-  // directly rather than widening the ext-private IndexFs primitives
   private def status(spark: SparkSession, dir: String): Unit = {
+    import IndexLifecycle.{GroupsMarker, Lease, Marker}
     val fs = new Path(dir).getFileSystem(
       spark.sessionState.newHadoopConf())
     println(s"[index-maint] $dir")
-    val marker = new Path(dir, "INDEX_READY")
-    if (fs.exists(marker)) {
-      println("  marker: INDEX_READY")
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().foreach(l => println(s"    $l"))
-      finally in.close()
-    } else
-      println("  marker: ABSENT (no committed index — build " +
-        "running, crashed, or never ran)")
-    val gmarker = new Path(dir, "GROUPS_READY")
-    if (fs.exists(gmarker)) {
-      // staleness = the digest recorded at build time vs the digest
-      // of the current index marker (the groupsStatus rule, kindless)
-      val gin = fs.open(gmarker)
-      val gtext =
-        try scala.io.Source.fromInputStream(gin, "UTF-8").mkString
-        finally gin.close()
-      val fresh = fs.exists(marker) && {
-        val in2 = fs.open(marker)
-        val itext =
-          try scala.io.Source.fromInputStream(in2, "UTF-8").mkString
-          finally in2.close()
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(itext.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        gtext.contains(s"index[$digest]")
-      }
-      println("  groups marker: GROUPS_READY " +
-        (if (fresh) "(FRESH)" else "(STALE vs current index marker)"))
-      gtext.linesIterator.foreach(l => println(s"    $l"))
-    } else println("  groups marker: ABSENT")
-    val lease = new Path(dir, ".MAINT_LEASE")
+    IndexLifecycle.marker(spark, dir) match {
+      case Some(text) =>
+        println(s"  marker: $Marker")
+        text.linesIterator.foreach(l => println(s"    $l"))
+      case None =>
+        println("  marker: ABSENT (no committed index — build " +
+          "running, crashed, or never ran)")
+    }
+    IndexLifecycle.groupsStatus(spark, dir) match {
+      case Some((gtext, fresh)) =>
+        println(s"  groups marker: $GroupsMarker " +
+          (if (fresh) "(FRESH)" else "(STALE vs current index marker)"))
+        gtext.linesIterator.foreach(l => println(s"    $l"))
+      case None => println("  groups marker: ABSENT")
+    }
+    val lease = new Path(dir, Lease)
     if (fs.exists(lease)) {
       val st = fs.getFileStatus(lease)
       val age = (System.currentTimeMillis() -

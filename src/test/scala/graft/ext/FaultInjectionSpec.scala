@@ -208,4 +208,146 @@ class FaultInjectionSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotA.contains(9L), s"recovered groups: $gotA")
   }
+
+  // -- the shared groups commit, injected from every fold -----------
+
+  private def mhCorpus() = {
+    val s = spark
+    import s.implicits._
+    def run(ws: Range): String = ws.map(i => s"w$i").mkString(" ")
+    val g1a = run(1 to 12); val g1b = g1a.replace("w12", "w12x")
+    val g2a = run(101 to 112); val g2b = g2a.replace("w112", "w112x")
+    Seq((1L, g1a), (2L, g1b), (10L, g1a), (20L, g2a), (21L, g2b))
+      .toDF("doc_id", "text")
+  }
+
+  private def annCorpus() = {
+    val s = spark
+    import s.implicits._
+    def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
+    Seq(
+      (0L, v(1, 0, 0, 0, 0, 0, 0, 0)),
+      (1L, v(0.99, 0.1, 0, 0, 0, 0, 0, 0)),
+      (2L, v(0, 0, 1, 0, 0, 0, 0, 0)),
+      (3L, v(0, 0, 0, 1, 0, 0, 0, 0)),
+      (4L, v(0, 0, 1, 0.05, 0, 0, 0, 0)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private def mhGroups(dir: String): Map[Long, Long] =
+    MinHashIndex.readGroups(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def annGroups(dir: String): Map[Long, Long] =
+    AnnIndex.readGroups(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def mhIndex(docs: org.apache.spark.sql.DataFrame,
+      dir: String): Unit =
+    MinHashIndex.build(docs, "doc_id", "text", dir,
+      numHashes = 32, bands = 32)
+
+  private def annIndex(dir: String): Unit =
+    AnnIndex.build(annCorpus(), "vec_id", "embedding", dir, nCells = 2,
+      m = 2, nCentroids = 4, iters = 1)
+
+  /** The crash left a groups-markerless dir: stale and refused. */
+  private def assertGroupsRefused(fresh: Boolean,
+      read: => Any): Unit = {
+    assert(!fresh, "a crashed groups commit must not look fresh")
+    val e = intercept[Exception](read)
+    assert(e.getMessage.contains("GROUPS_READY"), e.getMessage)
+  }
+
+  test("deleteGroups commit crash points (both families): readGroups " +
+      "refuses, groupsFresh is false, buildGroups recovers to labels " +
+      "equal to a rebuild") {
+    val s = spark
+    val post = mhCorpus().filter(col("doc_id") =!= 10L)
+    val mhRef = tmpDir()
+    mhIndex(post, mhRef)
+    MinHashIndex.buildGroups(post, "doc_id", "text", mhRef, 0.4)
+    for (label <- Seq("minhash.groups.unmarked",
+        "minhash.groups.written")) {
+      val dir = tmpDir()
+      mhIndex(mhCorpus(), dir)
+      MinHashIndex.buildGroups(mhCorpus(), "doc_id", "text", dir, 0.4)
+      MinHashIndex.delete(s, dir, Seq(10L))
+      crashAt(label) {
+        MinHashIndex.deleteGroups(post, "doc_id", "text", dir, 0.4)
+      }
+      assertGroupsRefused(MinHashIndex.groupsFresh(s, dir, 0.4),
+        MinHashIndex.readGroups(s, dir))
+      MinHashIndex.buildGroups(post, "doc_id", "text", dir, 0.4)
+      assert(MinHashIndex.groupsFresh(s, dir, 0.4))
+      assert(mhGroups(dir) == mhGroups(mhRef),
+        s"$label recovery labels: ${mhGroups(dir)}")
+    }
+    val aPost = annCorpus().filter(col("vec_id") =!= 4L)
+    val annRef = tmpDir()
+    annIndex(annRef)
+    AnnIndex.delete(s, annRef, Seq(4L))
+    AnnIndex.buildGroups(aPost, "vec_id", "embedding", annRef, 0.9,
+      probes = 2)
+    for (label <- Seq("ann.groups.unmarked", "ann.groups.written")) {
+      val dir = tmpDir()
+      annIndex(dir)
+      AnnIndex.buildGroups(annCorpus(), "vec_id", "embedding", dir, 0.9,
+        probes = 2)
+      AnnIndex.delete(s, dir, Seq(4L))
+      crashAt(label) {
+        AnnIndex.deleteGroups(aPost, "vec_id", "embedding", dir, 0.9,
+          probes = 2)
+      }
+      assertGroupsRefused(AnnIndex.groupsFresh(s, dir, 0.9, probes = 2),
+        AnnIndex.readGroups(s, dir))
+      AnnIndex.buildGroups(aPost, "vec_id", "embedding", dir, 0.9,
+        probes = 2)
+      assert(AnnIndex.groupsFresh(s, dir, 0.9, probes = 2))
+      assert(annGroups(dir) == annGroups(annRef),
+        s"$label recovery labels: ${annGroups(dir)}")
+    }
+  }
+
+  test("buildGroups commit crash points (both families): readGroups " +
+      "refuses, groupsFresh is false, buildGroups recovers to labels " +
+      "equal to a rebuild") {
+    val s = spark
+    val mhRef = tmpDir()
+    mhIndex(mhCorpus(), mhRef)
+    MinHashIndex.buildGroups(mhCorpus(), "doc_id", "text", mhRef, 0.4)
+    for (label <- Seq("minhash.groups.unmarked",
+        "minhash.groups.written")) {
+      val dir = tmpDir()
+      mhIndex(mhCorpus(), dir)
+      crashAt(label) {
+        MinHashIndex.buildGroups(mhCorpus(), "doc_id", "text", dir, 0.4)
+      }
+      assertGroupsRefused(MinHashIndex.groupsFresh(s, dir, 0.4),
+        MinHashIndex.readGroups(s, dir))
+      MinHashIndex.buildGroups(mhCorpus(), "doc_id", "text", dir, 0.4)
+      assert(MinHashIndex.groupsFresh(s, dir, 0.4))
+      assert(mhGroups(dir) == mhGroups(mhRef),
+        s"$label recovery labels: ${mhGroups(dir)}")
+    }
+    val annRef = tmpDir()
+    annIndex(annRef)
+    AnnIndex.buildGroups(annCorpus(), "vec_id", "embedding", annRef, 0.9,
+      probes = 2)
+    for (label <- Seq("ann.groups.unmarked", "ann.groups.written")) {
+      val dir = tmpDir()
+      annIndex(dir)
+      crashAt(label) {
+        AnnIndex.buildGroups(annCorpus(), "vec_id", "embedding", dir,
+          0.9, probes = 2)
+      }
+      assertGroupsRefused(AnnIndex.groupsFresh(s, dir, 0.9, probes = 2),
+        AnnIndex.readGroups(s, dir))
+      AnnIndex.buildGroups(annCorpus(), "vec_id", "embedding", dir, 0.9,
+        probes = 2)
+      assert(AnnIndex.groupsFresh(s, dir, 0.9, probes = 2))
+      assert(annGroups(dir) == annGroups(annRef),
+        s"$label recovery labels: ${annGroups(dir)}")
+    }
+  }
 }
