@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** The LAST stdout line, and the ONLY thing the driver reliably
     * sees: scalars only. The driver keeps a bounded stdout tail, and
@@ -57,57 +56,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binWidth", "auto")
-      .config("spark.graft.aggJoinToWindow", "true")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The per-query blocking unpersist below frees localCheckpoint
-    // blocks whose lineage is truncated by design — RDD.unpersist logs
-    // a WARN per block (hundreds per run, r11's tail was unreadable).
-    // Drop the rdd package to ERROR so a REAL warning stays visible.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // DAGScheduler's "Failed to update accumulator ... non-existent
-    // accumulator" ERROR bursts (VERDICT r12 #1) are LATE/CANCELLED
-    // task completions reporting SQLMetrics after their execution's
-    // accumulators were GC'd — r13 root-caused them as an in-query/
-    // cross-query phenomenon, not an unpersist race (bursts fire
-    // during plain warmup executions with no unpersist in sight; AQE
-    // re-optimization cancels already-submitted stages whose tasks
-    // then report; the between-query job cancellation below adds its
-    // own late completions — but NOT cancelling was measured 23%
-    // slower on the next timed queries as abandoned stragglers steal
-    // CPU, so cancel is correct and the reports must be silenced at
-    // the logger). They are metrics-display-only: results, timings,
-    // and failure detection are unaffected (a real job failure
-    // surfaces as the query's own exception → n_failed, and
-    // correctness is oracle-checked in Verify). AccumulatorContext
-    // WARNs about the same GC'd accumulators.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.FATAL)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.util.AccumulatorContext",
-      org.apache.logging.log4j.Level.ERROR)
-    // BENCH_r14's tail carried a stitched AnalysisException-looking
-    // stack while all passes succeeded: FileStreamSink.hasMetadata
-    // stats the LITERAL glob string of any globbed read (it was
-    // Xlsx.read's "<dir>/*.xlsx") and logs the FileNotFoundException
-    // at WARN with the caller stack. Root-caused and fixed at the
-    // source (Xlsx.read now loads the parent dir + pathGlobFilter);
-    // the logger is ALSO capped so no future globbed read can push
-    // the summary line out of the driver's bounded tail capture.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
     // Absorb one-time JVM/codegen/scheduler warmup outside the timed
     // loop. The flagship query warms the relational paths; the heavy
     // LSH/shingle/window machinery JITs separately and costs whichever
@@ -116,16 +65,8 @@ object Bench {
     // sf0.001 data (~2s total) so per-query numbers reflect the
     // engine, not Map iteration order. Skipped if the sibling warmup
     // dir does not exist.
-    // `prev` pins the previous query's DataFrame (hence its
-    // QueryExecution and SQLMetrics accumulators — AccumulatorContext
-    // holds only weak refs) until the next fence has drained: a
-    // straggler task reporting metrics after its accumulators are
-    // GC'd logs "Failed to update accumulator" at ERROR (VERDICT r12
-    // #1 — and r13 found cancelAllJobs() makes it WORSE by killing
-    // in-flight jobs whose tasks then report against torn-down
-    // stages). Passive fence instead: hold the reference, wait for
-    // active jobs to finish naturally, only then release and free
-    // blocks. Costs wall clock outside the timer, never poisons it.
+    // `prev` pins the previous query until the next fence has drained
+    // (see GraftSession.fence).
     var prev: org.apache.spark.sql.DataFrame = null
     try { prev = SparkEntry.entry(spark); prev.count() }
     catch { case _: Throwable => () }
@@ -192,12 +133,6 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     probeHost()
-    // NOTE (measured, round 5): do NOT System.gc() between queries to
-    // release old localCheckpoint blocks — the full collection kicks
-    // ContextCleaner into async removeBlocks/removeBroadcast storms
-    // that land INSIDE the next timed query (total 44s -> 137s,
-    // graph_pagerank 1.8s -> 11.2s). Block accumulation over 86
-    // queries costs far less than forced cleanup.
     // Passes run as full SWEEPS over the query list (pass 1 of every
     // query, then pass 2, ...), not back-to-back per query: this
     // host's noise arrives in tens-of-seconds hypervisor bursts
@@ -208,29 +143,7 @@ object Bench {
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val sweeps: Seq[Map[String, Double]] = (1 to passes).map { _ =>
       val sweep = names.map { case (name, fn) =>
-        // Drop the previous queries' localCheckpoint blocks (queries
-        // never share state — Tables reads fresh plans every call), so
-        // 100+ queries' worth of executor-storage blocks don't
-        // accumulate against the heavy queries late in the alphabet.
-        // BLOCKING: the async variant let block removal land INSIDE
-        // the next timed query — BENCH_SF1.md measured in-battery
-        // graph_pagerank at 8x its interleaved-sweep min from exactly
-        // this. The drain happens before t0, so it costs wall clock
-        // but never poisons a timer. (Still no System.gc(): the full
-        // collection's ContextCleaner storm measured 3x worse.)
-        // FENCE first (see `prev` above): anything still running is
-        // abandoned work from a finished query — cancel it (measured:
-        // letting stragglers run steals CPU from the next timed query,
-        // dedup_incremental +39%), drain, then release the previous
-        // query's accumulator pins and free its blocks.
-        spark.sparkContext.cancelAllJobs()
-        val fence = System.nanoTime() + 5000000000L
-        while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty
-            && System.nanoTime() < fence)
-          Thread.sleep(10)
-        prev = null
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = true))
+        GraftSession.fence(spark) { prev = null }
         val t0 = System.nanoTime()
         val ok = try { prev = fn(spark, sfDir); prev.count(); true }
                  catch { case _: Throwable => false }

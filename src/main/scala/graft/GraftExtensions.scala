@@ -12,9 +12,10 @@ import graft.functions.{BloomContains, DotDouble, KmvDistinct, QuantizeI8, SignB
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or programmatically via `SparkSession.builder.withExtensions`) —
-  * the idiomatic installation path for a Spark-native library; the
-  * per-session `register(spark)` helpers remain for ad-hoc use.
+  * (as `GraftSession` does, or programmatically via the builder's
+  * `withExtensions`) — the idiomatic installation path for a
+  * Spark-native library; the per-session `register(spark)` helpers
+  * remain for ad-hoc use.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.kmvDistinctBuilder

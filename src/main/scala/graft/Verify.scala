@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,61 +9,15 @@ object Verify {
     // re-check of just-changed queries. The driver passes 2 args.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // 4 threads by default — measured FASTER than 16 for the sf0.01
-    // gate (tiny partitions, task overhead dominates). For big scale
-    // factors set SPARK_GRAFT_CPUS=32: results are partitioning-
-    // invariant (ShuffleInvarianceSpec pins the whole battery), so
-    // thread count is purely a wall-clock knob.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // opt into the keyless-range-join rewrite; 10 min (µs) matches
-      // the event-window queries' interval length
-      .config("spark.graft.rangeJoin.binWidth", "auto")
-      .config("spark.graft.aggJoinToWindow", "true")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the blocking unpersist below WARNs once per freed localCheckpoint
-    // block (lineage truncated by design); keep real warnings readable
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // late/cancelled task completions reporting SQLMetrics against
-    // GC'd accumulators are metrics-display-only (see Bench for the
-    // r13 root-cause note); real failures surface as query exceptions
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.FATAL)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.util.AccumulatorContext",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // `prev` pins the previous query's SQLMetrics accumulators until
-    // the passive fence drains — same straggler race as Bench
-    // (VERDICT r12 #1; cancellation makes it worse, see Bench).
+    // `prev` pins the previous query until the next fence has drained
+    // (see GraftSession.fence).
     var prev: org.apache.spark.sql.DataFrame = null
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // queries never share state: drop the previous ones'
-      // localCheckpoint blocks so 90 queries' worth of executor
-      // storage doesn't accumulate (same fix as Bench — measured 30%
-      // off the whole-run wall clock there). Blocking, like Bench:
-      // async removal lands inside the NEXT query's jobs. Straggler
-      // fence first: cancel abandoned work, drain, release pins.
-      spark.sparkContext.cancelAllJobs()
-      val fence = System.nanoTime() + 5000000000L
-      while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty
-          && System.nanoTime() < fence)
-        Thread.sleep(10)
-      prev = null
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.fence(spark) { prev = null }
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite")

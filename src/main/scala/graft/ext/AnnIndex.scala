@@ -488,7 +488,8 @@ object AnnIndex {
     *
     * Approximate BY DESIGN: a true pair whose two sides never probe a
     * common cell is missed. `probes` is the recall/work knob —
-    * measured at sf1.0 against brute force (tools/PairRecall):
+    * measured at sf1.0 against brute force (BENCH_SF1.md, "Round-14
+    * addendum — p=8 headline + two-level assignment measured"):
     * p=4 → 0.52 recall / 11 s, p=6 → 0.75 / 25 s, p=8 → 0.89 / 33 s
     * (BEATING the sign-LSH leg's 0.87 / 52 s on both axes), p=12 →
     * 0.98 / 148 s; precision is always 1.0 (exact verify). The
@@ -516,10 +517,10 @@ object AnnIndex {
     * probed is missed); superProbes = 0 keeps the exact flat ranking,
     * and superProbes ≥ nSuper is EXACTLY the flat ranking by
     * construction (the union of all supers' children is all cells).
-    * MEASURED at sf1.0 (nCells=160, tools/PairRecall r14): p8 recall
-    * 0.765@sp3 / 0.808@sp4 / 0.839@sp6 / 0.862@sp8 vs flat 0.887,
-    * with the hierarchy's fixed stage costs still exceeding 160
-    * map-side dots — so below ~10³ cells flat wins on BOTH axes and
+    * MEASURED at sf1.0 (nCells=160, BENCH_SF1.md round-14 addendum):
+    * p8 recall 0.765@sp3 / 0.808@sp4 / 0.839@sp6 / 0.862@sp8 vs flat
+    * 0.887, with the hierarchy's fixed stage costs still exceeding
+    * 160 map-side dots — so below ~10³ cells flat wins on BOTH axes and
     * the default stays 0; the hierarchy is the nCells ≫ 10³ route
     * where the flat projection is both O(nCells)/row and
     * uncompilable. AnnIndexSpec pins confinement (candidates never
@@ -1001,7 +1002,8 @@ object AnnIndex {
     // Probe-cell selection follows the MARKER-RECORDED hierarchy
     // (r16, closing the r15 flat-assignment seam): a flat index ranks
     // ALL nCells per query row (crossJoin + window — exact, but the
-    // measured super-linear shape past ~1k cells, TwoLevelBench),
+    // measured super-linear shape past ~1k cells, BENCH_SF1.md
+    // "Two-level break-even MEASURED at nCells ≥ 1024"),
     // while a hier>0 index routes through probeCells' super→children
     // path VERBATIM — O(hier·√nCells) candidate rows per query, the
     // same tree build/append/ingest encode with, so probe cells at

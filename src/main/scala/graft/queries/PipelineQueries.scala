@@ -771,8 +771,9 @@ object PipelineQueries {
     // The HEADLINE operating point: probes=8 is where the indexed
     // route beats the sign-LSH leg on BOTH axes (recall 0.887 vs
     // 0.868, wall-clock 34 s vs 52 s — re-measured r14 at sf1.0 with
-    // tools/PairRecall) — oracle-checked here so the configuration
-    // production would actually run is itself hash-verified.
+    // PairRecall, BENCH_SF1.md round-14 addendum) — oracle-checked
+    // here so the configuration production would actually run is
+    // itself hash-verified.
     "dedup_embed_ann_p8" -> ((s, d) => {
       val (dir, emb) = annIndexFor(s, d)
       graft.ext.AnnIndex.cosinePairsIndexed(emb, "vec_id",
@@ -788,9 +789,10 @@ object PipelineQueries {
     // that stays narrow at ANY nCells (broadcast child table, not an
     // nCells-wide codegen expression — the flat projection hits
     // Janino limits in the thousands of cells). MEASURED at sf1.0
-    // (nCells=160, tools/PairRecall r14): the hierarchy costs recall
-    // at equal probes (p8: 0.765@sp3 … 0.862@sp8 vs flat 0.887) and
-    // its constant factors only amortize at much larger nCells, so
+    // (nCells=160, BENCH_SF1.md round-14 addendum): the hierarchy
+    // costs recall at equal probes (p8: 0.765@sp3 … 0.862@sp8 vs flat
+    // 0.887) and its constant factors only amortize at much larger
+    // nCells, so
     // the HEADLINE queries above keep the flat ranking and this query
     // pins the at-scale route's correctness (assignment confinement +
     // sp>=nSuper==flat also spec'd in AnnIndexSpec). The oracle
@@ -3354,7 +3356,7 @@ object PipelineQueries {
     * and the embeddings frame it indexes. nCells = max(16, N/125), N
     * read from parquet footers — equal to a count() with no action.
     */
-  private def annIndexFor(s: SparkSession, d: String)
+  private[graft] def annIndexFor(s: SparkSession, d: String)
       : (String, DataFrame) = {
     val (dir, fp) = annIndexDir(s, d, "_dedup")
     val emb = embeddings(s, d)

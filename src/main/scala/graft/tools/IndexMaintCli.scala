@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import org.apache.hadoop.fs.Path
 
+import graft.GraftSession
 import graft.ext.{AnnIndex, BloomIndex, IndexLifecycle, MinHashIndex}
 
 /** Operational CLI for the three persisted-index families — the
@@ -47,11 +48,12 @@ object IndexMaintCli {
     "sigs_stream", "bitmap", "keys", "keys_stream", "deletes",
     "coarse", "codebooks", "meta", "groups")
 
-  /** One index family as the CLI drives it; `groups` is None for a
-    * family without groups at rest (Bloom).
+  /** One index family as the CLI drives it; `compacted` names what
+    * `compact`'s count counts, and `groups` is None for a family
+    * without groups at rest (Bloom).
     */
   private final case class Kind(core: IndexLifecycle,
-      compact: (SparkSession, String) => Long,
+      compact: (SparkSession, String) => Long, compacted: String,
       groups: Option[GroupsOps])
 
   /** (corpus, idCol, contentCol, dir, threshold) for build/delete;
@@ -65,13 +67,16 @@ object IndexMaintCli {
 
   private val Kinds: Map[String, Kind] = Map(
     "ann" -> Kind(AnnIndex.core, AnnIndex.compactSegment,
+      "rows moved from the streaming segment",
       Some(GroupsOps(AnnIndex.buildGroups(_, _, _, _, _),
         AnnIndex.appendGroups(_, _, _, _, _, _),
         AnnIndex.deleteGroups(_, _, _, _, _)))),
     "minhash" -> Kind(MinHashIndex.core, MinHashIndex.compact,
+      "rows at rest in sigs/",
       Some(GroupsOps(MinHashIndex.buildGroups, MinHashIndex.appendGroups,
         MinHashIndex.deleteGroups(_, _, _, _, _)))),
-    "bloom" -> Kind(BloomIndex.core, BloomIndex.compact, None))
+    "bloom" -> Kind(BloomIndex.core, BloomIndex.compact, "keys at rest",
+      None))
 
   private def kindOf(name: String): Kind = Kinds.getOrElse(name,
     sys.error(s"unknown index kind '$name' (ann | minhash | bloom)"))
@@ -81,13 +86,7 @@ object IndexMaintCli {
       s"index kind '$name' has no groups at rest (ann | minhash)"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     try run(spark, args.toSeq)
     catch {
       case e: Exception =>
@@ -103,9 +102,9 @@ object IndexMaintCli {
       case Seq("status", dir) =>
         status(spark, dir)
       case Seq("compact", kind, dir) =>
-        val kept = kindOf(kind).compact(spark, dir)
+        val k = kindOf(kind)
         println(s"[index-maint] compacted $kind index at $dir: " +
-          s"$kept rows at rest")
+          s"${k.compact(spark, dir)} ${k.compacted}")
       case Seq("break-lease", kind, dir) =>
         leaseBroken(dir, kindOf(kind).core.breakLease(spark, dir))
       case Seq("break-lease", kind, dir, stale) =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.etl.{Engine, EngineConfig}
 
 /** CLI analog of the reference's one entry point, `runMapping()`
@@ -14,15 +14,7 @@ object RunMappingCli {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: RunMappingCli <sheets-dir>")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-run-mapping")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(master = sys.env.get("SPARK_MASTER"))
     try {
       val config =
         if (new java.io.File(s"$dir/Dashboard.csv").exists())

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.etl.{Engine, EngineConfig}
 import graft.streaming.StreamingOps
 
@@ -29,15 +28,7 @@ object RunMappingStreamCli {
       "usage: RunMappingStreamCli <sheets-dir> [maxFilesPerTrigger]")
     val dir = args(0)
     val maxFiles = if (args.length == 2) args(1).toInt else 1000
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-run-mapping-stream")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(master = sys.env.get("SPARK_MASTER"))
     try {
       val config =
         if (new java.io.File(s"$dir/Dashboard.csv").exists())

@@ -74,20 +74,9 @@ object SparkSpec {
   /** Jobs (call sites) and SQL plans a block ran; see `sparkWorkOf`. */
   case class Work(jobs: Seq[String], plans: Seq[String])
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binWidth", "auto")
-      .config("spark.graft.aggJoinToWindow", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** local[4] whatever `SPARK_GRAFT_CPUS` says (the test command
+    * exports the host's core count): specs pin partition counts and
+    * plan shapes at 4.
+    */
+  lazy val session: SparkSession = GraftSession.local(cpus = 4)
 }

@@ -248,4 +248,16 @@ class IndexMaintCliSpec extends SparkSpec {
       .contains("usage"))
     assert(cli("status", dir).contains("  marker: ABSENT"))
   }
+
+  test("compact ann: a tombstone-only fold reports the rows moved from " +
+      "the streaming segment, not \"0 rows at rest\"") {
+    val dir = s"${tmp()}/ann"
+    AnnIndex.build(vectors(0L to 4L: _*), "vec_id", "embedding", dir,
+      nCells = 2, m = 2, nCentroids = 4, iters = 1)
+    AnnIndex.delete(spark, dir, Seq(4L))
+    val out = cli("compact", "ann", dir)
+    assert(out.contains(s"compacted ann index at $dir: 0 rows moved " +
+      "from the streaming segment") && !out.contains("rows at rest"), out)
+    assert(!exists(dir, "deletes"))
+  }
 }
