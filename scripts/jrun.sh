@@ -2,6 +2,8 @@
 # Run a graft main class directly on the compiled classes + Spark jars,
 # bypassing sbt (avoids the project lock; same add-opens as build.sbt).
 # Usage: scripts/jrun.sh <mainClass> [args...]
+# Runs the classes of the checkout this script lives in.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 MAIN="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -18,5 +20,5 @@ exec java \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

@@ -5,48 +5,27 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.ext.RollingHash64
-import graft.functions.{BloomContains, DotDouble, KmvDistinct, QuantizeI8, SignBands}
+import graft.functions.{BloomContains, BpeReplay, CdcChunks, CdcCuts, DotDouble,
+  KmvDistinct, PqBestCodes, QuantizeI8, SignBands}
 
-/** Spark extensions entry point: registers the library's native
-  * Catalyst expressions as SQL functions. Enable with
+/** Spark extensions entry point: installs the library's native
+  * Catalyst expressions as SQL functions, and its optimizer rules and
+  * planner strategy. Enable with
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (as `GraftSession` does, or programmatically via the builder's
-  * `withExtensions`) — the idiomatic installation path for a
-  * Spark-native library; the per-session `register(spark)` helpers
-  * remain for ad-hoc use.
+  * `withExtensions`) — the one installation path for the SQL names.
+  * The Column API (`DotDouble.dot_double`, ...) builds the same
+  * expressions directly and needs no installed name.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.kmvDistinctBuilder
+  import GraftExtensions.functions
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash64"),
-      new ExpressionInfo(classOf[RollingHash64].getName, "rolling_hash64"),
-      (children: Seq[Expression]) => RollingHash64(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dot_double"),
-      new ExpressionInfo(classOf[DotDouble].getName, "dot_double"),
-      (children: Seq[Expression]) => DotDouble(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("quantize_i8"),
-      new ExpressionInfo(classOf[QuantizeI8].getName, "quantize_i8"),
-      (children: Seq[Expression]) => QuantizeI8(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("sign_bands"),
-      new ExpressionInfo(classOf[SignBands].getName, "sign_bands"),
-      (children: Seq[Expression]) =>
-        SignBands(children(0), children(1), children(2), children(3))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-      (children: Seq[Expression]) => BloomContains(children(0),
-        children(1), children(2), children(3), children(4))))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[KmvDistinct].getName, "kmv_distinct"),
-      kmvDistinctBuilder))
+    for ((name, cls, builder) <- functions)
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
     // Keyless BETWEEN joins → binned equi-joins (opt-in via
     // spark.graft.rangeJoin.binWidth; see plans/RangeJoinRewrite).
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
@@ -70,8 +49,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** Every graft SQL function: name, expression class, builder. */
+  private val functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash64", classOf[RollingHash64], c => RollingHash64(c(0))),
+    ("dot_double", classOf[DotDouble], c => DotDouble(c(0), c(1))),
+    ("quantize_i8", classOf[QuantizeI8], c => QuantizeI8(c(0))),
+    ("sign_bands", classOf[SignBands],
+      c => SignBands(c(0), c(1), c(2), c(3))),
+    ("pq_best_codes", classOf[PqBestCodes],
+      c => PqBestCodes(c(0), c(1), c(2), c(3))),
+    ("bloom_contains", classOf[BloomContains],
+      c => BloomContains(c(0), c(1), c(2), c(3), c(4))),
+    ("bpe_replay", classOf[BpeReplay], c => BpeReplay(c(0), c(1))),
+    ("cdc_cuts", classOf[CdcCuts], c => CdcCuts(c(0), c(1), c(2))),
+    ("cdc_chunks", classOf[CdcChunks], c => CdcChunks(c(0), c(1), c(2))),
+    ("kmv_distinct", classOf[KmvDistinct], kmvDistinctBuilder))
+
   /** SQL builder for `kmv_distinct(col, k)`. The k argument must be
-    * collapsed to an Int at registration time (it sizes the
+    * collapsed to an Int when the call is built (it sizes the
     * aggregate's bounded state), so every malformed call — wrong
     * arity, non-foldable k, NULL, non-numeric, k < 2 — is rejected
     * HERE with a clean AnalysisException naming the function, rather

@@ -134,12 +134,12 @@ object AnnIndex {
       // (the rebuilt corpus is the source of truth)
       core.remove(spark, dir, "codes_stream", "deletes")
       val cellDf = df.select(col(idCol).cast("long").as("id"),
-        cellCol(df, col(vecCol), coarse, hier).as("cell"))
+        cellCol(col(vecCol), coarse, hier).as("cell"))
       val aD = col("a").cast("array<double>")
       codes
         .select(col("id"),
-          Similarity.dot(df, aD, aD).cast("long").as("naa"),
-          Similarity.pqBestCol(codes, cents, m, nCentroids, sub).as("bc"))
+          Similarity.dot(aD, aD).cast("long").as("naa"),
+          Similarity.pqBestCol(cents, m, nCentroids, sub).as("bc"))
         .join(cellDf, "id")
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/codes")
@@ -223,10 +223,10 @@ object AnnIndex {
         x => round(x * 127.0 / meta.scale).cast("int")).as("a"))
     val aD = col("a").cast("array<double>")
     withA.select(col("id"),
-      Similarity.dot(df, aD, aD).cast("long").as("naa"),
-      Similarity.pqBestCol(withA, cents, meta.m, meta.nCentroids,
-        meta.sub).as("bc"),
-      cellCol(df, col("__v"), coarse, meta.hier).as("cell"))
+      Similarity.dot(aD, aD).cast("long").as("naa"),
+      Similarity.pqBestCol(cents, meta.m, meta.nCentroids, meta.sub)
+        .as("bc"),
+      cellCol(col("__v"), coarse, meta.hier).as("cell"))
   }
 
   /** Cell assignment shared by BUILD, batch APPEND and STREAMING
@@ -240,10 +240,10 @@ object AnnIndex {
     * route for the nCells ∝ N regime where the flat projection is
     * both O(nCells)/row and Janino-uncompilable (r14 addendum).
     */
-  private def cellCol(df: DataFrame, vec: Column,
-      coarse: Seq[Seq[Float]], hier: Int): Column =
-    if (hier <= 0) Similarity.ivfCell(df, vec, coarse)
-    else hierCellCol(df, vec, coarse, hier)
+  private def cellCol(vec: Column, coarse: Seq[Seq[Float]],
+      hier: Int): Column =
+    if (hier <= 0) Similarity.ivfCell(vec, coarse)
+    else hierCellCol(vec, coarse, hier)
 
   /** MAP-SIDE two-level cell assignment (top-1 of the chosen supers'
     * children): the super ranking is the same codegen'd √nCells-wide
@@ -259,8 +259,8 @@ object AnnIndex {
     * fold) and the same (dot DESC, cell ASC) tie-break as every other
     * assignment path.
     */
-  private[graft] def hierCellCol(df: DataFrame, vec: Column,
-      coarse: Seq[Seq[Float]], sp: Int): Column = {
+  private[graft] def hierCellCol(vec: Column, coarse: Seq[Seq[Float]],
+      sp: Int): Column = {
     val nSuper = superCount(coarse.size)
     // child -> super via childAssignments — EXACTLY probeCells'
     // driver-side rule, so a probe-side hierarchy and an encode-side
@@ -268,7 +268,7 @@ object AnnIndex {
     val childrenBySuper: Map[Int, Seq[Int]] =
       childAssignments(coarse).groupBy(_._1).view
         .mapValues(_.map(_._2)).toMap
-    val chosen = topSupersCol(df, vec, coarse, sp)
+    val chosen = topSupersCol(vec, coarse, sp)
     val childType = "array<struct<c:int,cv:array<double>>>"
     val childrenLit = array((0 until nSuper).map { s =>
       val kids = childrenBySuper.getOrElse(s, Nil)
@@ -281,7 +281,7 @@ object AnnIndex {
     val cands = flatten(transform(chosen,
       s => element_at(childrenLit, s + 1)))
     val best = array_min(transform(cands, ch =>
-      struct((-Similarity.dot(df, vec, ch("cv"))).as("d"),
+      struct((-Similarity.dot(vec, ch("cv"))).as("d"),
         ch("c").as("c"))))
     best("c").cast("int")
   }
@@ -571,7 +571,7 @@ object AnnIndex {
         // construction: a pair sharing k >= 1 cells matches the filter
         // for exactly the smallest of them.
         val withSet = n.select(col("id"),
-          flatProbeCellsCol(n, col("v"), coarse, probes).as("__cells"))
+          flatProbeCellsCol(col("v"), coarse, probes).as("__cells"))
         val probeF = withSet.select(col("id"), col("__cells"),
           explode(col("__cells")).as("cell"))
         probeF
@@ -593,22 +593,22 @@ object AnnIndex {
           .repartition(wp, col("id_a"), col("id_b"))
           .distinct()
       }
-    cosineVerified(corpus, cand, n, threshold)
+    cosineVerified(cand, n, threshold)
   }
 
   /** Exact cosine of candidate pairs (id_a, id_b) against the (id, v,
     * nrm) rows of `n`: (id_a, id_b, cos) at cos >= `threshold` — the
     * verify leg of every pair miner here.
     */
-  private def cosineVerified(corpus: DataFrame, cand: DataFrame,
-      n: DataFrame, threshold: Double): DataFrame =
+  private def cosineVerified(cand: DataFrame, n: DataFrame,
+      threshold: Double): DataFrame =
     cand
       .join(n.select(col("id").as("id_a"), col("v").as("va"),
         col("nrm").as("na")), "id_a")
       .join(n.select(col("id").as("id_b"), col("v").as("vb"),
         col("nrm").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        (Similarity.dot(corpus, col("va"), col("vb")) /
+        (Similarity.dot(col("va"), col("vb")) /
           (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= threshold)
 
@@ -627,7 +627,7 @@ object AnnIndex {
     val spark = n.sparkSession
     if (superProbes <= 0) {
       n.select(col("id"),
-        explode(flatProbeCellsCol(n, col("v"), coarse, probes))
+        explode(flatProbeCellsCol(col("v"), coarse, probes))
           .as("cell"), col("v"))
     } else {
       import spark.implicits._
@@ -637,7 +637,7 @@ object AnnIndex {
       // (the same left fold as the SQL replay — bit-identical doubles)
       val childDf = childAssignments(coarse).toDF("__sup", "cell", "__cv")
       // top-`superProbes` supers per row: a √nCells-wide struct sort
-      val psup = topSupersCol(n, col("v"), coarse, superProbes)
+      val psup = topSupersCol(col("v"), coarse, superProbes)
       val byId = Window.partitionBy("id")
         .orderBy(desc("__d"), col("cell"))
       // pin the rank window's exchange at work width (guide §2.5 via
@@ -649,7 +649,7 @@ object AnnIndex {
       n.select(col("id"), col("v"), explode(psup).as("__sup"))
         .join(broadcast(childDf), "__sup")
         .select(col("id"), col("cell"), col("v"),
-          Similarity.dot(n, col("v"), col("__cv")).as("__d"))
+          Similarity.dot(col("v"), col("__cv")).as("__d"))
         .repartition(ScanSpread.workParts(n), col("id"))
         .withColumn("__rn", row_number().over(byId))
         .filter(col("__rn") <= probes)
@@ -681,13 +681,13 @@ object AnnIndex {
     * √nCells-wide struct sort shared by every hierarchical ranking
     * (same dot arithmetic and (dot DESC, super ASC) tie-break).
     */
-  private def topSupersCol(df: DataFrame, vec: Column,
-      coarse: Seq[Seq[Float]], sp: Int): Column = {
+  private def topSupersCol(vec: Column, coarse: Seq[Seq[Float]],
+      sp: Int): Column = {
     val supers = coarse.take(superCount(coarse.size))
     val ssorted = array_sort(array(supers.zipWithIndex.map {
       case (sv, s) =>
         val sl = array(sv.map(x => lit(x.toDouble)): _*)
-        struct((-Similarity.dot(df, vec, sl)).as("d"), lit(s).as("s"))
+        struct((-Similarity.dot(vec, sl)).as("d"), lit(s).as("s"))
     }: _*))
     transform(slice(ssorted, 1, sp), x => x("s"))
   }
@@ -701,12 +701,12 @@ object AnnIndex {
     * `nearDupGate`. Pure projection: no shuffle, no state,
     * streaming-safe.
     */
-  private[graft] def flatProbeCellsCol(df: DataFrame, vec: Column,
+  private[graft] def flatProbeCellsCol(vec: Column,
       coarse: Seq[Seq[Float]], probes: Int): Column = {
     val sorted = array_sort(array(coarse.zipWithIndex.map {
       case (c, j) =>
         val cl = array(c.map(x => lit(x.toDouble)): _*)
-        struct((-Similarity.dot(df, vec, cl)).as("d"),
+        struct((-Similarity.dot(vec, cl)).as("d"),
           lit(j).as("c"))
     }: _*))
     transform(slice(sorted, 1, probes), s => s("c"))
@@ -750,7 +750,7 @@ object AnnIndex {
     val csp = ScanSpread.spread(corpus)
     val nAll = csp.select(col(idCol).cast("long").as("id"),
         col(vecCol).as("v"),
-        Similarity.l2norm(csp, col(vecCol)).as("nrm"))
+        Similarity.l2norm(col(vecCol)).as("nrm"))
     core.withoutDeletes(spark, dir, nAll).localCheckpoint(false)
   }
 
@@ -800,9 +800,9 @@ object AnnIndex {
     val qlit = array(query.map(x => lit(x.toDouble)): _*)
     corpus.join(broadcast(cand), idCol)
       .select(col(idCol),
-        (Similarity.dot(corpus, col(vecCol), qlit) /
-          (Similarity.l2norm(corpus, col(vecCol)) *
-            Similarity.l2norm(corpus, qlit))).as("score"))
+        (Similarity.dot(col(vecCol), qlit) /
+          (Similarity.l2norm(col(vecCol)) *
+            Similarity.l2norm(qlit))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -910,9 +910,9 @@ object AnnIndex {
     corpus.join(broadcast(cand), idCol)
       .join(broadcast(qvDf), "__qid")
       .select(col("__qid"), col(idCol),
-        (Similarity.dot(corpus, col(vecCol), col("__qv")) /
-          (Similarity.l2norm(corpus, col(vecCol)) *
-            Similarity.l2norm(corpus, col("__qv")))).as("score"))
+        (Similarity.dot(col(vecCol), col("__qv")) /
+          (Similarity.l2norm(col(vecCol)) *
+            Similarity.l2norm(col("__qv")))).as("score"))
       .withColumn("__rn", row_number().over(rescoreByQ))
       .filter(col("__rn") <= k)
       .select(col("__qid").as("qid"), col(idCol), col("score"))
@@ -1028,7 +1028,7 @@ object AnnIndex {
           .toDF("cell", "__cv")
         q0.crossJoin(broadcast(coarseDf))
           .select(col("__qid"), col("__qv"), col("cell"),
-            Similarity.dot(corpus, col("__qv"), col("__cv")).as("__d"))
+            Similarity.dot(col("__qv"), col("__cv")).as("__d"))
           .withColumn("__rn", row_number().over(byQd))
           .filter(col("__rn") <= probes)
           .select(col("__qid"), col("__qv"), col("cell"))
@@ -1049,8 +1049,7 @@ object AnnIndex {
       val centLit = array((0 until meta.nCentroids).map { c =>
         array(cents((sm, c)).map(x => lit(x.toDouble)): _*)
       }: _*)
-      Similarity.dot(corpus,
-        slice(col("__qv"), sm * meta.sub + 1, meta.sub),
+      Similarity.dot(slice(col("__qv"), sm * meta.sub + 1, meta.sub),
         element_at(centLit, element_at(col("bc"), sm + 1) + 1))
     }.reduce(_ + _)
     val byQ = Window.partitionBy("__qid")
@@ -1074,9 +1073,9 @@ object AnnIndex {
       .select(col("__qid"), col("__qv"), col(idCol))
     corpus.join(cand, idCol)
       .select(col("__qid"), col(idCol),
-        (Similarity.dot(corpus, col(vecCol), col("__qv")) /
-          (Similarity.l2norm(corpus, col(vecCol)) *
-            Similarity.l2norm(corpus, col("__qv")))).as("score"))
+        (Similarity.dot(col(vecCol), col("__qv")) /
+          (Similarity.l2norm(col(vecCol)) *
+            Similarity.l2norm(col("__qv")))).as("score"))
       .withColumn("__rn", row_number().over(byQ))
       .filter(col("__rn") <= k)
       .select(col("__qid").as("qid"), col(idCol), col("score"))
@@ -1145,7 +1144,7 @@ object AnnIndex {
         .select(col("id").as("id_b"), col("cell"))
         .join(bProbe.select("cell").distinct(), Seq("cell"),
           "left_semi")
-      cosineVerified(corpus, bProbe.join(cProbe, "cell")
+      cosineVerified(bProbe.join(cProbe, "cell")
         .filter(col("id_a") =!= col("id_b"))
         .select(col("id_a"), col("id_b")).distinct(), n, threshold)
     }
@@ -1166,7 +1165,7 @@ object AnnIndex {
         .select(col("id"), col("cell"))
       val probe =
         if (superProbes <= 0) probe0 else probe0.localCheckpoint(false)
-      cosineVerified(corpus, probe
+      cosineVerified(probe
         .join(probe.select(col("id").as("id2"), col("cell")), "cell")
         .filter(col("id") < col("id2"))
         .select(col("id").as("id_a"), col("id2").as("id_b"))

@@ -95,7 +95,6 @@ object BpeTrain {
   def encode(docs: DataFrame, textCol: String, topWords: Int,
       nMerges: Int): DataFrame = {
     val (merges, _) = trainLoop(docs, textCol, topWords, nMerges)
-    BpeReplay.register(docs.sparkSession)
     val flat = merges.flatMap { case (_, l, rr, _) => Seq(l, rr) }
     words(docs, textCol)
       .groupBy("word").agg(count(lit(1)).as("f"))

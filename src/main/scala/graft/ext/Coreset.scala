@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Greedy k-center coreset selection (Gonzalez 1985's farthest-point
@@ -42,9 +42,8 @@ object Coreset {
   private def traverse(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int): (Seq[(Long, Long, Double)], DataFrame) = {
     require(k >= 1, s"kcenter: k=$k")
-    def dot(a: Column, b: Column) = Similarity.dot(vecs, a, b)
     val base = vecs.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("xx", dot(col("v"), col("v")))
+      .withColumn("xx", Similarity.dot(col("v"), col("v")))
       .localCheckpoint(false)
     // min-id row in ONE scan: orderBy + head(1) plans as
     // TakeOrderedAndProject (per-partition size-1 heaps, driver merge)
@@ -69,7 +68,8 @@ object Coreset {
       var yy = 0.0
       centerVec.foreach(f => yy += f.toDouble * f.toDouble)
       val cLit = array(centerVec.map(f => lit(f.toDouble)): _*)
-      val d2 = (col("xx") + lit(yy)) - (lit(2.0) * dot(col("v"), cLit))
+      val d2 = (col("xx") + lit(yy)) -
+        (lit(2.0) * Similarity.dot(col("v"), cLit))
       (if (md == null)
          base.withColumn("md", d2).withColumn("bc", lit(1L))
        else md

@@ -725,7 +725,6 @@ object Dedup {
       carry: Seq[String] = Nil): DataFrame = {
     require(window >= 2 && maskMod >= 2,
       s"cdcChunks: window=$window maskMod=$maskMod")
-    graft.functions.CdcCuts.register(df.sparkSession)
     // one codegen'd rolling pass emits the chunk strings directly
     // (functions/CdcChunks) — assembling them from cdc_cuts with
     // builtin HOFs re-inlined the O(len) pass per chunk element

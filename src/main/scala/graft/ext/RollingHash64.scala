@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,14 +64,6 @@ object RollingHash64 {
     h
   }
 
-  /** Register `rolling_hash64(str)` in the session's function
-    * registry; use via `call_function("rolling_hash64", c)` or SQL.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.Registration.registerOnce(spark, "rolling_hash64")(
-      exprs => RollingHash64(exprs.head))
-
-  /** Column API (requires `register(spark)` once per session). */
-  def rolling_hash64(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("rolling_hash64", c)
+  /** Column API of `rolling_hash64(str)`. */
+  def rolling_hash64(c: Column): Column = column(RollingHash64(expression(c)))
 }

@@ -26,12 +26,9 @@ import graft.functions.DotDouble
 object Similarity {
 
   /** Codegen'd left-fold dot product in double (mixed float/double ok). */
-  def dot(df: DataFrame, a: Column, b: Column): Column = {
-    DotDouble.register(df.sparkSession)
-    DotDouble.dot_double(a, b)
-  }
+  def dot(a: Column, b: Column): Column = DotDouble.dot_double(a, b)
 
-  def l2norm(df: DataFrame, a: Column): Column = sqrt(dot(df, a, a))
+  def l2norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Brute-force cosine top-k against one query vector. */
   def topK(df: DataFrame, idCol: String, vecCol: String,
@@ -39,7 +36,7 @@ object Similarity {
     val q = array(query.map(x => lit(x.toDouble)): _*)
     val v = col(vecCol)
     df.select(col(idCol),
-        (dot(df, v, q) / (l2norm(df, v) * l2norm(df, q))).as("score"))
+        (dot(v, q) / (l2norm(v) * l2norm(q))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -48,11 +45,10 @@ object Similarity {
     * caller-supplied fixed vectors (deterministic — e.g. the first
     * `nPlanes` corpus vectors), broadcast as literals.
     */
-  def lshBucket(df: DataFrame, vec: Column,
-      planes: Seq[Seq[Float]]): Column =
+  def lshBucket(vec: Column, planes: Seq[Seq[Float]]): Column =
     planes.zipWithIndex.map { case (p, j) =>
       val pl = array(p.map(x => lit(x.toDouble)): _*)
-      when(dot(df, vec, pl) > 0, lit(1L << j)).otherwise(lit(0L))
+      when(dot(vec, pl) > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
   /** ANN top-k: restrict the scan to vectors whose LSH bucket is
@@ -64,14 +60,14 @@ object Similarity {
       query: Seq[Float], planes: Seq[Seq[Float]], k: Int,
       probeHamming: Int = 1): DataFrame = {
     val qd = array(query.map(x => lit(x.toDouble)): _*)
-    val qBucket = lshBucket(df, qd, planes)
+    val qBucket = lshBucket(qd, planes)
     val v = col(vecCol)
     df.select(col(idCol), v.as("v"),
-        lshBucket(df, v, planes).as("bucket"))
+        lshBucket(v, planes).as("bucket"))
       .filter(Dedup.hamming64(col("bucket"), qBucket) <= probeHamming)
       .select(col(idCol),
-        (dot(df, col("v"), qd) /
-          (l2norm(df, col("v")) * l2norm(df, qd))).as("score"))
+        (dot(col("v"), qd) /
+          (l2norm(col("v")) * l2norm(qd))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -93,10 +89,9 @@ object Similarity {
     * to get the at-rest layout where a `probes`-cell query scans only
     * `probes` partitions of the lake (pinned in LayoutSpec).
     */
-  def ivfCell(df: DataFrame, vec: Column,
-      cents: Seq[Seq[Float]]): Column = {
+  def ivfCell(vec: Column, cents: Seq[Seq[Float]]): Column = {
     val darr = array(cents.map(c =>
-      dot(df, vec, array(c.map(x => lit(x.toDouble)): _*))): _*)
+      dot(vec, array(c.map(x => lit(x.toDouble)): _*))): _*)
     (array_position(darr, array_max(darr)) - 1).cast("int")
   }
 
@@ -130,7 +125,7 @@ object Similarity {
     val v = df.select(col(vecCol).as("v")).localCheckpoint(false)
     for (_ <- 0 until iters) {
       val meanRows = v
-        .withColumn("cell", ivfCell(df, col("v"), cents))
+        .withColumn("cell", ivfCell(col("v"), cents))
         .select(col("cell"), posexplode(col("v")).as(Seq("d", "x")))
         .groupBy(col("cell"), col("d"))
         .agg((sum(col("x").cast("decimal(27,12)")) /
@@ -165,11 +160,11 @@ object Similarity {
       .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
     val qlit = array(query.map(x => lit(x.toDouble)): _*)
     df.select(col(idCol), col(vecCol).as("v"))
-      .withColumn("__cell", ivfCell(df, col("v"), cents))
+      .withColumn("__cell", ivfCell(col("v"), cents))
       .filter(col("__cell").isin(probeCells: _*))
       .select(col(idCol),
-        (dot(df, col("v"), qlit) /
-          (l2norm(df, col("v")) * l2norm(df, qlit))).as("score"))
+        (dot(col("v"), qlit) /
+          (l2norm(col("v")) * l2norm(qlit))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -204,13 +199,10 @@ object Similarity {
     * composing it from separate dot-product columns falls out of
     * codegen and runs ~30x slower (see SignBands).
     */
-  private def signBandKeys(spark: org.apache.spark.sql.SparkSession,
-      vec: Column, planes: Seq[Seq[Float]], bands: Int,
-      rowsPerBand: Int): Column = {
-    graft.functions.SignBands.register(spark)
+  private def signBandKeys(vec: Column, planes: Seq[Seq[Float]],
+      bands: Int, rowsPerBand: Int): Column =
     graft.functions.SignBands.sign_bands(vec,
       planes.flatten.map(_.toDouble), bands, rowsPerBand)
-  }
 
   /** Near-duplicate pair mining via banded sign-LSH + exact cosine on
     * candidates — the embedding analogue of
@@ -238,9 +230,8 @@ object Similarity {
       hotCap: Int = 4096, salts: Int = 16): DataFrame = {
     val planes = lshPlanes(df, idCol, vecCol, bands * rowsPerBand)
     val n = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-      l2norm(df, col(vecCol)).as("nrm"))
-    val keys = signBandKeys(df.sparkSession, col("v"), planes, bands,
-      rowsPerBand)
+      l2norm(col(vecCol)).as("nrm"))
+    val keys = signBandKeys(col("v"), planes, bands, rowsPerBand)
     // checkpoint: the band projection feeds several bucketPairs legs
     val banded = n.select(col("id"),
         posexplode(keys).as(Seq("band", "bk")))
@@ -252,7 +243,7 @@ object Similarity {
       .join(n.select(col("id").as("id_b"), col("v").as("vb"),
         col("nrm").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        (dot(df, col("va"), col("vb")) / (col("na") * col("nb")))
+        (dot(col("va"), col("vb")) / (col("na") * col("nb")))
           .as("cos"))
       .filter(col("cos") >= threshold)
   }
@@ -304,17 +295,17 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val planes = lshPlanes(corpus, idCol, vecCol, bands * rowsPerBand)
     val qn = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        l2norm(queries, col(vecCol)).as("qnrm"))
+        l2norm(col(vecCol)).as("qnrm"))
       .localCheckpoint(false) // feeds the band leg AND the verify join
     val cn = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"),
-        l2norm(corpus, col(vecCol)).as("cnrm"))
+        l2norm(col(vecCol)).as("cnrm"))
       .localCheckpoint(false)
     val qBanded = qn.select(col("qid").as("id_a"),
-      posexplode(signBandKeys(queries.sparkSession, col("qv"), planes,
-        bands, rowsPerBand)).as(Seq("band", "bk")))
+      posexplode(signBandKeys(col("qv"), planes, bands, rowsPerBand))
+        .as(Seq("band", "bk")))
     val cBanded = cn.select(col("cid").as("id_b"),
-      posexplode(signBandKeys(corpus.sparkSession, col("cv"), planes,
-        bands, rowsPerBand)).as(Seq("band", "bk")))
+      posexplode(signBandKeys(col("cv"), planes, bands, rowsPerBand))
+        .as(Seq("band", "bk")))
     val cand = Dedup.bucketJoinPairs(qBanded, cBanded, hotCap, salts,
         ordered = false)
       .distinct()
@@ -325,7 +316,7 @@ object Similarity {
       .join(qn, "qid")
       .join(cn, "cid")
       .select(col("qid"), col("cid"),
-        (dot(corpus, col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
+        (dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
           .as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -341,7 +332,7 @@ object Similarity {
       val rescue = broadcast(qn.join(starved, Seq("qid"), "left_semi"))
         .crossJoin(cn) // bounded: |starved| query vectors x one scan
         .select(col("qid"), col("cid"),
-          (dot(corpus, col("qv"), col("cv")) /
+          (dot(col("qv"), col("cv")) /
             (col("qnrm") * col("cnrm"))).as("cos"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
@@ -359,14 +350,14 @@ object Similarity {
   def cosinePairsBrute(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val n = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-      l2norm(df, col(vecCol)).as("nrm"))
+      l2norm(col(vecCol)).as("nrm"))
     val a = n.select(col("id").as("id_a"), col("v").as("va"),
       col("nrm").as("na"))
     val b = n.select(col("id").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (dot(df, col("va"), col("vb")) / (col("na") * col("nb")))
+        (dot(col("va"), col("vb")) / (col("na") * col("nb")))
           .as("cos"))
       .filter(col("cos") >= threshold)
   }
@@ -442,9 +433,8 @@ object Similarity {
     * argmax of 2·a_m·cent_c − |cent_c|², ties to the smallest centroid
     * id) are documented on the expression.
     */
-  private[ext] def pqBestCol(df: DataFrame, cents: Map[(Int, Int), Seq[Int]],
-      m: Int, nCentroids: Int, sub: Int): Column = {
-    graft.functions.PqBestCodes.register(df.sparkSession)
+  private[ext] def pqBestCol(cents: Map[(Int, Int), Seq[Int]], m: Int,
+      nCentroids: Int, sub: Int): Column = {
     val flat = (0 until m).flatMap(sm =>
       (0 until nCentroids).flatMap(c => cents((sm, c))))
     graft.functions.PqBestCodes.pq_best_codes(col("a"), flat,
@@ -508,7 +498,7 @@ object Similarity {
     val s = h.scale
     val codes = fullCodes(df, idCol, vecCol, s).localCheckpoint(false)
     var cents: Map[(Int, Int), Seq[Int]] =
-      h.first.collect { case (id, v) if id < nCentroids =>
+      h.first.collect { case (id, v) if id >= 0 && id < nCentroids =>
         val full = v.map(x => i8Code(x.toDouble, s))
         (0 until m).map(sm => ((sm, id.toInt),
           full.slice(sm * sub, (sm + 1) * sub).toSeq))
@@ -518,7 +508,7 @@ object Similarity {
         s" of ${m * nCentroids} subvectors")
     for (_ <- 0 until iters) {
       val withBest = codes.select(col("a"),
-        pqBestCol(codes, cents, m, nCentroids, sub).as("__bc"))
+        pqBestCol(cents, m, nCentroids, sub).as("__bc"))
       val structs = array((0 until m).flatMap(sm =>
         (0 until sub).map(d => struct(lit(sm).as("sm"),
           element_at(col("__bc"), sm + 1).as("c"), lit(d).as("d"),
@@ -602,8 +592,8 @@ object Similarity {
       .select(col("id"),
         // int8-exact vector norm — stored with the codes, as real
         // IVF-PQ systems keep a per-vector norm scalar
-        dot(df, aD, aD).cast("long").as("__naa"),
-        pqBestCol(codes, cents, m, nCentroids, sub).as("__bc"))
+        dot(aD, aD).cast("long").as("__naa"),
+        pqBestCol(cents, m, nCentroids, sub).as("__bc"))
     // rank by ADC dot over the vector's int8-accurate norm — the
     // cosine-shaped score the exact reference ranking uses. The
     // numerator adds the per-subspace qdots of each winning centroid
@@ -641,8 +631,8 @@ object Similarity {
     val q = array(query.map(x => lit(x.toDouble)): _*)
     df.join(broadcast(cand), idCol)
       .select(col(idCol),
-        (dot(df, col(vecCol), q) /
-          (l2norm(df, col(vecCol)) * l2norm(df, q))).as("score"))
+        (dot(col(vecCol), q) /
+          (l2norm(col(vecCol)) * l2norm(q))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -668,10 +658,12 @@ object Similarity {
       m: Int = 8, nCentroids: Int = 16, k: Int = 10,
       nCand: Int = 80, head: Option[PqHead] = None): DataFrame = {
     // the coarse centroids are the LOWEST-nCells ids — served from the
-    // shared head when those ids are dense 0..nCells-1 (the battery
-    // corpus), fetched with the ordered scan otherwise
+    // shared head when those ids are dense 0..nCells-1 and none is
+    // negative (the battery corpus), fetched with the ordered scan
+    // otherwise
     val cents = head
-      .filter(h => (0 until nCells).forall(c => h.first.contains(c.toLong)))
+      .filter(h => (0 until nCells).forall(c => h.first.contains(c.toLong))
+        && h.first.keysIterator.forall(_ >= 0))
       .map(h => (0 until nCells).map(c => h.first(c.toLong)))
       .getOrElse(ivfCentroids(df, idCol, vecCol, nCells))
     val qd = query.map(_.toDouble)
@@ -682,7 +674,7 @@ object Similarity {
       .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
     val member = df
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("__cell", ivfCell(df, col("v"), cents))
+      .withColumn("__cell", ivfCell(col("v"), cents))
       .filter(col("__cell").isin(probeCells: _*))
       .select("id")
     pqTopKRescored(df, idCol, vecCol, query, m, nCentroids, k, nCand,

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, IntegerType, LongType}
 
 /** Membership probe against a Bloom-filter bitmap: true iff ALL `k`
@@ -108,18 +110,9 @@ case class BloomContains(bitmap: Expression, h1: Expression,
 }
 
 object BloomContains {
-  /** Register `bloom_contains(bitmap, h1, h2, k, mBits)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "bloom_contains")(
-      exprs => BloomContains(exprs(0), exprs(1), exprs(2), exprs(3),
-        exprs(4)))
-
-  /** Column API (requires registration — `register(spark)` or the
-    * `GraftExtensions` entry point). */
+  /** Column API of `bloom_contains(bitmap, h1, h2, k, mBits)`. */
   def bloom_contains(bitmap: Array[Byte], h1: Column, h2: Column,
       k: Int, mBits: Int): Column =
-    org.apache.spark.sql.functions.call_function("bloom_contains",
-      org.apache.spark.sql.functions.lit(bitmap), h1, h2,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(mBits))
+    column(BloomContains(expression(lit(bitmap)), expression(h1),
+      expression(h2), expression(lit(k)), expression(lit(mBits))))
 }

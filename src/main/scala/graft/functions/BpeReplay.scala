@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.typedlit
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -150,15 +152,9 @@ object BpeReplay {
     syms
   }
 
-  /** Register `bpe_replay(word, mergesFlat)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "bpe_replay")(
-      exprs => BpeReplay(exprs(0), exprs(1)))
-
-  /** Column API (requires `register(spark)` once per session):
-    * merges as [l0, r0, l1, r1, ...] in learned order.
+  /** Column API of `bpe_replay(word, mergesFlat)`: merges as
+    * [l0, r0, l1, r1, ...] in learned order.
     */
   def bpe_replay(word: Column, mergesFlat: Seq[String]): Column =
-    org.apache.spark.sql.functions.call_function("bpe_replay", word,
-      org.apache.spark.sql.functions.typedlit(mergesFlat))
+    column(BpeReplay(expression(word), expression(typedlit(mergesFlat))))
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -242,25 +244,13 @@ object CdcCuts {
   final val B = 257L
   final val M = 1000003L
 
-  /** Register `cdc_cuts(str, window, maskMod)` and
-    * `cdc_chunks(str, window, maskMod)`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Registration.registerOnce(spark, "cdc_cuts")(
-      exprs => CdcCuts(exprs(0), exprs(1), exprs(2)))
-    Registration.registerOnce(spark, "cdc_chunks")(
-      exprs => CdcChunks(exprs(0), exprs(1), exprs(2)))
-  }
-
-  /** Column API (requires `register(spark)` once per session). */
+  /** Column API of `cdc_cuts(str, window, maskMod)`. */
   def cdc_cuts(str: Column, window: Int, maskMod: Int): Column =
-    org.apache.spark.sql.functions.call_function("cdc_cuts", str,
-      org.apache.spark.sql.functions.lit(window),
-      org.apache.spark.sql.functions.lit(maskMod))
+    column(CdcCuts(expression(str), expression(lit(window)),
+      expression(lit(maskMod))))
 
-  /** Column API (requires `register(spark)` once per session). */
+  /** Column API of `cdc_chunks(str, window, maskMod)`. */
   def cdc_chunks(str: Column, window: Int, maskMod: Int): Column =
-    org.apache.spark.sql.functions.call_function("cdc_chunks", str,
-      org.apache.spark.sql.functions.lit(window),
-      org.apache.spark.sql.functions.lit(maskMod))
+    column(CdcChunks(expression(str), expression(lit(window)),
+      expression(lit(maskMod))))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Dot product of two numeric arrays in double precision — a native
@@ -85,12 +86,7 @@ case class DotDouble(left: Expression, right: Expression)
 }
 
 object DotDouble {
-  /** Register `dot_double(a, b)` in the session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "dot_double")(
-      exprs => DotDouble(exprs(0), exprs(1)))
-
-  /** Column API (requires `register(spark)` once per session). */
+  /** Column API of `dot_double(a, b)`. */
   def dot_double(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("dot_double", a, b)
+    column(DotDouble(expression(a), expression(b)))
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{lit, typedlit}
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Product-quantization assignment in ONE codegen'd pass: for each of
@@ -176,18 +178,11 @@ case class PqBestCodes(codes: Expression, cbFlat: Expression,
 }
 
 object PqBestCodes {
-  /** Register `pq_best_codes(codes, cbFlat, nCentroids, sub)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "pq_best_codes")(
-      exprs => PqBestCodes(exprs(0), exprs(1), exprs(2), exprs(3)))
-
-  /** Column API (requires `register(spark)` once per session): codebook
-    * row-major `[sm][centroid][dim]`, flattened.
+  /** Column API of `pq_best_codes(codes, cbFlat, nCentroids, sub)`:
+    * codebook row-major `[sm][centroid][dim]`, flattened.
     */
   def pq_best_codes(codes: Column, cbFlat: Seq[Int], nCentroids: Int,
       sub: Int): Column =
-    org.apache.spark.sql.functions.call_function("pq_best_codes", codes,
-      org.apache.spark.sql.functions.typedlit(cbFlat),
-      org.apache.spark.sql.functions.lit(nCentroids),
-      org.apache.spark.sql.functions.lit(sub))
+    column(PqBestCodes(expression(codes), expression(typedlit(cbFlat)),
+      expression(lit(nCentroids)), expression(lit(sub))))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType}
 
 /** Symmetric per-vector int8 quantization of an embedding array — the
@@ -106,12 +107,6 @@ case class QuantizeI8(child: Expression) extends UnaryExpression {
 }
 
 object QuantizeI8 {
-  /** Register `quantize_i8(v)` in the session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "quantize_i8")(
-      exprs => QuantizeI8(exprs(0)))
-
-  /** Column API (requires `register(spark)` once per session). */
-  def quantize_i8(v: Column): Column =
-    org.apache.spark.sql.functions.call_function("quantize_i8", v)
+  /** Column API of `quantize_i8(v)`. */
+  def quantize_i8(v: Column): Column = column(QuantizeI8(expression(v)))
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{lit, typedlit}
+import org.apache.spark.sql.graft.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** All sign-LSH band keys of an embedding vector in ONE codegen'd pass:
@@ -169,18 +171,11 @@ case class SignBands(vec: Expression, planes: Expression,
 }
 
 object SignBands {
-  /** Register `sign_bands(vec, planesFlat, bands, rowsPerBand)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "sign_bands")(
-      exprs => SignBands(exprs(0), exprs(1), exprs(2), exprs(3)))
-
-  /** Column API (requires `register(spark)` once per session): planes
-    * row-major `[plane][dim]`, flattened.
+  /** Column API of `sign_bands(vec, planesFlat, bands, rowsPerBand)`:
+    * planes row-major `[plane][dim]`, flattened.
     */
   def sign_bands(vec: Column, planesFlat: Seq[Double], bands: Int,
       rowsPerBand: Int): Column =
-    org.apache.spark.sql.functions.call_function("sign_bands", vec,
-      org.apache.spark.sql.functions.typedlit(planesFlat),
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(rowsPerBand))
+    column(SignBands(expression(vec), expression(typedlit(planesFlat)),
+      expression(lit(bands)), expression(lit(rowsPerBand))))
 }

@@ -31,10 +31,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and interleaved scopes could restore each other's values. Now each
   * loop runs on a pooled `SparkSession.newSession()` CLONE (same
   * SparkContext, same cached blocks, runtime confs re-synced from the
-  * parent on acquire, graft functions mirrored) whose conf no other
-  * query can observe. Loop inputs — always small checkpointed frames —
-  * cross sessions via a global temp view ([[rebind]]): the ANALYZED
-  * plan is re-homed, no row conversion, no recompute, no plan change.
+  * parent on acquire) whose conf no other query can observe. Loop
+  * inputs — always small checkpointed frames — cross sessions via a
+  * global temp view ([[rebind]]): the ANALYZED plan is re-homed, no
+  * row conversion, no recompute, no plan change.
   *
   * Scale posture (NOT a local-mode constant): rowsPerPartition
   * defaults to 2M rows ≈ 30-60 MB of (long, long)/(long, double)
@@ -56,20 +56,17 @@ object IterConf {
     * across loop invocations (SessionState construction is not free),
     * re-synced to the parent's runtime confs on every acquire. Entries
     * are taken EXCLUSIVELY — two concurrent loops on one parent each
-    * get their own clone — which is the point of the isolation.
+    * get their own clone — which is the point of the isolation. Keys
+    * are weak (by identity), so a parent session nobody else holds is
+    * collected together with its clones.
     */
-  private val pool = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession,
-    java.util.concurrent.ConcurrentLinkedQueue[SparkSession]]()
+  private val pool: java.util.concurrent.ConcurrentMap[SparkSession,
+      java.util.concurrent.ConcurrentLinkedQueue[SparkSession]] =
+    new com.google.common.collect.MapMaker().weakKeys().makeMap()
 
   private def acquire(parent: SparkSession): SparkSession = {
     val child = Option(pool.get(parent)).flatMap(q => Option(q.poll()))
       .getOrElse(parent.newSession())
-    // mirror runtime-registered graft expressions on EVERY acquire
-    // (idempotent): a pooled clone may predate a later register() on
-    // the parent — extension-injected functions carry over via
-    // newSession on their own
-    graft.functions.Registration.mirror(child)
     // re-sync runtime confs so the loop plans exactly as the parent
     // would (ANSI, codegen thresholds, graft.* toggles), before the
     // two loop overrides go on top

@@ -870,15 +870,15 @@ object PipelineQueries {
       val centDf = cents.zipWithIndex
         .map { case (c, j) => (j, c.map(_.toDouble)) }.toDF("cell", "cv")
       val withCell = emb.select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("cell", Similarity.ivfCell(emb, col("v"), cents))
+        .withColumn("cell", Similarity.ivfCell(col("v"), cents))
       // lazily checkpointed: pri feeds both self-join sides and the
       // final keep join — the assignment projection is map-side cheap
       // but would otherwise re-scan the embeddings three times
       val pri = withCell.join(broadcast(centDf), "cell")
         .select(col("cell"), col("vec_id"), col("v"),
-          (Similarity.dot(emb, col("v"), col("cv")) /
-            (Similarity.l2norm(emb, col("v")) *
-              Similarity.l2norm(emb, col("cv")))).as("cs"))
+          (Similarity.dot(col("v"), col("cv")) /
+            (Similarity.l2norm(col("v")) *
+              Similarity.l2norm(col("cv")))).as("cs"))
         .localCheckpoint(false)
       val a = pri.select(col("cell"), col("vec_id").as("id_a"),
         col("v").as("va"), col("cs").as("csa"))
@@ -888,9 +888,9 @@ object PipelineQueries {
         .filter(col("id_a") =!= col("id_b"))
         .filter(col("csb") < col("csa") ||
           (col("csb") === col("csa") && col("id_b") < col("id_a")))
-        .filter(Similarity.dot(emb, col("va"), col("vb")) /
-          (Similarity.l2norm(emb, col("va")) *
-            Similarity.l2norm(emb, col("vb"))) >= CosineThreshold)
+        .filter(Similarity.dot(col("va"), col("vb")) /
+          (Similarity.l2norm(col("va")) *
+            Similarity.l2norm(col("vb"))) >= CosineThreshold)
         .select(col("id_a").as("vec_id")).distinct()
         .withColumn("__drop", lit(true))
       pri.join(dropped, Seq("vec_id"), "left")
@@ -908,7 +908,6 @@ object PipelineQueries {
     // an array column, so every oracle-gated query must emit scalar
     // top-level columns only (pinned by OutputShapeSpec).
     "sim_quantize" -> ((s, d) => {
-      graft.functions.QuantizeI8.register(s)
       embeddings(s, d)
         .select(col("vec_id"),
           posexplode(graft.functions.QuantizeI8.quantize_i8(col("embedding"))))
@@ -922,7 +921,6 @@ object PipelineQueries {
     // dot; a cast, not an interpreted HOF). Deterministic end to end:
     // integer codes + double folds on both engines.
     "sim_ann_quantized" -> ((s, d) => {
-      graft.functions.QuantizeI8.register(s)
       val codes = embeddings(s, d).select(col("vec_id"),
         graft.functions.QuantizeI8.quantize_i8(col("embedding"))
           .cast("array<double>").as("qv"))
@@ -957,7 +955,6 @@ object PipelineQueries {
     // are bytes. One explode + one partial-agg'd groupBy; |labels| x
     // dim output regardless of corpus size.
     "embed_centroids" -> ((s, d) => {
-      graft.functions.QuantizeI8.register(s)
       embeddings(s, d)
         .select(col("label"), posexplode(
           graft.functions.QuantizeI8.quantize_i8(col("embedding")))
@@ -1007,7 +1004,7 @@ object PipelineQueries {
     // exactly, like every green sim_* query).
     "profile_embeddings" -> ((s, d) => {
       val emb = embeddings(s, d)
-      val n2 = Similarity.dot(emb, col("embedding"), col("embedding"))
+      val n2 = Similarity.dot(col("embedding"), col("embedding"))
       emb.select(col("label"), size(col("embedding")).as("dim"),
           n2.as("n2"),
           floor(n2 * lit(1000000.0)).cast("long").as("n2u"))
@@ -1265,13 +1262,13 @@ object PipelineQueries {
           "embedding", k = 5, EmbedBands, EmbedRowsPerBand)
         .select("qid", "cid")
       val n = emb.select(col("vec_id"), col("embedding"),
-        Similarity.l2norm(emb, col("embedding")).as("nrm"))
+        Similarity.l2norm(col("embedding")).as("nrm"))
       val q = n.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"),
           col("nrm").as("qn"))
       val scored = n.crossJoin(broadcast(q))
         .select(col("qid"), col("vec_id").as("cid"),
-          (Similarity.dot(emb, col("qv"), col("embedding")) /
+          (Similarity.dot(col("qv"), col("embedding")) /
             (col("qn") * col("nrm"))).as("cos"))
       val exact = scored.withColumn("r", row_number().over(
           Window.partitionBy("qid").orderBy(desc("cos"), col("cid"))))
@@ -1333,7 +1330,6 @@ object PipelineQueries {
     // arithmetic over codepoints (== UTF-8 bytes for this pure-ASCII
     // corpus; ScalaTest additionally covers the unicode byte path).
     "text_rollhash" -> ((s, d) => {
-      RollingHash64.register(s)
       documents(s, d).select(col("doc_id"),
         RollingHash64.rolling_hash64(TextAnalysis.normalized(col("text")))
           .as("rh"))
@@ -3271,12 +3267,12 @@ object PipelineQueries {
     val incoming = emb.filter(col("vec_id") % 20 === 0)
       .join(keep, Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("embedding"),
-        graft.ext.Similarity.l2norm(emb, col("embedding")).as("__nrm"))
+        graft.ext.Similarity.l2norm(col("embedding")).as("__nrm"))
       .localCheckpoint(false)
     val probed = incoming.select(col("vec_id"), col("embedding"),
       col("__nrm"),
-      explode(graft.ext.AnnIndex.flatProbeCellsCol(emb,
-        col("embedding"), coarse, probes = 4)).as("cell"))
+      explode(graft.ext.AnnIndex.flatProbeCellsCol(col("embedding"),
+        coarse, probes = 4)).as("cell"))
     val corpusCells = graft.ext.AnnIndex.cellTable(emb, "vec_id",
       "embedding", dir, probes = 4, pre = Some(loaded))
     // the probe side is BATCH-BOUNDED (incoming docs × probes) at any
@@ -3288,7 +3284,7 @@ object PipelineQueries {
         col("v").as("__cv"), col("nrm").as("__cnrm")), Seq("cell"))
       .filter(col("vec_id") =!= col("__cid"))
       .select(col("vec_id"), col("__cid"),
-        (graft.ext.Similarity.dot(emb, col("embedding"), col("__cv")) /
+        (graft.ext.Similarity.dot(col("embedding"), col("__cv")) /
           (col("__nrm") * col("__cnrm"))).as("cos"))
       .distinct()
       .filter(col("cos") >= CosineThreshold)

@@ -363,9 +363,9 @@ object StatefulGates {
     df.select(idLong(col(idCol), "annCandidatesStateful").as("id"),
         col(tsCol).cast("timestamp").as("ts"),
         col(vecCol).as("__v"),
-        graft.ext.Similarity.l2norm(df, col(vecCol)).as("__nrm"))
+        graft.ext.Similarity.l2norm(col(vecCol)).as("__nrm"))
       .select(col("id"), col("ts"), col("__v"), col("__nrm"),
-        explode(graft.ext.AnnIndex.flatProbeCellsCol(df, col("__v"),
+        explode(graft.ext.AnnIndex.flatProbeCellsCol(col("__v"),
           coarse, probes)).as("cell"))
       .select(col("cell").cast("int"), col("id"), col("ts"),
         col("__v").as("v"), col("__nrm").as("nrm"))

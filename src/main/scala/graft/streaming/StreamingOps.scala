@@ -474,7 +474,7 @@ object StreamingOps {
       graft.ext.AnnIndex.load(df.sparkSession, dir)
     val wm = if (df.isStreaming) df.withWatermark(tsCol, watermark)
       else df
-    val cos = graft.ext.Similarity.dot(df, col("__v"), col("__cv")) /
+    val cos = graft.ext.Similarity.dot(col("__v"), col("__cv")) /
       (col("__nrm") * col("__cnrm"))
     // fail FAST on ids the long cast nulls: a silently-nulled id
     // would make the self-exclusion comparison null and drop EVERY
@@ -488,11 +488,11 @@ object StreamingOps {
       .otherwise(col(idCol).try_cast("long"))
     withGenerationGuard(
       wm.select(col(idCol), col(tsCol), col(vecCol).as("__v"),
-        graft.ext.Similarity.l2norm(df, col(vecCol)).as("__nrm"),
+        graft.ext.Similarity.l2norm(col(vecCol)).as("__nrm"),
         idLong.as("__id")), dir)
       .select(col(idCol), col(tsCol), col("__v"), col("__nrm"),
         col("__id"),
-        explode(graft.ext.AnnIndex.flatProbeCellsCol(df, col("__v"),
+        explode(graft.ext.AnnIndex.flatProbeCellsCol(col("__v"),
           coarse, probes)).as("__cell"))
       .join(corpusCells.select(col("cell").as("__cell"),
           col("id").as("__cid"), col("v").as("__cv"),
@@ -796,7 +796,7 @@ object StreamingOps {
       hsOf(col(textCol)).as("__hs"),
       strsOf(col(textCol)).as("__strs"),
       col(vecCol).as("__v"),
-      graft.ext.Similarity.l2norm(df, col(vecCol)).as("__nrm"))
+      graft.ext.Similarity.l2norm(col(vecCol)).as("__nrm"))
     val bloomHit = graft.functions.BloomContains.bloom_contains(bitmap,
       conv(substring(col("__key"), 1, 8), 16, 10).cast("long"),
       conv(substring(col("__key"), 9, 8), 16, 10).cast("long"),
@@ -822,7 +822,7 @@ object StreamingOps {
         lit(null).cast("int").as("cell"))
     }: _*)
     val annUnits = transform(
-      graft.ext.AnnIndex.flatProbeCellsCol(df, col("__v"), coarse,
+      graft.ext.AnnIndex.flatProbeCellsCol(col("__v"), coarse,
         probes),
       c => struct(lit(null).cast("int").as("b"),
         lit(null).cast("string").as("bk"), c.cast("int").as("cell")))
@@ -878,7 +878,7 @@ object StreamingOps {
     val cells = corpusCells.select(col("cell").as("__ccell"),
       col("id").as("__cid"), col("v").as("__cv"),
       col("nrm").as("__cnrm"))
-    val cos = graft.ext.Similarity.dot(df, col("__v"), col("__cv")) /
+    val cos = graft.ext.Similarity.dot(col("__v"), col("__cv")) /
       (col("__nrm") * col("__cnrm"))
     val withAnn = withMh
       .join(cells, col("__cell") === col("__ccell"), "left")

@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.mapreduce.Job
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
@@ -12,13 +13,15 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The one `private[sql]` doorway the library uses: turning a custom
-  * [[LogicalPlan]] node into a `DataFrame`, reading a session's
+  * [[LogicalPlan]] node into a `DataFrame`, a custom Catalyst
+  * [[Expression]] into a `Column` (and a `Column` back into its
+  * expression, for the Column API's arguments), reading a session's
   * [[SQLConf]], and the CSV row parser and parquet writer factory a
   * scan or write task uses, for driver-side sheet reads and
   * single-record appends. Spark deliberately keeps `Dataset.ofRows`
-  * package-private — extension libraries (Delta, Iceberg,
-  * spark-rapids…) all open this same door with a shim in a subpackage
-  * of `org.apache.spark.sql`. Nothing else in the library lives
+  * and `ExpressionUtils` package-private — extension libraries
+  * (Delta, Iceberg, spark-rapids…) all open this same door with a
+  * shim in a subpackage of `org.apache.spark.sql`. Nothing else in the library lives
   * outside the `graft` namespace.
   */
 object GraftPlanBridge {
@@ -29,6 +32,10 @@ object GraftPlanBridge {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.queryExecution.analyzed
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   def sqlConf(spark: SparkSession): SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf

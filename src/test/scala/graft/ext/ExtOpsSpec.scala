@@ -7,7 +7,6 @@ class RollingHashSpec extends SparkSpec {
   test("rolling_hash64 column matches the Scala reference implementation") {
     val s = spark
     import s.implicits._
-    RollingHash64.register(spark)
     val strs = Seq("", "a", "hello world", "ünïcødé ✓", "x" * 1000)
     val df = strs.toDF("t")
     val got = df.select(col("t"),
@@ -20,7 +19,6 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("rolling_hash64 works via SQL and inside codegen'd pipelines") {
-    RollingHash64.register(spark)
     val n = spark.sql(
       """SELECT rolling_hash64(c) AS h FROM VALUES ('abc'), ('abd') t(c)""")
       .distinct().count()
@@ -227,8 +225,6 @@ class SimilaritySpec extends SparkSpec {
       "composition, null-safe") {
     val s = spark
     import s.implicits._
-    graft.functions.SignBands.register(spark)
-    graft.functions.DotDouble.register(spark)
     val rnd = new scala.util.Random(7)
     val dim = 16; val bands = 4; val rows = 3
     val planes = Seq.fill(bands * rows)(Seq.fill(dim)(rnd.nextFloat() - 0.5f))
@@ -413,7 +409,7 @@ class SimilaritySpec extends SparkSpec {
     def ratio(cents: Seq[Seq[Float]]): Double = {
       val sizes = emb
         .withColumn("cell",
-          Similarity.ivfCell(emb, col("embedding"), cents))
+          Similarity.ivfCell(col("embedding"), cents))
         .groupBy("cell").count().collect().map(_.getLong(1))
       val full = sizes ++ Array.fill(nC - sizes.length)(0L)
       (full.max + 1).toDouble / (full.min + 1)
@@ -444,7 +440,6 @@ class SimilaritySpec extends SparkSpec {
       "codegen + SQL, and dequantized cosine stays ~1") {
     val s = spark
     import s.implicits._
-    graft.functions.QuantizeI8.register(spark)
     def ref(v: Seq[Float]): Seq[Byte] = {
       val sc = if (v.isEmpty) 0.0 else v.map(x => math.abs(x.toDouble)).max
       if (sc == 0.0) v.map(_ => 0.toByte)
@@ -488,7 +483,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("quantized retrieval: top-10 over int8 codes matches float " +
       "top-10 closely (scales cancel in cosine)") {
-    graft.functions.QuantizeI8.register(spark)
     val codes = emb.select(col("vec_id"),
       graft.functions.QuantizeI8.quantize_i8(col("embedding"))
         .cast("array<double>").as("qv"))
@@ -540,7 +534,7 @@ class SimilaritySpec extends SparkSpec {
       .sortBy { case (d, j) => (-d, j) }.take(2).map(_._2).toSet
     val members = emb
       .withColumn("__cell",
-        Similarity.ivfCell(emb, col("embedding"), cents))
+        Similarity.ivfCell(col("embedding"), cents))
       .collect().collect {
         case r if probed(r.getAs[Int]("__cell")) => r.getAs[Long]("vec_id")
       }.toSet
@@ -566,6 +560,22 @@ class SimilaritySpec extends SparkSpec {
         queryVec, nCentroids = 16, probes = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(all == exactIvf)
+  }
+
+  test("IVF-PQ: a head holding negative ids serves the same coarse " +
+      "centroids as the ordered scan (the lowest nCells ids)") {
+    // ids -2..N-3: the lowest 16 ids are -2..13, not the dense 0..15
+    val shifted = emb.withColumn("vec_id", col("vec_id") - 2L)
+    val head = Similarity.pqHead(shifted, "vec_id", "embedding", 16)
+    assert(head.first.contains(-2L) &&
+      (0L until 16L).forall(head.first.contains))
+    def run(h: Option[Similarity.PqHead]): Seq[(Long, Double)] =
+      Similarity.ivfPqTopK(shifted, "vec_id", "embedding", queryVec,
+          nCells = 16, probes = 2, k = 10, head = h)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val served = run(Some(head))
+    assert(served.nonEmpty)
+    assert(served == run(None))
   }
 
   test("annTopK returns exact scores, always finds the query itself") {

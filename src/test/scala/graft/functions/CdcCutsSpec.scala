@@ -22,7 +22,6 @@ class CdcCutsSpec extends SparkSpec {
 
   test("rolling pass matches the per-window fold on both eval paths, " +
       "including short strings and varied window/mask") {
-    CdcCuts.register(spark)
     val s0 = spark; import s0.implicits._
     val texts = Seq("spark join window batch stream sort merge hash",
       "aaaaaaaaaaaaaaaaaaaaaaaa", "short", "x", "",
@@ -43,7 +42,6 @@ class CdcCutsSpec extends SparkSpec {
 
   test("cdc_chunks emits exactly the substrings between cdc_cuts " +
       "boundaries on both eval paths (single-pass == assembled)") {
-    CdcCuts.register(spark)
     val s0 = spark; import s0.implicits._
     val texts = Seq("spark join window batch stream sort merge hash " +
         "key table scan row group filter order part small big slow",
@@ -72,7 +70,6 @@ class CdcCutsSpec extends SparkSpec {
   }
 
   test("null input yields null, not a crash") {
-    CdcCuts.register(spark)
     val s0 = spark; import s0.implicits._
     val got = Seq((1L, Option.empty[String]), (2L, Some("abcdefghij")))
       .toDF("id", "t")
@@ -83,7 +80,6 @@ class CdcCutsSpec extends SparkSpec {
 
   test("non-foldable or out-of-range window/maskMod fail analysis " +
       "with a clean message") {
-    CdcCuts.register(spark)
     val s0 = spark; import s0.implicits._
     val df = Seq((1L, "abc")).toDF("id", "t")
     val e1 = intercept[org.apache.spark.sql.AnalysisException] {

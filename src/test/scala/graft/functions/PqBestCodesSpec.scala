@@ -30,7 +30,6 @@ class PqBestCodesSpec extends SparkSpec {
     }
 
   test("matches a driver-side argmin-L2 on both eval paths") {
-    PqBestCodes.register(spark)
     val rows = Seq(
       Seq(9, 1, 4, 4), Seq(-1, 8, -6, -4), Seq(0, 0, 0, 0),
       Seq(127, -127, 3, 3), Seq(-2, -2, -2, -2))
@@ -50,7 +49,6 @@ class PqBestCodesSpec extends SparkSpec {
   }
 
   test("ties pick the smallest centroid id") {
-    PqBestCodes.register(spark)
     // equidistant from centroids (10,0) and (0,10) in sm 0 and from
     // (-5,-5)/(5,5)/(0,0) in sm 1 at the origin
     val s0 = spark; import s0.implicits._
@@ -63,7 +61,6 @@ class PqBestCodesSpec extends SparkSpec {
   }
 
   test("null codes row yields null, not a crash") {
-    PqBestCodes.register(spark)
     val s0 = spark; import s0.implicits._
     val got = Seq((1L, Option.empty[Seq[Int]]),
         (2L, Some(Seq(1, 1, 1, 1)))).toDF("id", "a")

@@ -111,4 +111,24 @@ class IterConfSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.loop.aqe")
     assert(fastRows == slowRows)
   }
+
+  test("a parent session used once through loopScope and then dropped " +
+      "becomes unreachable: the loop-session pool keys it weakly") {
+    def useOnce(): java.lang.ref.WeakReference[AnyRef] = {
+      val parent = spark.newSession()
+      val in = parent.range(3).toDF("id")
+      assert(IterConf.loopScope(parent, 3L, Seq(in)) {
+        case Seq(reb) => reb.count()
+      } == 3L)
+      new java.lang.ref.WeakReference(parent)
+    }
+    val ref = useOnce()
+    var tries = 0
+    while (ref.get != null && tries < 50) {
+      System.gc()
+      Thread.sleep(100)
+      tries += 1
+    }
+    assert(ref.get == null, "parent session still reachable after GC")
+  }
 }

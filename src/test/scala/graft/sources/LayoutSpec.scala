@@ -300,7 +300,7 @@ class AnnLayoutSpec extends SparkSpec {
     // WRITE the corpus partitioned by its IVF cell — the at-rest form
     // of the `ivfTopK` quantizer, so probing is partition pruning
     emb.withColumn("cell",
-        Similarity.ivfCell(emb, col("embedding"), cents))
+        Similarity.ivfCell(col("embedding"), cents))
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val t = s.read.parquet(dir)
     // two populated cells, as a probe-2 query would select
@@ -316,7 +316,7 @@ class AnnLayoutSpec extends SparkSpec {
       s"expected 2 selected partitions, got $parts")
     // and the pruned scan returns exactly the probed cells' rows
     val expected = emb.withColumn("cell",
-        Similarity.ivfCell(emb, col("embedding"), cents))
+        Similarity.ivfCell(col("embedding"), cents))
       .filter(col("cell").isin(probe: _*)).count()
     assert(q.count() == expected && expected > 0)
   }
@@ -337,7 +337,7 @@ class AnnLayoutSpec extends SparkSpec {
       .sortBy { case (d, j) => (-d, j) }.take(2).map(_._2)
     val dir = Files.createTempDirectory("ivfpqlayout").toString
     emb.withColumn("cell",
-        Similarity.ivfCell(emb, col("embedding"), cents))
+        Similarity.ivfCell(col("embedding"), cents))
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val pruned = s.read.parquet(dir).filter(col("cell").isin(probe: _*))
     val parts = pruned.queryExecution.executedPlan.collectLeaves()
@@ -705,13 +705,13 @@ class AnnIndexSpec extends SparkSpec {
     val pairs = pairRows.toSet
     // brute-force truth: every pair at cosine >= threshold
     val n = emb.select(col("vec_id"), col("embedding").as("v"),
-      Similarity.l2norm(emb, col("embedding")).as("nrm"))
+      Similarity.l2norm(col("embedding")).as("nrm"))
     val a = n.select(col("vec_id").as("ia"), col("v").as("va"),
       col("nrm").as("na"))
     val b = n.select(col("vec_id").as("ib"), col("v").as("vb"),
       col("nrm").as("nb"))
     val brute = a.crossJoin(b).filter(col("ia") < col("ib"))
-      .filter(Similarity.dot(emb, col("va"), col("vb")) /
+      .filter(Similarity.dot(col("va"), col("vb")) /
         (col("na") * col("nb")) >= 0.45)
       .select("ia", "ib")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
