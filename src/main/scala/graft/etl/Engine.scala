@@ -153,8 +153,6 @@ object Engine {
     pluginRegistry.toMap ++ overlay
   }
 
-  def registeredPlugins: Set[String] = pluginRegistry.keySet.toSet
-
   def registeredPlugins(spark: SparkSession): Set[String] =
     pluginsFor(spark).keySet
 

@@ -235,56 +235,16 @@ object AnnIndex {
     * or streamed vector's cell is bit-identical to what a full
     * rebuild would assign (pinned in AnnIndexSpec). `hier` <= 0 is
     * the flat top-1 ranking (`Similarity.ivfCell` — nCells codegen'd
-    * dots per row); `hier` > 0 ranks only the children of the row's
-    * top-`hier` super-cells ([[hierCellCol]]) — the O(hier·√nCells)
-    * route for the nCells ∝ N regime where the flat projection is
-    * both O(nCells)/row and Janino-uncompilable (r14 addendum).
+    * dots per row); `hier` > 0 is the first of the row's two-level
+    * probe cells ([[probeCellsCol]] — the top-1 child of its
+    * top-`hier` super-cells) — the O(hier·√nCells) route for the
+    * nCells ∝ N regime where the flat projection is both
+    * O(nCells)/row and Janino-uncompilable (r14 addendum).
     */
   private def cellCol(vec: Column, coarse: Seq[Seq[Float]],
       hier: Int): Column =
     if (hier <= 0) Similarity.ivfCell(vec, coarse)
-    else hierCellCol(vec, coarse, hier)
-
-  /** MAP-SIDE two-level cell assignment (top-1 of the chosen supers'
-    * children): the super ranking is the same codegen'd √nCells-wide
-    * struct sort as [[probeCells]]'s hierarchical path, and the child
-    * ranking runs over the chosen supers' children as literal DATA
-    * (array-of-arrays of (cell, centroid) structs indexed by super)
-    * through higher-order functions — interpreted, but over
-    * hier·√nCells elements per row, and with NO shuffle and NO
-    * per-cell codegen width, which is what the streaming ingest path
-    * requires (a per-id rank window is unsupported on streams and the
-    * flat projection stops compiling in the thousands of cells).
-    * Same dot arithmetic ([[graft.functions.DotDouble]], strict left
-    * fold) and the same (dot DESC, cell ASC) tie-break as every other
-    * assignment path.
-    */
-  private[graft] def hierCellCol(vec: Column, coarse: Seq[Seq[Float]],
-      sp: Int): Column = {
-    val nSuper = superCount(coarse.size)
-    // child -> super via childAssignments — EXACTLY probeCells'
-    // driver-side rule, so a probe-side hierarchy and an encode-side
-    // hierarchy agree on the tree
-    val childrenBySuper: Map[Int, Seq[Int]] =
-      childAssignments(coarse).groupBy(_._1).view
-        .mapValues(_.map(_._2)).toMap
-    val chosen = topSupersCol(vec, coarse, sp)
-    val childType = "array<struct<c:int,cv:array<double>>>"
-    val childrenLit = array((0 until nSuper).map { s =>
-      val kids = childrenBySuper.getOrElse(s, Nil)
-      if (kids.isEmpty) array().cast(childType)
-      else array(kids.map { c =>
-        struct(lit(c).as("c"),
-          array(coarse(c).map(x => lit(x.toDouble)): _*).as("cv"))
-      }: _*).cast(childType)
-    }: _*)
-    val cands = flatten(transform(chosen,
-      s => element_at(childrenLit, s + 1)))
-    val best = array_min(transform(cands, ch =>
-      struct((-Similarity.dot(vec, ch("cv"))).as("d"),
-        ch("c").as("c"))))
-    best("c").cast("int")
-  }
+    else element_at(probeCellsCol(vec, coarse, 1, hier), 1)
 
   /** STREAMING index ingest — the online half of the lifecycle:
     * arriving vectors are encoded map-side with the committed index's
@@ -508,9 +468,10 @@ object AnnIndex {
     * bounded), and a row ranks only the CHILDREN of its
     * top-`superProbes` supers (top-`probes` of that union by dot
     * DESC, cell ASC). Per-row work drops to superProbes·√nCells dots
-    * = O(√N); the plan stays narrow at any nCells (the child table is
-    * broadcast DATA, not literal code), at the cost of one skinny
-    * id-keyed exchange for the per-row top-`probes` rank.
+    * = O(√N), ranked map-side in the same [[probeCellsCol]] array as
+    * the flat path: the child table rides as literal DATA through
+    * higher-order functions (no per-cell codegen width at any nCells)
+    * and the rank needs no exchange.
     *
     * `superProbes` is a second recall knob of the same approximate-
     * by-design kind as `probes` (a top cell whose super was not
@@ -527,6 +488,10 @@ object AnnIndex {
     * leave the chosen supers' children), sp ≥ nSuper == flat, and
     * hierarchical == flat pairs at p=4/sp=3 on the spec corpus.
     *
+    * Both assignments feed the one pair miner ([[minCellPairs]]):
+    * each pair is emitted once, in its minimal shared probe cell — no
+    * pair-dedup exchange.
+    *
     * @return (id_a, id_b, cos) with id_a < id_b, cos ≥ threshold
     */
   def cosinePairsIndexed(corpus: DataFrame, idCol: String,
@@ -538,62 +503,48 @@ object AnnIndex {
     // a caller that already loaded the index's bounded side tables for
     // THIS query execution passes them through — never a cross-run
     // cache, just plumbing (r18, VERDICT r17 #1)
-    val (meta, coarse, cents) = pre.getOrElse(load(spark, dir))
+    val (_, coarse, _) = pre.getOrElse(load(spark, dir))
     // tombstones are authoritative on BOTH sides: the home side via
     // codesTable, the probe/verify side via normalized()
     val n = normalized(corpus, idCol, vecCol, dir)
-    // the probe frame feeds a self-join (two consumers): the flat
-    // assignment recomputes cheaply from the checkpointed n, but the
-    // hierarchical one would redo its join + window — materialize it
-    val probe0 = probeCells(n, coarse, probes, superProbes)
-    val probe =
-      if (superProbes <= 0) probe0 else probe0.localCheckpoint(false)
-    // pin the probe x probe co-occurrence join at work width: its
-    // input is skinny (id, cell) rows — byte-based AQE coalescing
-    // collapses it to one task — but the join fans out the quadratic
-    // candidate generation (measured 1.1 s single-task at sf0.1)
-    val wp = ScanSpread.workParts(probe)
-    // documented opt-out (spark.graft.ann.minCellDedup=false) restores
-    // the r17 repartition+distinct pair dedup for A/B and plan pinning
-    val minCell = !spark.conf
-      .getOption("spark.graft.ann.minCellDedup")
-      .exists(_.equalsIgnoreCase("false"))
-    val cand =
-      if (superProbes <= 0 && minCell) {
-        // FLAT path (r18): de-duplicate pairs STRUCTURALLY instead of
-        // with a distinct — each side carries its full probe-cell
-        // array (a few ints) and a co-occurrence survives only in the
-        // pair's MINIMAL shared cell, so every pair is emitted exactly
-        // once. Replaces the ~probes²·cellSize·N-row exchange + hash
-        // dedup (measured 1.25 s at sf0.1) with a map-side
-        // array_intersect per co-occurrence inside the already-pinned
-        // join stage. Identical pair set to .distinct() by
-        // construction: a pair sharing k >= 1 cells matches the filter
-        // for exactly the smallest of them.
-        val withSet = n.select(col("id"),
-          flatProbeCellsCol(col("v"), coarse, probes).as("__cells"))
-        val probeF = withSet.select(col("id"), col("__cells"),
-          explode(col("__cells")).as("cell"))
-        probeF
-          .repartition(wp, col("cell"))
-          .join(probeF.select(col("id").as("id2"),
-            col("__cells").as("__cells2"), col("cell")), "cell")
-          .filter(col("id") < col("id2") &&
-            col("cell") === array_min(
-              array_intersect(col("__cells"), col("__cells2"))))
-          .select(col("id").as("id_a"), col("id2").as("id_b"))
-      } else {
-        // hierarchical path: the probe assignment already cost a join
-        // + window, keep the r17 shape (pinned pair-dedup exchange)
-        probe.select(col("id"), col("cell"))
-          .repartition(wp, col("cell"))
-          .join(probe.select(col("id").as("id2"), col("cell")), "cell")
-          .filter(col("id") < col("id2"))
-          .select(col("id").as("id_a"), col("id2").as("id_b"))
-          .repartition(wp, col("id_a"), col("id_b"))
-          .distinct()
-      }
-    cosineVerified(cand, n, threshold)
+    cosineVerified(minCellPairs(n, n, coarse, probes, superProbes)(_ < _),
+      n, threshold)
+  }
+
+  /** Candidate pairs between two (id, v) frames under the probe ×
+    * probe rule — the ONE pair miner of full-corpus mining and both
+    * groups folds. Each side carries its full [[probeCellsCol]]
+    * array (a few ints), both sides explode it and join on `cell`,
+    * and a co-occurrence survives only in the pair's MINIMAL shared
+    * cell: a pair sharing k >= 1 cells passes the filter at exactly
+    * the smallest of them, so every pair is emitted once with no
+    * distinct (r18 measured the replaced ~probes²·cellSize·N-row
+    * exchange + hash dedup at 1.25 s at sf0.1). `keep` is the pair
+    * predicate on (a's id, b's id).
+    *
+    * The co-occurrence join is pinned at work width: its input is
+    * skinny (id, cells, cell) rows — byte-based AQE coalescing
+    * collapses it to one task — but the join fans out the quadratic
+    * candidate generation (measured 1.1 s single-task at sf0.1).
+    *
+    * @return (id_a, id_b): id_a from `a`, id_b from `b`
+    */
+  private def minCellPairs(a: DataFrame, b: DataFrame,
+      coarse: Seq[Seq[Float]], probes: Int, superProbes: Int)(
+      keep: (Column, Column) => Column): DataFrame = {
+    def cells(df: DataFrame): DataFrame = df.select(col("id"),
+      probeCellsCol(col("v"), coarse, probes, superProbes).as("__cells"))
+    val left = cells(a).select(col("id"), col("__cells"),
+      explode(col("__cells")).as("cell"))
+    val right = cells(b).select(col("id").as("id2"),
+      col("__cells").as("__cells2"), explode(col("__cells")).as("cell"))
+    left
+      .repartition(ScanSpread.workParts(a), col("cell"))
+      .join(right, "cell")
+      .filter(keep(col("id"), col("id2")) &&
+        col("cell") === array_min(
+          array_intersect(col("__cells"), col("__cells2"))))
+      .select(col("id").as("id_a"), col("id2").as("id_b"))
   }
 
   /** Exact cosine of candidate pairs (id_a, id_b) against the (id, v,
@@ -612,68 +563,34 @@ object AnnIndex {
           (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= threshold)
 
-  /** The (id, cell, v) probe assignment of [[cosinePairsIndexed]] over
-    * a frame with columns (id, v): flat top-`probes` ranking when
-    * `superProbes` <= 0, the two-level hierarchy otherwise. Carries
-    * the row's vector through (free — the hierarchical window already
-    * shuffles it), so [[searchBatchDist]]'s hierarchical probe path
-    * can reuse THIS code verbatim rather than re-derive it.
-    * Package-visible so AnnIndexSpec can pin confinement (hierarchical
-    * probes never leave the chosen supers' children) and the
-    * flat == hierarchical equality at the battery operating point.
+  /** The (id, cell, v) probe assignment over a frame with columns
+    * (id, v): one row per element of the row's [[probeCellsCol]]
+    * array — flat top-`probes` ranking when `superProbes` <= 0, the
+    * two-level hierarchy otherwise; map-side either way. Carries the
+    * row's vector through, so [[searchBatchDist]]'s hierarchical probe
+    * path and [[cellTable]] reuse THIS code verbatim rather than
+    * re-derive it. Package-visible so AnnIndexSpec can pin confinement
+    * (hierarchical probes never leave the chosen supers' children)
+    * and the flat == hierarchical equality at the battery operating
+    * point.
     */
   private[graft] def probeCells(n: DataFrame, coarse: Seq[Seq[Float]],
-      probes: Int, superProbes: Int): DataFrame = {
-    val spark = n.sparkSession
-    if (superProbes <= 0) {
-      n.select(col("id"),
-        explode(flatProbeCellsCol(col("v"), coarse, probes))
-          .as("cell"), col("v"))
-    } else {
-      import spark.implicits._
-      import org.apache.spark.sql.expressions.Window
-      // child -> super: max-dot super per centroid, ties to the
-      // smaller super id; driver-side over the bounded centroid list
-      // (the same left fold as the SQL replay — bit-identical doubles)
-      val childDf = childAssignments(coarse).toDF("__sup", "cell", "__cv")
-      // top-`superProbes` supers per row: a √nCells-wide struct sort
-      val psup = topSupersCol(col("v"), coarse, superProbes)
-      val byId = Window.partitionBy("id")
-        .orderBy(desc("__d"), col("cell"))
-      // pin the rank window's exchange at work width (guide §2.5 via
-      // ScanSpread.workParts): its input is skinny (id, cell, dot)
-      // rows that AQE's byte-based coalescing collapses to ONE task,
-      // but upstream sits a per-row superProbes x children dot fan-out
-      // and downstream the probe x probe candidate join — measured
-      // 1.17 s single-task for dedup_embed_ann_2level at sf0.1
-      n.select(col("id"), col("v"), explode(psup).as("__sup"))
-        .join(broadcast(childDf), "__sup")
-        .select(col("id"), col("cell"), col("v"),
-          Similarity.dot(col("v"), col("__cv")).as("__d"))
-        .repartition(ScanSpread.workParts(n), col("id"))
-        .withColumn("__rn", row_number().over(byId))
-        .filter(col("__rn") <= probes)
-        .select(col("id"), col("cell"), col("v"))
-    }
-  }
+      probes: Int, superProbes: Int): DataFrame =
+    n.select(col("id"),
+      explode(probeCellsCol(col("v"), coarse, probes, superProbes))
+        .as("cell"), col("v"))
 
   /** Driver-side child→super assignment of the two-level hierarchy:
-    * one (super, cell, centroid-as-doubles) row per trained centroid,
-    * max-dot super per centroid with ties to the smaller super id —
-    * the ONE tree every hierarchical path (encode, pair-mining probe,
-    * distributed batch serve) derives from.
+    * one (super, cell) pair per trained centroid, max-dot super per
+    * centroid with ties to the smaller super id — the ONE tree every
+    * hierarchical path (encode, pair-mining probe, distributed batch
+    * serve) derives from.
     */
   private def childAssignments(coarse: Seq[Seq[Float]])
-      : Seq[(Int, Int, Seq[Double])] = {
+      : Seq[(Int, Int)] = {
     val supers = coarse.take(superCount(coarse.size))
-    def sdot(a: Seq[Float], b: Seq[Float]): Double =
-      a.zip(b).foldLeft(0.0)((acc, p) =>
-        acc + p._1.toDouble * p._2.toDouble)
     coarse.zipWithIndex.map { case (cv, c) =>
-      val sup = supers.zipWithIndex
-        .map { case (sv, s) => (sdot(cv, sv), s) }
-        .sortBy { case (d, s) => (-d, s) }.head._2
-      (sup, c, cv.map(_.toDouble))
+      (Similarity.topCells(cv.map(_.toDouble), supers, 1).head, c)
     }
   }
 
@@ -694,10 +611,10 @@ object AnnIndex {
 
   /** The flat top-`probes` probe-cell ARRAY as one map-side column:
     * rank (dot DESC, cell ASC) via an ascending struct sort on
-    * (-dot, cell). Shared by [[probeCells]] (the batch pair-mining
-    * assignment) and `StreamingOps.annGate`'s per-row stream
-    * assignment, so the gate probes exactly the cells batch mining
-    * would — the map-side-signature-sharing discipline of
+    * (-dot, cell). The flat branch of [[probeCellsCol]] (the batch
+    * pair-mining assignment), shared with `StreamingOps.annGate`'s
+    * per-row stream assignment, so the gate probes exactly the cells
+    * batch mining would — the map-side-signature-sharing discipline of
     * `nearDupGate`. Pure projection: no shuffle, no state,
     * streaming-safe.
     */
@@ -711,6 +628,48 @@ object AnnIndex {
     }: _*))
     transform(slice(sorted, 1, probes), s => s("c"))
   }
+
+  /** A row's top-`probes` probe cells as ONE map-side array column,
+    * ranked (dot DESC, cell ASC) — the assignment every pair miner,
+    * [[probeCells]] and the two-level encode ([[cellCol]], element 1)
+    * share. `superProbes` <= 0 ranks all nCells
+    * ([[flatProbeCellsCol]]); otherwise only the children of the
+    * row's top-`superProbes` super-cells ([[topSupersCol]], the tree
+    * of [[childAssignments]]) are ranked. The children ride as literal
+    * DATA (array-of-arrays of (cell, centroid) structs indexed by
+    * super) through higher-order functions — interpreted, but over
+    * superProbes·√nCells elements per row, with NO shuffle and NO
+    * per-cell codegen width, which is what the streaming ingest path
+    * requires (a per-id rank window is unsupported on streams and the
+    * flat projection stops compiling in the thousands of cells). Same
+    * dot arithmetic ([[graft.functions.DotDouble]], strict left fold)
+    * as every other ranking.
+    */
+  private[graft] def probeCellsCol(vec: Column, coarse: Seq[Seq[Float]],
+      probes: Int, superProbes: Int): Column =
+    if (superProbes <= 0) flatProbeCellsCol(vec, coarse, probes)
+    else {
+      val nSuper = superCount(coarse.size)
+      val childrenBySuper: Map[Int, Seq[Int]] =
+        childAssignments(coarse).groupBy(_._1).view
+          .mapValues(_.map(_._2)).toMap
+      val childType = "array<struct<c:int,cv:array<double>>>"
+      val childrenLit = array((0 until nSuper).map { s =>
+        val kids = childrenBySuper.getOrElse(s, Nil)
+        if (kids.isEmpty) array().cast(childType)
+        else array(kids.map { c =>
+          struct(lit(c).as("c"),
+            array(coarse(c).map(x => lit(x.toDouble)): _*).as("cv"))
+        }: _*).cast(childType)
+      }: _*)
+      val cands = flatten(transform(
+        topSupersCol(vec, coarse, superProbes),
+        s => element_at(childrenLit, s + 1)))
+      val ranked = array_sort(transform(cands, ch =>
+        struct((-Similarity.dot(vec, ch("cv"))).as("d"),
+          ch("c").as("c"))))
+      transform(slice(ranked, 1, probes), x => x("c"))
+    }
 
   /** The committed index's probe-cell corpus table — (cell, id, v,
     * nrm) with one row per (probed cell, vector), tombstones applied:
@@ -815,12 +774,7 @@ object AnnIndex {
       coarse: Seq[Seq[Float]], cents: Map[(Int, Int), Seq[Int]],
       probes: Int): (Seq[Int], Seq[Seq[Double]]) = {
     val qd = query.map(_.toDouble)
-    val cells = coarse.zipWithIndex
-      .map { case (c, j) =>
-        (qd.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble),
-          j)
-      }
-      .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
+    val cells = Similarity.topCells(qd, coarse, probes)
     val qdots = (0 until meta.m).map { sm =>
       val qm = qd.slice(sm * meta.sub, (sm + 1) * meta.sub)
       (0 until meta.nCentroids).map(c =>
@@ -1082,10 +1036,11 @@ object AnnIndex {
   }
 
   // --- semantic-dup GROUPS at rest ([[GroupsLifecycle]]) ----------
-  // Pair miners: [[cosinePairsIndexed]] over the corpus; the batch's
-  // probe cells against the corpus probe-cell assignment under the
-  // index's frozen centroids (the same probe x probe rule restricted
-  // to pairs touching the batch — the corpus side holds the batch, so
+  // Pair miners, all three through [[minCellPairs]]:
+  // [[cosinePairsIndexed]] over the corpus; the batch's probe cells
+  // against the corpus probe-cell assignment under the index's frozen
+  // centroids (the same probe x probe rule restricted to pairs
+  // touching the batch — the corpus side holds the batch, so
   // batch-internal pairs are included; the corpus assignment is one
   // shuffle-free map pass, the one per-corpus cost of this fold); and
   // the probe x probe self-join over the touched members (cells are
@@ -1136,17 +1091,9 @@ object AnnIndex {
       val bN = n.join(
         batch.select(col(idCol).cast("long").as("id")).distinct(),
         Seq("id"), "left_semi")
-      val bProbe = probeCells(bN, coarse, probes, superProbes)
-        .select(col("id").as("id_a"), col("cell"))
-        .localCheckpoint(false)
-      // corpus side pruned to the batch's probed cells before the join
-      val cProbe = probeCells(n, coarse, probes, superProbes)
-        .select(col("id").as("id_b"), col("cell"))
-        .join(bProbe.select("cell").distinct(), Seq("cell"),
-          "left_semi")
-      cosineVerified(bProbe.join(cProbe, "cell")
-        .filter(col("id_a") =!= col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct(), n, threshold)
+      cosineVerified(
+        minCellPairs(bN, n, coarse, probes, superProbes)(_ =!= _),
+        n, threshold)
     }
 
   /** Fold a JUST-QUEUED [[delete]]; `corpus` is the post-delete corpus
@@ -1161,14 +1108,8 @@ object AnnIndex {
       val mN = normalized(corpus, idCol, vecCol, dir)
         .join(members, Seq("id"), "left_semi")
         .localCheckpoint(false)
-      val probe0 = probeCells(mN, coarse, probes, superProbes)
-        .select(col("id"), col("cell"))
-      val probe =
-        if (superProbes <= 0) probe0 else probe0.localCheckpoint(false)
-      cosineVerified(probe
-        .join(probe.select(col("id").as("id2"), col("cell")), "cell")
-        .filter(col("id") < col("id2"))
-        .select(col("id").as("id_a"), col("id2").as("id_b"))
-        .distinct(), mN, threshold)
+      cosineVerified(
+        minCellPairs(mN, mN, coarse, probes, superProbes)(_ < _),
+        mN, threshold)
     }
 }

@@ -71,13 +71,6 @@ object ScanSpread {
 
   def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    // documented opt-out (spark.graft.scan.spread=false): restores
-    // the pre-r17 never-reshuffle plans — PlanShapeSpec uses it to
-    // keep pinning that the operators themselves add no corpus
-    // round-robin; ScanSpreadSpec pins the identity-on-wide-scans
-    // behavior that makes this a no-op at production scale.
-    if (df.sparkSession.conf.getOption("spark.graft.scan.spread")
-        .exists(_.equalsIgnoreCase("false"))) return df
     val sc = df.sparkSession.sparkContext
     val target = sc.defaultParallelism
     // r18 guard (ADVICE r17 / VERDICT r17 #7): only probe PURE SCAN

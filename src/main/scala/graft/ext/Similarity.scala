@@ -152,12 +152,7 @@ object Similarity {
       query: Seq[Float], cents: Seq[Seq[Float]], probes: Int = 2,
       k: Int = 10): DataFrame = {
     // driver-side: the query's closest cells
-    val qd = query.map(_.toDouble)
-    def sdot(c: Seq[Float]): Double =
-      qd.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble)
-    val probeCells = cents.zipWithIndex
-      .map { case (c, j) => (sdot(c), j) }
-      .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
+    val probeCells = topCells(query.map(_.toDouble), cents, probes)
     val qlit = array(query.map(x => lit(x.toDouble)): _*)
     df.select(col(idCol), col(vecCol).as("v"))
       .withColumn("__cell", ivfCell(col("v"), cents))
@@ -168,6 +163,22 @@ object Similarity {
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
+
+  /** Indices of the `n` centroids closest to `q` by dot product,
+    * ranked (dot DESC, index ASC) — the ONE driver-side ranking of the
+    * IVF probe pick, the persisted index's serve plan and its
+    * two-level child→super tree. Each dot is a strict left fold in
+    * dimension order, so the doubles are bit-identical wherever it is
+    * used.
+    */
+  private[graft] def topCells(q: Seq[Double], cents: Seq[Seq[Float]],
+      n: Int): Seq[Int] =
+    cents.zipWithIndex
+      .map { case (c, j) =>
+        (q.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble),
+          j)
+      }
+      .sortBy { case (d, j) => (-d, j) }.take(n).map(_._2)
 
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
       query: Seq[Float], nCentroids: Int = 16, probes: Int = 2,
@@ -378,31 +389,43 @@ object Similarity {
     * §2.4 / VERDICT r17 #4 — the train head used to spend 3+ serial
     * driver actions before any parallel work): the corpus dimension,
     * the global i8 scale (the [[i8Scale]] aggregate verbatim), and the
-    * raw vectors of every id < `nFirst` (superset of the PQ init ids,
-    * the IVF coarse centroids, AND the battery's query vector id 0).
-    * `first` is keyed by id; callers that need the LOWEST-n ids
-    * (ivfCentroids semantics) must check density 0..n-1 and fall back
-    * to the ordered fetch when ids are not dense — on dense 0-based
-    * ids the two reads are identical.
+    * raw vectors of every id in 0 until `nFirst` (superset of the PQ
+    * init ids, the IVF coarse centroids, AND the battery's query
+    * vector id 0), and the corpus's lowest id. `first` is keyed by id;
+    * callers that need the LOWEST-n ids (ivfCentroids semantics) must
+    * check density 0..n-1 and `minId >= 0`, and fall back to the
+    * ordered fetch otherwise — on dense 0-based ids the two reads are
+    * identical.
     */
   final case class PqHead(dim: Int, scale: Double,
-      first: Map[Long, Seq[Float]])
+      first: Map[Long, Seq[Float]], minId: Long)
+
+  /** Largest `nFirst` [[pqHead]] accepts. The head is ONE aggregate
+    * row holding up to nFirst vectors, so its size is bounded by
+    * nFirst × dim × 4 B (plus per-element overhead): 65,536 ids of a
+    * 1,024-dim embedding are 256 MiB, the most one result row should
+    * carry to the driver.
+    */
+  private[graft] val MaxHeadIds = 65536
 
   def pqHead(df: DataFrame, idCol: String, vecCol: String,
       nFirst: Int): PqHead = {
+    require(nFirst >= 0 && nFirst <= MaxHeadIds,
+      s"pqHead: nFirst $nFirst outside 0..$MaxHeadIds")
     val v = col(vecCol).cast("array<double>")
+    val id = col(idCol).cast("long")
     val row = df.agg(
       max(greatest(array_max(v), lit(0.0) - array_min(v))).as("s"),
       max(size(col(vecCol))).as("dim"),
-      collect_list(when(col(idCol).cast("long") < nFirst,
-        struct(col(idCol).cast("long").as("id"),
-          col(vecCol).as("v")))).as("init"))
+      collect_list(when(id >= 0 && id < nFirst,
+        struct(id.as("id"), col(vecCol).as("v")))).as("init"),
+      min(id).as("min_id"))
       .head()
     val s = row.getDouble(0)
     require(s > 0, "i8Scale: corpus is all-zero")
     val first = row.getSeq[org.apache.spark.sql.Row](2)
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
-    PqHead(row.getInt(1), s, first)
+    PqHead(row.getInt(1), s, first, row.getLong(3))
   }
 
   /** Driver-side replay of the code expression
@@ -662,16 +685,11 @@ object Similarity {
     // negative (the battery corpus), fetched with the ordered scan
     // otherwise
     val cents = head
-      .filter(h => (0 until nCells).forall(c => h.first.contains(c.toLong))
-        && h.first.keysIterator.forall(_ >= 0))
+      .filter(h => h.minId >= 0 &&
+        (0 until nCells).forall(c => h.first.contains(c.toLong)))
       .map(h => (0 until nCells).map(c => h.first(c.toLong)))
       .getOrElse(ivfCentroids(df, idCol, vecCol, nCells))
-    val qd = query.map(_.toDouble)
-    def sdot(c: Seq[Float]): Double =
-      qd.zip(c).foldLeft(0.0)((acc, p) => acc + p._1 * p._2.toDouble)
-    val probeCells = cents.zipWithIndex
-      .map { case (c, j) => (sdot(c), j) }
-      .sortBy { case (d, j) => (-d, j) }.take(probes).map(_._2)
+    val probeCells = topCells(query.map(_.toDouble), cents, probes)
     val member = df
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("__cell", ivfCell(col("v"), cents))

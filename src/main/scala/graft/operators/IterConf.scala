@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** ISOLATED execution scope for fixed-shape iteration bodies (CC,
-  * PageRank, k-core, label-prop, BFS, BPE merge, k-center): runs the
-  * loop with AQE disabled and the shuffle partition count derived from
-  * the loop's OWN state size — on a dedicated LOOP SESSION, never by
-  * mutating the caller's session.
+/** ISOLATED execution scope for fixed-shape iteration bodies
+  * (PageRank, k-core, label-prop, BFS): runs the loop with AQE
+  * disabled and the shuffle partition count derived from the loop's
+  * OWN state size — on a dedicated LOOP SESSION, never by mutating the
+  * caller's session.
   *
   * Why the conf (r17 optimization round, guide §1.2/§2.2/§2.4): AQE
   * executes every Exchange as its own query-stage JOB — submit,
@@ -20,9 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * spark.sql.shuffle.partitions near-empty tasks and joins plan as
   * unconsolidated SMJ: measured 2.15 s -> 4.73 s), so the partition
   * count must come with it: loop state is skinny keyed rows of KNOWN
-  * count, so partitions = ceil(stateRows / rowsPerPartition) — the
+  * count, so partitions = ceil(stateRows / RowsPerPartition) — the
   * explicit form of the coalescing AQE would have done at runtime,
-  * without the per-stage replanning.
+  * without the per-stage replanning. Loops that fire one action per
+  * round (connected components, k-center) gain nothing from the scope
+  * and run on the caller's adaptive session instead (r18 measurements
+  * in ConnectedComponents).
   *
   * Why the isolation (r18 — ADVICE r17 / VERDICT r17 #6): the r17
   * implementation SET those confs on the shared session and restored
@@ -36,19 +39,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * global temp view ([[rebind]]): the ANALYZED plan is re-homed, no
   * row conversion, no recompute, no plan change.
   *
-  * Scale posture (NOT a local-mode constant): rowsPerPartition
-  * defaults to 2M rows ≈ 30-60 MB of (long, long)/(long, double)
-  * state — inside the guide's 100 MB-1 GB band after join/agg
-  * amplification; override with spark.graft.loop.rowsPerPartition.
-  * A billion-node graph gets ~500 partitions; 477 near-dup nodes at
+  * Scale posture (NOT a local-mode constant): [[RowsPerPartition]] is
+  * 2M rows ≈ 30-60 MB of (long, long)/(long, double) state — inside
+  * the guide's 100 MB-1 GB band after join/agg amplification. A
+  * billion-node graph gets ~500 partitions; 477 near-dup nodes at
   * sf0.1 get 1. The cap at the session's shuffle.partitions ceiling
   * never RAISES parallelism above what the deployment sized. AQE's
   * wins (coalescing corpus-sized scans, skew-splitting giant mining
   * joins) apply OUTSIDE the loop, where AQE stays on; loop
   * aggregations (min/sum by key) partial-aggregate map-side, so a
-  * hot key ships one row per map partition, not its mass. Opt out
-  * with spark.graft.loop.aqe=true to keep AQE inside loops too (the
-  * pre-r17 lazy path — also how PlanShapeSpec pins loop plan shapes).
+  * hot key ships one row per map partition, not its mass. The lazy
+  * AQE-inside-the-loop alternative measured slower (OPTIMIZATION_r18
+  * Wave 3: graph_pagerank 2.27 s isolated vs 4.01 s lazy).
   */
 object IterConf {
 
@@ -104,46 +106,34 @@ object IterConf {
     finally { df.sparkSession.catalog.dropGlobalTempView(name); () }
   }
 
-  /** True when the session opted out of loop materialization
-    * (spark.graft.loop.aqe=true) — operators whose pre-r17 final
-    * frame was NOT checkpointed use this to keep that plan visible. */
-  def lazyLoop(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.loop.aqe").exists(_.toBoolean)
+  /** Loop state rows per shuffle partition. */
+  private val RowsPerPartition = 2000000L
 
-  /** Loop partition count: ceil(stateRows / rowsPerPartition), capped
+  /** Loop partition count: ceil(stateRows / [[RowsPerPartition]]), capped
     * by the session's configured shuffle width. */
   private[graft] def loopParts(parent: SparkSession,
       stateRows: Long): Long = {
-    val rowsPer = parent.conf
-      .getOption("spark.graft.loop.rowsPerPartition")
-      .map(_.toLong).getOrElse(2000000L)
     val ceiling = parent.conf.get("spark.sql.shuffle.partitions").toLong
     math.max(1L, math.min(ceiling,
-      (math.max(stateRows, 1L) + rowsPer - 1) / rowsPer))
+      (math.max(stateRows, 1L) + RowsPerPartition - 1) /
+        RowsPerPartition))
   }
 
-  /** Hand `body` the ISOLATED scoped session itself (AQE off,
-    * state-derived partition count) — for query bodies that must
-    * CONSTRUCT their whole plan under the scoped conf, not just
-    * execute a loop over rebound inputs: under AQE, every lazy
-    * localCheckpoint in a plan compiles `toRdd` at CALL time, which
-    * materializes its upstream exchanges as serial query-stage jobs
-    * during query CONSTRUCTION (measured r18: pipeline_ingest_gates_fast
-    * ran 49 serial ~1-task jobs at a ~100 ms/job driver floor). Under
-    * the scoped conf the same construction compiles without executing,
-    * and the final action runs the whole checkpoint cascade as a
-    * handful of pipelined jobs. The caller materializes inside the
-    * scope and [[rebind]]s escaping frames to the parent. The parent
-    * session is never touched.
+  /** Run `body` over the loop-session rebinds of `inputs`, on an
+    * isolated clone configured with AQE off and the state-derived
+    * partition count. The PARENT session is never touched. Any
+    * DataFrame escaping in `body`'s result stays bound to the loop
+    * session — callers must [[rebind]] escaping frames back to the
+    * parent (or go through [[materializeLoop]], which does).
     */
-  def scopedSession[T](parent: SparkSession, stateRows: Long,
-      minParts: Long = 1L)(body: SparkSession => T): T = {
+  def loopScope[T](parent: SparkSession, stateRows: Long,
+      inputs: Seq[DataFrame])(body: Seq[DataFrame] => T): T = {
     val child = acquire(parent)
     try {
       child.conf.set("spark.sql.adaptive.enabled", "false")
       child.conf.set("spark.sql.shuffle.partitions",
-        math.max(minParts, loopParts(parent, stateRows)).toString)
-      body(child)
+        loopParts(parent, stateRows).toString)
+      body(inputs.map(rebind(_, child)))
     } finally {
       try {
         parent.conf.getOption("spark.sql.adaptive.enabled") match {
@@ -157,37 +147,16 @@ object IterConf {
     }
   }
 
-  /** Run `body` over the loop-session rebinds of `inputs`, on an
-    * isolated clone configured with AQE off and the state-derived
-    * partition count. The PARENT session is never touched. Any
-    * DataFrame escaping in `body`'s result stays bound to the loop
-    * session — callers must [[rebind]] escaping frames back to the
-    * parent (or go through [[materializeLoop]], which does). With
-    * spark.graft.loop.aqe=true this is `body(inputs)` on the parent,
-    * un-reconfigured — the pre-r17 behavior.
-    */
-  def loopScope[T](parent: SparkSession, stateRows: Long,
-      inputs: Seq[DataFrame])(body: Seq[DataFrame] => T): T =
-    if (lazyLoop(parent)) body(inputs)
-    else scopedSession(parent, stateRows) { child =>
-      body(inputs.map(rebind(_, child)))
-    }
-
   /** Build-and-materialize a lazy loop result in the isolated loop
     * scope: `body` must end in a LAZY localCheckpoint; the count()
     * here executes the whole fixed-shape loop as pipelined stages
     * under the loop conf, and the caller gets the cached result
-    * re-homed on ITS session. With spark.graft.loop.aqe=true this is
-    * the IDENTITY on `body(input)` — the lazy frame is returned
-    * un-executed and the loop runs under the caller's first action
-    * with the session's normal AQE (the pre-r17 behavior; also how
-    * PlanShapeSpec pins the loop plan shape).
+    * re-homed on ITS session.
     */
   def materializeLoop(spark: SparkSession, stateRows: Long,
       inputs: Seq[DataFrame])(body: Seq[DataFrame] => DataFrame)
       : DataFrame =
-    if (lazyLoop(spark)) body(inputs)
-    else loopScope(spark, stateRows, inputs) { reb =>
+    loopScope(spark, stateRows, inputs) { reb =>
       val df = body(reb)
       df.count()
       rebind(df, spark)

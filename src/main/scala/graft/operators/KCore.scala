@@ -63,14 +63,11 @@ object KCore {
         .join(members.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(members.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .groupBy("src").agg(count(lit(1)).as("deg"))
-      val out = members
+      // checkpointed so materializeLoop's count() caches it
+      members
         .join(inCore, members("id") === inCore("src"), "left")
         .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
-      // pre-r17 the final join was served lazily (plan visible to
-      // PlanShapeSpec via the loop.aqe opt-out); the materialized
-      // path checkpoints it so materializeLoop's count() caches it
-      if (IterConf.lazyLoop(e.sparkSession)) out
-      else out.localCheckpoint(false)
+        .localCheckpoint(false)
     }
   }
 }

@@ -72,8 +72,9 @@ object PipelineQueries {
   // the opt-out conf, plus a calib-adjusted full-bench pair). The
   // scoring stateful gates were the worst case: the byte-derived width
   // serialized the bucket scoring into one 9.5 s task.
-  // IterConf.scopedSession itself stays — the fixed-shape iteration
-  // loops (loopScope/materializeLoop) are where AQE-off genuinely wins.
+  // The isolated AQE-off session stays only inside IterConf's
+  // fixed-shape iteration loops (loopScope/materializeLoop), where it
+  // genuinely wins.
 
   /** The corpus is synthetic word soup with no natural PII, so the PII
     * query plants deterministic PII derived from doc_id (same
@@ -785,8 +786,9 @@ object PipelineQueries {
     // TWO-LEVEL cell assignment (r14), as its own oracle-verified
     // query: the first ceil(sqrt(nCells)) trained centroids double as
     // super-cells and a row ranks only the CHILDREN of its top-3
-    // supers — O(superProbes·sqrt(nCells)) dots per row and a plan
-    // that stays narrow at ANY nCells (broadcast child table, not an
+    // supers — O(superProbes·sqrt(nCells)) dots per row, ranked
+    // map-side, and a plan that stays narrow at ANY nCells (the child
+    // table is literal data under higher-order functions, not an
     // nCells-wide codegen expression — the flat projection hits
     // Janino limits in the thousands of cells). MEASURED at sf1.0
     // (nCells=160, BENCH_SF1.md round-14 addendum): the hierarchy

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.logging.log4j.{Level, LogManager}
 
 /** The one session factory: what every session carries, that the test
-  * session is one of them, and that no other main file builds its own.
+  * session is one of them, that no other main file builds its own, and
+  * that no main file reads a graft conf key beyond the factory's
+  * optimizer opt-ins.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -44,5 +46,19 @@ class GraftSessionSpec extends SparkSpec {
       .map(_.getFileName.toString)
     finally walk.close()
     assert(builders == Seq("GraftSession.scala"))
+  }
+
+  test("the only spark.graft.* keys under src/main are the three " +
+      "optimizer opt-ins GraftSession sets") {
+    val key = "\"spark\\.graft\\.([A-Za-z0-9_.]+)".r
+    val walk = Files.walk(Paths.get("src/main"))
+    val keys = try walk.filter(Files.isRegularFile(_)).toArray.toSeq
+      .map(_.asInstanceOf[Path])
+      .flatMap(p => key.findAllMatchIn(source(p)).map(_.group(1)))
+      .toSet
+    finally walk.close()
+    val extra = keys -- Set("rangeJoin.binWidth",
+      "rangeJoin.maxBinsPerRow", "aggJoinToWindow")
+    assert(extra.isEmpty, s"graft conf keys beyond the opt-ins: $extra")
   }
 }

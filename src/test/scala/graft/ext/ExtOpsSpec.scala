@@ -567,8 +567,10 @@ class SimilaritySpec extends SparkSpec {
     // ids -2..N-3: the lowest 16 ids are -2..13, not the dense 0..15
     val shifted = emb.withColumn("vec_id", col("vec_id") - 2L)
     val head = Similarity.pqHead(shifted, "vec_id", "embedding", 16)
-    assert(head.first.contains(-2L) &&
-      (0L until 16L).forall(head.first.contains))
+    // the head ships ids 0..15 only; the negative ids are seen through
+    // minId, which sends ivfPqTopK to the ordered scan
+    assert(head.first.keySet == (0L until 16L).toSet)
+    assert(head.minId == -2L)
     def run(h: Option[Similarity.PqHead]): Seq[(Long, Double)] =
       Similarity.ivfPqTopK(shifted, "vec_id", "embedding", queryVec,
           nCells = 16, probes = 2, k = 10, head = h)
@@ -576,6 +578,15 @@ class SimilaritySpec extends SparkSpec {
     val served = run(Some(head))
     assert(served.nonEmpty)
     assert(served == run(None))
+  }
+
+  test("pqHead refuses nFirst above its cap before running a job") {
+    val corpus = emb
+    val work = sparkWorkOf {
+      intercept[IllegalArgumentException](Similarity.pqHead(corpus,
+        "vec_id", "embedding", Similarity.MaxHeadIds + 1))
+    }
+    assert(work.jobs.isEmpty, work.jobs)
   }
 
   test("annTopK returns exact scores, always finds the query itself") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions.col
 /** Pins the r17 scale-adaptive scan spreading: the conditional
   * round-robin fires only on under-parallel scans, is the IDENTITY
   * when the input already has >= cluster-parallelism partitions (the
-  * production case — no corpus reshuffle at scale), passes streaming
-  * frames through, and honors the documented opt-out conf.
+  * production case — no corpus reshuffle at scale), and passes
+  * streaming frames through.
   */
 class ScanSpreadSpec extends SparkSpec {
   import spark.implicits._
@@ -32,14 +32,6 @@ class ScanSpreadSpec extends SparkSpec {
     val wide = (1 to 100).toDF("x").repartition(p + 1)
     val out = ScanSpread.spread(wide)
     assert(out eq wide) // identity, not just equal
-  }
-
-  test("spark.graft.scan.spread=false opts out entirely") {
-    spark.conf.set("spark.graft.scan.spread", "false")
-    try {
-      val narrow = (1 to 10).toDF("x").coalesce(1)
-      assert(ScanSpread.spread(narrow) eq narrow)
-    } finally spark.conf.unset("spark.graft.scan.spread")
   }
 
   test("streaming frames pass through") {

@@ -8,13 +8,38 @@ import graft.{SparkEntry, SparkSpec}
   * tables. A refactor that silently loses one of these still passes
   * row-level correctness; this spec catches it.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private val d = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, d)
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+  }
+
+  /** True iff every round-robin exchange in `name`'s physical plan sits
+    * directly above a corpus scan (Project/Filter over a file scan) —
+    * ScanSpread's layout-conditional spread, never a reshuffle of
+    * derived rows.
+    */
+  private def roundRobinOnlyOverScans(name: String): Boolean = {
+    import org.apache.spark.sql.execution._
+    def corpusScan(p: SparkPlan): Boolean = p match {
+      case _: FileSourceScanExec => true
+      case x: ProjectExec => corpusScan(x.child)
+      case x: FilterExec => corpusScan(x.child)
+      case x: ColumnarToRowExec => corpusScan(x.child)
+      case x: WholeStageCodegenExec => corpusScan(x.child)
+      case x: InputAdapter => corpusScan(x.child)
+      case _ => false
+    }
+    val p = SparkEntry.queries(name)(spark, d).queryExecution.executedPlan
+    collect(p) {
+      case e: exchange.ShuffleExchangeExec if e.outputPartitioning
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical
+            .RoundRobinPartitioning] => e.child
+    }.forall(corpusScan)
   }
 
   test("text_lm_kn: model joins are keyed (no cartesian); the only " +
@@ -29,18 +54,17 @@ class PlanShapeSpec extends SparkSpec {
 
   test("graph_kcore: per-round peels are semi joins + partial-agg " +
       "degree counts; no cartesian, no window anywhere") {
-    // r17: the peel loop materializes inside IterConf.materializeLoop,
-    // so the served plan is a cached-RDD scan; spark.graft.loop.aqe
-    // = true is the documented opt-out that returns the LAZY loop
-    // plan — pin the loop's shape through it.
-    spark.conf.set("spark.graft.loop.aqe", "true")
-    try {
-      val p = plan("graph_kcore")
-      assert(!p.contains("CartesianProduct"), p)
-      assert(p.contains("LeftSemi"),
-        "survivor filtering must be semi joins:\n" + p)
-      assert(!p.contains("WindowExec"), "no window belongs here:\n" + p)
-    } finally spark.conf.unset("spark.graft.loop.aqe")
+    // the peel loop materializes inside IterConf.materializeLoop, so
+    // the served plan is a cached-RDD scan — pin the shape of the
+    // plans the loop executed (on its loop session) instead
+    val p = sparkWorkOf {
+      SparkEntry.queries("graph_kcore")(spark, d)
+    }.plans.mkString("\n")
+    assert(!p.contains("CartesianProduct"), p)
+    assert(p.contains("LeftSemi"),
+      "survivor filtering must be semi joins:\n" + p)
+    assert(!p.contains("WindowExec") && !"\\(\\d+\\) Window".r
+      .findFirstIn(p).isDefined, "no window belongs here:\n" + p)
   }
 
   test("graph_link_predict: top-k runs as TakeOrderedAndProject " +
@@ -178,14 +202,11 @@ class PlanShapeSpec extends SparkSpec {
     // reduction. r17: ScanSpread adds a CONDITIONAL round-robin that
     // fires only when the planned scan has fewer partitions than the
     // cluster's parallelism (identity at production scale —
-    // ScanSpreadSpec pins that); with it opted out, the operators
-    // themselves must still add none.
-    spark.conf.set("spark.graft.scan.spread", "false")
-    try
-      for (q <- Seq("dedup_minhash", "dedup_ngram", "dedup_simhash",
-          "dedup_incremental", "dedup_survivors"))
-        assert(!plan(q).contains("RoundRobinPartitioning"), q)
-    finally spark.conf.unset("spark.graft.scan.spread")
+    // ScanSpreadSpec pins that) directly above the corpus scan; the
+    // operators themselves must add none.
+    for (q <- Seq("dedup_minhash", "dedup_ngram", "dedup_simhash",
+        "dedup_incremental", "dedup_survivors"))
+      assert(roundRobinOnlyOverScans(q), q)
   }
 
   test("dedup_incremental: two-sided bucket join, no cartesian") {
@@ -508,15 +529,12 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("dedup_containment: candidates via band buckets — no " +
-      "cartesian, no round-robin corpus reshuffle (ScanSpread " +
-      "opted out — see the dedup-pipelines test)") {
-    spark.conf.set("spark.graft.scan.spread", "false")
-    try {
-      val p = plan("dedup_containment")
-      assert(!p.contains("CartesianProduct") &&
-        !p.contains("BroadcastNestedLoopJoin"))
-      assert(!p.contains("RoundRobinPartitioning"))
-    } finally spark.conf.unset("spark.graft.scan.spread")
+      "cartesian; round-robin only directly above a corpus scan (see " +
+      "the dedup-pipelines test)") {
+    val p = plan("dedup_containment")
+    assert(!p.contains("CartesianProduct") &&
+      !p.contains("BroadcastNestedLoopJoin"))
+    assert(roundRobinOnlyOverScans("dedup_containment"))
   }
 
   private def scansOf(p: String, table: String): Int =
