@@ -49,7 +49,8 @@ object SparkEntry {
     *     dedup_embed_ann_groups_index (at-rest labels)
     *   - dedup_bloom (per-run bitmap re-fold) → dedup_bloom_index
     *   - pipeline_ingest_gates (all-legs-always) →
-    *     pipeline_ingest_gates_fast / _composed (short-circuited)
+    *     pipeline_ingest_gates_fast / _composed (two names of one
+    *     short-circuited operator, `StreamingOps.ingestGates`)
     */
   val refereeQueries: Set[String] = Set(
     "dedup_minhash", "dedup_ngram", "dedup_incremental",

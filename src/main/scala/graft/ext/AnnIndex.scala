@@ -567,12 +567,12 @@ object AnnIndex {
     * (id, v): one row per element of the row's [[probeCellsCol]]
     * array — flat top-`probes` ranking when `superProbes` <= 0, the
     * two-level hierarchy otherwise; map-side either way. Carries the
-    * row's vector through, so [[searchBatchDist]]'s hierarchical probe
-    * path and [[cellTable]] reuse THIS code verbatim rather than
-    * re-derive it. Package-visible so AnnIndexSpec can pin confinement
-    * (hierarchical probes never leave the chosen supers' children)
-    * and the flat == hierarchical equality at the battery operating
-    * point.
+    * row's vector through, so [[searchBatchDist]]'s probe path (flat
+    * and hierarchical) and [[cellTable]] reuse THIS code verbatim
+    * rather than re-derive it. Package-visible so AnnIndexSpec can pin
+    * confinement (hierarchical probes never leave the chosen supers'
+    * children) and the flat == hierarchical equality at the battery
+    * operating point.
     */
   private[graft] def probeCells(n: DataFrame, coarse: Seq[Seq[Float]],
       probes: Int, superProbes: Int): DataFrame =
@@ -878,19 +878,19 @@ object AnnIndex {
     * a distributed scan end to end (pinned in AnnIndexSpec: the
     * executed plan reads the queries source, no collect):
     *
-    *   - probe cells per query: on a FLAT index (meta.hier = 0) the
-    *     bounded coarse table (nCells rows) is BROADCAST and
-    *     cross-joined to the queries; a qid-keyed window keeps the
-    *     top-`probes` cells by (dot DESC, cell ASC) — the same rank
-    *     [[search]] computes on the driver, now as a plan. On a
-    *     hier>0 index the selection routes through [[probeCells]]'
-    *     super→children hierarchy instead (sp = meta.hier):
-    *     O(hier·√nCells) candidate rows per query in place of the
-    *     nCells-row cross product — the scale shape for the
-    *     nCells ∝ N regime, equal to flat when hier >= nSuper and the
-    *     cosinePairsIndexed superProbes recall knob below it (the
-    *     driver-bounded [[search]]/[[searchBatch]] keep the exact
-    *     flat rank: their nCells work is driver-side and bounded);
+    *   - probe cells per query come from [[probeCells]], map-side:
+    *     on a FLAT index (meta.hier = 0) its [[probeCellsCol]] array
+    *     ranks all nCells by (dot DESC, cell ASC) — the same rank
+    *     [[search]] computes on the driver. That projection is
+    *     nCells wide, as wide as the flat build's own encode
+    *     (`Similarity.ivfCell`), so it narrows no index that can be
+    *     built. On a hier>0 index the array ranks only the children
+    *     of the query's top-`hier` supers: O(hier·√nCells) dots per
+    *     query — the scale shape for the nCells ∝ N regime, equal to
+    *     flat when hier >= nSuper and the cosinePairsIndexed
+    *     superProbes recall knob below it (the driver-bounded
+    *     [[search]]/[[searchBatch]] keep the exact flat rank: their
+    *     nCells work is driver-side and bounded);
     *   - the codes scan is semi-joined on the DISTINCT probed-cell
     *     set (≤ nCells values, whatever |Q|) — dynamic pruning of the
     *     cell-partitioned table replaces [[searchBatch]]'s static
@@ -908,9 +908,9 @@ object AnnIndex {
     *
     * Duplicate qids fail IN-PLAN (raise_error under a qid-count
     * window) — same contract as [[searchBatch]]'s driver check.
-    * Trade-offs vs [[searchBatch]]: the probe rank costs one
-    * |Q|·nCells cross product (broadcast, map-side) plus a qid
-    * exchange, and the codes⋈probes join is planned by AQE (a small
+    * Trade-offs vs [[searchBatch]]: the probe rank costs |Q|·nCells
+    * dots (flat) computed map-side in the query scan, and the
+    * codes⋈probes join is planned by AQE (a small
     * batch broadcasts; a corpus-sized one shuffles on `cell`, whose
     * ≤ nCells distinct values SKEW). For that corpus-sized case pass
     * `salts` > 0: the codes side keeps a deterministic per-row salt
@@ -936,7 +936,6 @@ object AnnIndex {
       probes: Int = 2, k: Int = 10, nCand: Int = 80,
       salts: Int = 0, superProbes: Int = -1): DataFrame = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val (meta, coarse, cents) = load(spark, dir)
     val dim = meta.m * meta.sub
@@ -954,16 +953,14 @@ object AnnIndex {
                 col("__qid").cast("string"))))
               .otherwise(col("__qv"))).as("__qv"))
     // Probe-cell selection follows the MARKER-RECORDED hierarchy
-    // (r16, closing the r15 flat-assignment seam): a flat index ranks
-    // ALL nCells per query row (crossJoin + window — exact, but the
-    // measured super-linear shape past ~1k cells, BENCH_SF1.md
-    // "Two-level break-even MEASURED at nCells ≥ 1024"),
-    // while a hier>0 index routes through probeCells' super→children
-    // path VERBATIM — O(hier·√nCells) candidate rows per query, the
-    // same tree build/append/ingest encode with, so probe cells at
-    // probes=1 equal the encode cell (the encode-spec consistency).
-    // Equal to the flat ranking by construction when hier >= nSuper;
-    // below that it is the same approximate-by-design recall knob as
+    // through probeCells, the assignment build/append/ingest encode
+    // with: a flat index ranks ALL nCells per query row (exact; the
+    // super-linear shape past ~1k cells is BENCH_SF1.md's "Two-level
+    // break-even MEASURED at nCells ≥ 1024"), a hier>0 index only the
+    // children of its top supers, so probe cells at probes=1 equal
+    // the encode cell (the encode-spec consistency). Equal to the
+    // flat ranking by construction when hier >= nSuper; below that it
+    // is the same approximate-by-design recall knob as
     // cosinePairsIndexed's superProbes (pinned in LayoutSpec).
     //
     // `superProbes` makes recall a SERVE-TIME knob like
@@ -973,25 +970,10 @@ object AnnIndex {
     // small nCells), and a positive value widens/narrows the probed
     // supers per call.
     val sp = if (superProbes < 0) meta.hier else superProbes
-    val byQd = Window.partitionBy("__qid")
-      .orderBy(desc("__d"), col("cell"))
-    val probeQ =
-      if (sp <= 0) {
-        val coarseDf = coarse.zipWithIndex
-          .map { case (v, j) => (j, v.map(_.toDouble)) }
-          .toDF("cell", "__cv")
-        q0.crossJoin(broadcast(coarseDf))
-          .select(col("__qid"), col("__qv"), col("cell"),
-            Similarity.dot(col("__qv"), col("__cv")).as("__d"))
-          .withColumn("__rn", row_number().over(byQd))
-          .filter(col("__rn") <= probes)
-          .select(col("__qid"), col("__qv"), col("cell"))
-      } else
-        probeCells(
-            q0.select(col("__qid").as("id"), col("__qv").as("v")),
-            coarse, probes, sp)
-          .select(col("id").as("__qid"), col("v").as("__qv"),
-            col("cell"))
+    val probeQ = probeCells(
+        q0.select(col("__qid").as("id"), col("__qv").as("v")),
+        coarse, probes, sp)
+      .select(col("id").as("__qid"), col("v").as("__qv"), col("cell"))
     // dynamic pruning: the ≤ nCells distinct probed cells semi-join
     // the partition column of the codes scan
     val codes = codesTable(spark, dir)

@@ -56,26 +56,6 @@ object PipelineQueries {
   private val EmbedBands = 24
   private val EmbedRowsPerBand = 6
 
-  // NOTE (r18 negative result, recorded so later rounds do not retry):
-  // a "servedScoped" mechanism — construct + materialize a gate query
-  // on IterConf's isolated session with AQE off and footer-derived
-  // partitions, to stop lazy localCheckpoints from compiling/executing
-  // their exchanges as serial ~1-task jobs during query construction —
-  // was built, measured, and REVERTED for every query it was tried on
-  // (pipeline_ingest_gates_fast/_composed, dedup_exact_stateful,
-  // dedup_minhash_stateful, dedup_embed_ann_stateful,
-  // dedup_groups_index, dedup_survivors_index). It won only in
-  // cold-JVM profiling (e.g. _fast 11.9→4.9 s, where each action costs
-  // ~150 ms of driver/codegen warmup); under WARM bench conditions the
-  // adaptive plans' runtime broadcasts/coalescing beat the chatter
-  // savings on every shape (same-window control-normalized A/Bs via
-  // the opt-out conf, plus a calib-adjusted full-bench pair). The
-  // scoring stateful gates were the worst case: the byte-derived width
-  // serialized the bucket scoring into one 9.5 s task.
-  // The isolated AQE-off session stays only inside IterConf's
-  // fixed-shape iteration loops (loopScope/materializeLoop), where it
-  // genuinely wins.
-
   /** The corpus is synthetic word soup with no natural PII, so the PII
     * query plants deterministic PII derived from doc_id (same
     * construction in the oracle), then detects and redacts it — the
@@ -451,23 +431,8 @@ object PipelineQueries {
     // pairs), exact-verified on candidate re-reads only, folded LEFT
     // from the batch universe so no-match docs still report
     // near_dup=false.
-    "dedup_ngram_index_flags" -> ((s, d) => {
-      val dir = minhashIndexFor(s, d, ngram = true)
-      val incoming = documents(s, d).filter(col("doc_id") % 20 === 0)
-      val pairs = graft.ext.MinHashIndex.probeVerified(
-          incoming, documents(s, d), "doc_id", "text", dir,
-          threshold = 0.7, estThreshold = 0.5)
-        .filter(col("id_a") =!= col("id_b"))
-      incoming.select(col("doc_id"))
-        .join(pairs.groupBy(col("id_a").as("doc_id"))
-            .agg(count(lit(1)).as("n_matches"),
-              max(col("jaccard")).as("best_jaccard")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          col("n_matches").isNotNull.as("near_dup"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          coalesce(col("best_jaccard"), lit(0.0)).as("best_jaccard"))
-    }),
+    "dedup_ngram_index_flags" -> ((s, d) =>
+      minhashFlags(s, d, ngram = true, threshold = 0.7)),
 
     // PERSISTED bloom gate (round 15): dedup_bloom re-folds the
     // bitmap from a corpus scan every run; this leg serves the SAME
@@ -518,7 +483,7 @@ object PipelineQueries {
     // (one 9.5 s task: the whole bucket scoring serialized) and still
     // ~3x over baseline at the work-width floor (AQE's runtime
     // coalescing/broadcasts genuinely pay here); the exact gate's
-    // scoped serve was later reverted too (see the module-level note).
+    // scoped serve was later reverted too (see ingestFrontDoor's note).
     "dedup_minhash_stateful" -> ((s, d) => {
       val dir = minhashIndexFor(s, d)
       val incoming = documents(s, d).filter(col("doc_id") % 20 === 0)
@@ -534,15 +499,8 @@ object PipelineQueries {
           documents(s, d), "doc_id", "text", dir,
           threshold = JaccardThreshold)
         .filter(col("id_a") =!= col("id_b"))
-      incoming.select(col("doc_id"))
-        .join(pairs.groupBy(col("id_a").as("doc_id"))
-            .agg(count(lit(1)).as("n_matches"),
-              max(col("jaccard")).as("best_jaccard")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          col("n_matches").isNotNull.as("near_dup"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          coalesce(col("best_jaccard"), lit(0.0)).as("best_jaccard"))
+      verdictFold(incoming,
+        pairs.select(col("id_a").as("doc_id"), col("jaccard")))
     }),
 
     // STATE-STORE embedding near-dup flags, batch face (round 17):
@@ -567,15 +525,8 @@ object PipelineQueries {
         .filter(col("cand_id").isNotNull &&
           col("cos") >= CosineThreshold)
         .select(col("vec_id"), col("cand_id"), col("cos")).distinct()
-      incoming.select(col("vec_id"))
-        .join(cand.groupBy(col("vec_id"))
-            .agg(count(lit(1)).as("n_matches"),
-              max(col("cos")).as("best_cos")),
-          Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          col("n_matches").isNotNull.as("near_dup"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          round(coalesce(col("best_cos"), lit(0.0)), 6).as("best_cos"))
+      verdictFold(incoming, cand.select(col("vec_id"), col("cos")),
+        round(_, 6))
     }),
 
     // The COMPOSED ingest front door (round 15): one row per incoming
@@ -605,94 +556,13 @@ object PipelineQueries {
             .as("admit"))
     }),
 
-    // SHORT-CIRCUITED front door (round 16): an exact-dup hit makes
-    // the two expensive near-dup verdicts moot — the batch's exact
-    // dups are anti-joined out BEFORE the MinHash probe/verify and
-    // the ANN candidate legs run, so their work shrinks to the
-    // surviving docs (the common win on a recrawl-heavy batch). The
-    // ANN leg additionally runs BATCH-BOUNDED (incoming probe cells
-    // joined to the corpus cell table — no corpus-wide pair mining).
-    // Verdict columns match pipeline_ingest_gates with the skipped
-    // legs NULL (fold-through: an exact dup is rejected regardless);
-    // per-doc verdicts on survivors are identical by per-doc
-    // independence, which the oracle (the referee legs CASE-NULLed on
-    // exact_dup) hash-checks. pipeline_ingest_gates stays the
-    // all-legs referee.
-    // r18: a servedScoped (AQE-off isolated-session) serve was TRIED
-    // and REVERTED — it won only in cold-JVM profiling (11.9→4.9 s);
-    // in warm bench conditions the adaptive plan's runtime broadcasts
-    // beat the chatter savings (same-window control-normalized A/B:
-    // scoped ~3.8 s vs adaptive 3.5 s; the full-bench calib-adjusted
-    // pair agreed). The kept wins here are the parallel AnnIndex.load,
-    // the footer-derived nCells, and the broadcast probe side in
-    // embedAnnFlagsBounded.
-    "pipeline_ingest_gates_fast" -> ((s, d) => {
-      val (bdir, tsKey) = bloomIndexFor(s, d)
-      // the verdict universe matches the referee's inner joins: docs
-      // that also have an embedding row (at some SFs documents
-      // outnumber embeddings) — a skinny id semi-join, not a probe
-      val emUniverse = embeddings(s, d)
-        .filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id").as("doc_id"))
-      val bl = graft.ext.BloomIndex.gate(
-          documents(s, d).filter(col("doc_id") % 20 === 0),
-          "doc_id", tsKey, bdir)
-        .join(emUniverse, Seq("doc_id"), "left_semi")
-        .localCheckpoint(false)
-      val keep = bl.filter(!col("exact_dup")).select(col("doc_id"))
-      val mh = minhashFlags(s, d, Some(keep)).select(col("doc_id"),
-        col("near_dup").as("nd_text"), col("best_jaccard"))
-      val em = embedAnnFlagsBounded(s, d,
-          keep.select(col("doc_id").as("vec_id")))
-        .select(col("vec_id").as("doc_id"),
-          col("near_dup").as("nd_embed"), col("best_cos"))
-      bl.select(col("doc_id"), col("exact_dup"))
-        .join(mh, Seq("doc_id"), "left")
-        .join(em, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("exact_dup"),
-          col("nd_text"), col("best_jaccard"),
-          col("nd_embed"), col("best_cos"),
-          (!col("exact_dup") && !col("nd_text") && !col("nd_embed"))
-            .as("admit"))
-    }),
-
-    // The composed front door AS ONE OPERATOR (round 17 — VERDICT
-    // r16 #1): StreamingOps.ingestGates chains the three gates on a
-    // single frame with the _fast short-circuit fold-through and
-    // generation guards on all three index dirs. Batch and stream
-    // share the one definition (the gates' watermark skips on a
-    // bounded frame); this query runs it in BATCH mode over the
-    // referee's universe and SHARES pipeline_ingest_gates_fast's
-    // oracle verbatim — the composition, the in-stream exact verify
-    // (shingle-array Jaccard == the relational count verify), and
-    // the fold-through NULLs are all hash-checked against the same
-    // replay. IngestGatesSpec pins stream == batch across
-    // micro-batches and a restart.
-    // (same r18 scoped-serve revert as pipeline_ingest_gates_fast)
-    "pipeline_ingest_gates_composed" -> ((s, d) => {
-      val (bdir, tsKey) = bloomIndexFor(s, d)
-      val mdir = minhashIndexFor(s, d)
-      val (adir, emb) = annIndexFor(s, d)
-      // ONE side-table load serves the cell table AND the gate's probe
-      // assignment (plumbed, never cached across runs)
-      val loaded = graft.ext.AnnIndex.load(s, adir)
-      val cells = graft.ext.AnnIndex.cellTable(emb, "vec_id",
-        "embedding", adir, probes = 4, pre = Some(loaded))
-      // the referee's row universe: incoming docs with an embedding
-      // row, each carrying BOTH text and vector
-      val incoming = documents(s, d)
-        .filter(col("doc_id") % 20 === 0)
-        .join(emb.filter(col("vec_id") % 20 === 0)
-            .select(col("vec_id").as("doc_id"), col("embedding")),
-          "doc_id")
-        .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
-      graft.streaming.StreamingOps.ingestGates(incoming, "doc_id",
-        "text", "embedding", "ts", documents(s, d), bdir, tsKey,
-        mdir, jaccardThreshold = JaccardThreshold,
-        estThreshold = 0.5, annDir = adir, corpusCells = cells,
-        cosineThreshold = CosineThreshold, probes = 4,
-        preAnn = Some(loaded))
-    }),
+    // SHORT-CIRCUITED front door: an exact-dup hit makes the two
+    // near-dup verdicts moot, so the skipped legs report NULL. Both
+    // names serve ONE code path, [[ingestFrontDoor]] — the battery,
+    // the per-query bench history and the oracle keep keying on both.
+    "pipeline_ingest_gates_fast" -> ((s, d) => ingestFrontDoor(s, d)),
+    "pipeline_ingest_gates_composed" -> ((s, d) =>
+      ingestFrontDoor(s, d)),
 
     // Bloom-filter front door of incremental ingest: "seen this exact
     // (token-set-canonical) document before?" answered with ONE
@@ -1165,7 +1035,7 @@ object PipelineQueries {
 
     // DISTRIBUTED batch serve (r14): the same batch answered with the
     // query table kept as a distributed scan end to end — probe cells
-    // from a broadcast coarse cross-join + qid window, dynamic
+    // ranked map-side (AnnIndex.probeCellsCol), dynamic
     // cell-set semi-join pruning of the codes scan, ADC re-derived on
     // the fly from the raw query vector and the literal codebooks
     // (same folds, same m-term sum order → row-identical to
@@ -3180,42 +3050,44 @@ object PipelineQueries {
   private def minhashOracle: String =
     minhashOracleFrom(Word3Ctes, JaccardThreshold)
 
-  /** Canonical per-SF-dir index path + documents fingerprint — ONE
-    * home for the key-sanitizing regex and the fingerprint source,
-    * shared by the four persisted-minhash-index queries (a missed
-    * edit in per-query copies would silently split them onto
-    * different index dirs).
+  /** The per-doc verdict fold every flags query shares: one row per
+    * id of `universe`, LEFT-joined to its `matches` (id, score) grouped
+    * by id, so a match-less id still reports near_dup=false —
+    * (id, near_dup, n_matches, best_<score>). `best` finishes the
+    * coalesced best score (the embedding legs round it to 6 places,
+    * where their oracle rounds).
     */
-  /** dedup_minhash_index_flags' body (shared with
-    * pipeline_ingest_gates): per-doc admit/reject verdicts from the
-    * persisted word-3-gram index — estimate-gated candidates (gate
-    * opened to 0.5 so estimator variance doesn't drop borderline true
-    * pairs) EXACT-verified against re-read text of the candidate docs
-    * only, self-matches excluded, folded LEFT from the batch universe
-    * so no-match docs still report near_dup=false.
-    */
-  private def minhashFlags(s: SparkSession, d: String,
-      restrict: Option[DataFrame] = None): DataFrame = {
-    val dir = minhashIndexFor(s, d)
-    val all = documents(s, d).filter(col("doc_id") % 20 === 0)
-    // per-doc verdicts are INDEPENDENT (candidates come from the
-    // corpus index), so restricting the incoming set just drops rows
-    // — the short-circuited front door leans on exactly that
-    val incoming = restrict.fold(all)(ids =>
-      all.join(ids, Seq("doc_id"), "left_semi"))
-    val pairs = graft.ext.MinHashIndex.probeVerified(
-        incoming, documents(s, d), "doc_id", "text", dir,
-        threshold = JaccardThreshold, estThreshold = 0.5)
-      .filter(col("id_a") =!= col("id_b"))
-    incoming.select(col("doc_id"))
-      .join(pairs.groupBy(col("id_a").as("doc_id"))
-          .agg(count(lit(1)).as("n_matches"),
-            max(col("jaccard")).as("best_jaccard")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
+  private def verdictFold(universe: DataFrame, matches: DataFrame,
+      best: Column => Column = identity): DataFrame = {
+    val Array(id, score) = matches.columns
+    universe.select(col(id))
+      .join(matches.groupBy(id).agg(count(lit(1)).as("n_matches"),
+          max(col(score)).as("__best")), Seq(id), "left")
+      .select(col(id),
         col("n_matches").isNotNull.as("near_dup"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        coalesce(col("best_jaccard"), lit(0.0)).as("best_jaccard"))
+        best(coalesce(col("__best"), lit(0.0))).as(s"best_$score"))
+  }
+
+  /** dedup_minhash_index_flags' body (shared with
+    * pipeline_ingest_gates; `ngram` serves dedup_ngram_index_flags
+    * from the char-5-gram index): per-doc admit/reject verdicts from
+    * the persisted index — estimate-gated candidates (gate opened to
+    * 0.5 so estimator variance doesn't drop borderline true pairs)
+    * EXACT-verified against re-read text of the candidate docs only,
+    * self-matches excluded, folded LEFT from the batch universe.
+    */
+  private def minhashFlags(s: SparkSession, d: String,
+      ngram: Boolean = false,
+      threshold: Double = JaccardThreshold): DataFrame = {
+    val dir = minhashIndexFor(s, d, ngram)
+    val incoming = documents(s, d).filter(col("doc_id") % 20 === 0)
+    val pairs = graft.ext.MinHashIndex.probeVerified(
+        incoming, documents(s, d), "doc_id", "text", dir,
+        threshold = threshold, estThreshold = 0.5)
+      .filter(col("id_a") =!= col("id_b"))
+    verdictFold(incoming,
+      pairs.select(col("id_a").as("doc_id"), col("jaccard")))
   }
 
   /** dedup_embed_ann_flags' body (shared with pipeline_ingest_gates):
@@ -3226,79 +3098,74 @@ object PipelineQueries {
     * exact cosine on candidates only). LEFT from the incoming
     * universe, so candidate-less vectors still report near_dup=false.
     */
-  private def embedAnnFlags(s: SparkSession, d: String,
-      restrict: Option[DataFrame] = None): DataFrame = {
+  private def embedAnnFlags(s: SparkSession, d: String): DataFrame = {
     val (dir, emb) = annIndexFor(s, d)
-    val all = emb.filter(col("vec_id") % 20 === 0)
-    val incoming = restrict.fold(all)(ids =>
-      all.join(ids, Seq("vec_id"), "left_semi"))
     val pairs = graft.ext.AnnIndex.cosinePairsIndexed(emb, "vec_id",
       "embedding", dir, CosineThreshold, probes = 4)
     val touched = pairs
       .select(col("id_a").as("vec_id"), col("cos"))
       .unionByName(pairs.select(col("id_b").as("vec_id"), col("cos")))
-    incoming.select(col("vec_id"))
-      .join(touched.groupBy("vec_id")
-          .agg(count(lit(1)).as("n_matches"),
-            max(col("cos")).as("best_cos")),
-        Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        col("n_matches").isNotNull.as("near_dup"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        round(coalesce(col("best_cos"), lit(0.0)), 6).as("best_cos"))
+    verdictFold(emb.filter(col("vec_id") % 20 === 0), touched,
+      round(_, 6))
   }
 
-  /** BATCH-BOUNDED embedding flags for the short-circuited front door:
-    * per-vector verdicts over ONLY the given incoming ids, candidates
-    * from the incoming rows' probe cells joined against the corpus
-    * probe-cell table (`AnnIndex.cellTable` — the annGate static
-    * side) instead of corpus-wide pair mining. The candidate rule is
-    * [[embedAnnFlags]]' probe×probe co-occurrence verbatim, so the
-    * per-doc verdicts are IDENTICAL (per-doc independence) while the
-    * candidate/verify work shrinks to the surviving batch — the
-    * short-circuit's savings on the ANN leg. (The corpus-side cell
-    * assignment stays one shuffle-free map pass — the documented
-    * trade until a persisted cell table exists.)
+  /** The short-circuited ingest front door behind
+    * pipeline_ingest_gates_fast and pipeline_ingest_gates_composed:
+    * `StreamingOps.ingestGates` in BATCH mode over the referee's row
+    * universe (incoming docs that also have an embedding row — at
+    * some SFs documents outnumber embeddings). The operator chains
+    * the bloom / minhash / ann gates on one frame: exact dups emit no
+    * near-dup probe units, survivors' verdicts equal the referee legs'
+    * by per-doc independence, the exact verify runs in-stream, and
+    * all three index dirs are generation-guarded. The oracle (the
+    * referee legs CASE-NULLed on exact_dup) hash-checks all of it;
+    * IngestGatesSpec pins stream == batch across micro-batches and a
+    * restart. pipeline_ingest_gates stays the all-legs referee.
+    *
+    * NOTE (r18 negative result, recorded so later rounds do not
+    * retry): a "servedScoped" mechanism — construct + materialize a
+    * gate query on IterConf's isolated session with AQE off and
+    * footer-derived partitions, to stop lazy localCheckpoints from
+    * compiling/executing their exchanges as serial ~1-task jobs
+    * during query construction — was built, measured, and REVERTED
+    * for every query it was tried on (this front door,
+    * dedup_exact_stateful, dedup_minhash_stateful,
+    * dedup_embed_ann_stateful, dedup_groups_index,
+    * dedup_survivors_index). It won only in cold-JVM profiling (the
+    * front door went 11.9→4.9 s, where each action costs ~150 ms of
+    * driver/codegen warmup); under WARM bench conditions the adaptive
+    * plans' runtime broadcasts/coalescing beat the chatter savings on
+    * every shape (same-window control-normalized A/Bs — front door
+    * scoped ~3.8 s vs adaptive 3.5 s — plus a calib-adjusted
+    * full-bench pair). The scoring stateful gates were the worst
+    * case: the byte-derived width serialized the bucket scoring into
+    * one 9.5 s task. The isolated AQE-off session stays only inside
+    * IterConf's fixed-shape iteration loops (loopScope/
+    * materializeLoop), where it genuinely wins. The kept wins are the
+    * parallel AnnIndex.load and the footer-derived nCells.
     */
-  private def embedAnnFlagsBounded(s: SparkSession, d: String,
-      keep: DataFrame): DataFrame = {
-    val (dir, emb) = annIndexFor(s, d)
-    // ONE side-table load for the probe assignment AND the cell table
-    val loaded = graft.ext.AnnIndex.load(s, dir)
-    val (_, coarse, _) = loaded
-    val incoming = emb.filter(col("vec_id") % 20 === 0)
-      .join(keep, Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("embedding"),
-        graft.ext.Similarity.l2norm(col("embedding")).as("__nrm"))
-      .localCheckpoint(false)
-    val probed = incoming.select(col("vec_id"), col("embedding"),
-      col("__nrm"),
-      explode(graft.ext.AnnIndex.flatProbeCellsCol(col("embedding"),
-        coarse, probes = 4)).as("cell"))
-    val corpusCells = graft.ext.AnnIndex.cellTable(emb, "vec_id",
-      "embedding", dir, probes = 4, pre = Some(loaded))
-    // the probe side is BATCH-BOUNDED (incoming docs × probes) at any
-    // corpus size — broadcast it so the corpus cell table is never
-    // shuffled for this join (guide §3.1) and the candidate cosine
-    // work runs in the cell table's own scan/spread partitioning
-    val cand = broadcast(probed)
-      .join(corpusCells.select(col("cell"), col("id").as("__cid"),
-        col("v").as("__cv"), col("nrm").as("__cnrm")), Seq("cell"))
-      .filter(col("vec_id") =!= col("__cid"))
-      .select(col("vec_id"), col("__cid"),
-        (graft.ext.Similarity.dot(col("embedding"), col("__cv")) /
-          (col("__nrm") * col("__cnrm"))).as("cos"))
-      .distinct()
-      .filter(col("cos") >= CosineThreshold)
-    incoming.select(col("vec_id"))
-      .join(cand.groupBy("vec_id")
-          .agg(count(lit(1)).as("n_matches"),
-            max(col("cos")).as("best_cos")),
-        Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        col("n_matches").isNotNull.as("near_dup"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        round(coalesce(col("best_cos"), lit(0.0)), 6).as("best_cos"))
+  private def ingestFrontDoor(s: SparkSession, d: String): DataFrame = {
+    val (bdir, tsKey) = bloomIndexFor(s, d)
+    val mdir = minhashIndexFor(s, d)
+    val (adir, emb) = annIndexFor(s, d)
+    // ONE side-table load serves the cell table AND the gate's probe
+    // assignment (plumbed, never cached across runs)
+    val loaded = graft.ext.AnnIndex.load(s, adir)
+    val cells = graft.ext.AnnIndex.cellTable(emb, "vec_id",
+      "embedding", adir, probes = 4, pre = Some(loaded))
+    // each incoming row carries BOTH text and vector
+    val incoming = documents(s, d)
+      .filter(col("doc_id") % 20 === 0)
+      .join(emb.filter(col("vec_id") % 20 === 0)
+          .select(col("vec_id").as("doc_id"), col("embedding")),
+        "doc_id")
+      .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
+    graft.streaming.StreamingOps.ingestGates(incoming, "doc_id",
+      "text", "embedding", "ts", documents(s, d), bdir, tsKey,
+      mdir, jaccardThreshold = JaccardThreshold,
+      estThreshold = 0.5, annDir = adir, corpusCells = cells,
+      cosineThreshold = CosineThreshold, probes = 4,
+      preAnn = Some(loaded))
   }
 
   /** Survivor selection over a near-dup pair list (shared by the
@@ -3399,6 +3266,11 @@ object PipelineQueries {
     (dir, tsKey)
   }
 
+  /** Canonical per-SF-dir index path + documents fingerprint — ONE
+    * home for the key-sanitizing regex and the fingerprint source of
+    * the persisted MinHash and Bloom indexes (a missed edit in
+    * per-query copies would silently split them onto different dirs).
+    */
   private def minhashIndexDir(s: SparkSession, d: String,
       suffix: String = ""): (String, String) = {
     val key = new java.io.File(d).getCanonicalPath
@@ -3710,6 +3582,29 @@ object PipelineQueries {
          coalesce(m.n_matches, 0) AS n_matches,
          round(coalesce(m.best_cos, 0.0), 6) AS best_cos
        FROM inc LEFT JOIN m USING (vec_id)"""
+
+  /** The short-circuited front door's oracle: survivors' verdicts
+    * equal the referee legs' (per-doc independence), skipped legs
+    * NULL — the referee oracles CASE-NULLed on exact_dup replay it
+    * exactly.
+    */
+  private lazy val IngestGatesFastOracle: String =
+    s"""WITH bl AS (SELECT * FROM ($bloomGateOracle)),
+         mh AS (SELECT * FROM ($minhashIndexFlagsOracle)),
+         em AS (SELECT * FROM (${embedAnnFlagsOracleSql(probes = 4)}))
+         SELECT bl.doc_id, bl.exact_dup,
+           CASE WHEN bl.exact_dup THEN NULL
+                ELSE mh.near_dup END AS nd_text,
+           CASE WHEN bl.exact_dup THEN NULL
+                ELSE mh.best_jaccard END AS best_jaccard,
+           CASE WHEN bl.exact_dup THEN NULL
+                ELSE em.near_dup END AS nd_embed,
+           CASE WHEN bl.exact_dup THEN NULL
+                ELSE em.best_cos END AS best_cos,
+           (NOT bl.exact_dup AND NOT mh.near_dup AND NOT em.near_dup)
+             AS admit
+         FROM bl JOIN mh ON bl.doc_id = mh.doc_id
+                 JOIN em ON bl.doc_id = em.vec_id"""
 
   /** Generated sim_pq oracle: replays `Similarity.pqTrainedCodebooks`
     * (global int8 scale, subvector codes, `PqIters` unrolled integer
@@ -4060,46 +3955,9 @@ object PipelineQueries {
              AS admit
          FROM bl JOIN mh ON bl.doc_id = mh.doc_id
                  JOIN em ON bl.doc_id = em.vec_id""",
-    // the short-circuited front door: survivors' verdicts equal the
-    // referee legs' (per-doc independence), skipped legs NULL — the
-    // referee oracles CASE-NULLed on exact_dup replay it exactly
-    "pipeline_ingest_gates_fast" ->
-      s"""WITH bl AS (SELECT * FROM ($bloomGateOracle)),
-         mh AS (SELECT * FROM ($minhashIndexFlagsOracle)),
-         em AS (SELECT * FROM (${embedAnnFlagsOracleSql(probes = 4)}))
-         SELECT bl.doc_id, bl.exact_dup,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE mh.near_dup END AS nd_text,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE mh.best_jaccard END AS best_jaccard,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE em.near_dup END AS nd_embed,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE em.best_cos END AS best_cos,
-           (NOT bl.exact_dup AND NOT mh.near_dup AND NOT em.near_dup)
-             AS admit
-         FROM bl JOIN mh ON bl.doc_id = mh.doc_id
-                 JOIN em ON bl.doc_id = em.vec_id""",
-    // the ONE-OPERATOR composition (StreamingOps.ingestGates, batch
-    // face) must equal the _fast referee field for field — sharing
-    // its oracle verbatim IS the check
-    "pipeline_ingest_gates_composed" ->
-      s"""WITH bl AS (SELECT * FROM ($bloomGateOracle)),
-         mh AS (SELECT * FROM ($minhashIndexFlagsOracle)),
-         em AS (SELECT * FROM (${embedAnnFlagsOracleSql(probes = 4)}))
-         SELECT bl.doc_id, bl.exact_dup,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE mh.near_dup END AS nd_text,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE mh.best_jaccard END AS best_jaccard,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE em.near_dup END AS nd_embed,
-           CASE WHEN bl.exact_dup THEN NULL
-                ELSE em.best_cos END AS best_cos,
-           (NOT bl.exact_dup AND NOT mh.near_dup AND NOT em.near_dup)
-             AS admit
-         FROM bl JOIN mh ON bl.doc_id = mh.doc_id
-                 JOIN em ON bl.doc_id = em.vec_id""",
+    // both names of the short-circuited front door (one code path)
+    "pipeline_ingest_gates_fast" -> IngestGatesFastOracle,
+    "pipeline_ingest_gates_composed" -> IngestGatesFastOracle,
     // the persisted gate serves bit-identical verdicts from the
     // committed bitmap — sharing the oracle verbatim IS the check
     "dedup_bloom_index" -> bloomGateOracle,

@@ -418,16 +418,6 @@ object StreamingOps {
       .select(cols: _*)
   }
 
-  /** The corpus's at-rest probe-cell table for [[annGate]] — the
-    * `corpusBandBuckets` role, for embeddings: (cell, id, v, nrm)
-    * assigned with the committed ANN index's OWN frozen centroids
-    * (`AnnIndex.cellTable`), refreshed on the index's rebuild/
-    * compaction cadence.
-    */
-  def corpusAnnCells(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, probes: Int = 4): DataFrame =
-    graft.ext.AnnIndex.cellTable(corpus, idCol, vecCol, dir, probes)
-
   /** Streaming embedding near-dup gate — SemDeDup at ingest: an
     * incoming vector is flagged when the static corpus holds a
     * DIFFERENT vector at cosine >= `threshold` among its probe-cell
@@ -439,9 +429,10 @@ object StreamingOps {
     * assignment, so gate and mining can never drift; flat only: the
     * two-level pick needs a ranking window, which streams don't
     * support, and gates run at ingest batch sizes where flat wins
-    * anyway), joined stream-static against [[corpusAnnCells]], and
-    * exact-cosine verified inline — approximate by candidate
-    * confinement, exact on every scored pair.
+    * anyway), joined stream-static against the corpus's at-rest
+    * probe-cell table (`AnnIndex.cellTable`, the `corpusBandBuckets`
+    * role for embeddings), and exact-cosine verified inline —
+    * approximate by candidate confinement, exact on every scored pair.
     *
     * Shape: map-side cell array → explode → stream-static equi-join
     * on cell (no state; static side cell-partitionable) → one
@@ -675,13 +666,15 @@ object StreamingOps {
   }
 
   /** The COMPOSED streaming ingest front door (VERDICT r16 #1) — the
-    * three admission gates chained on ONE stream, with
-    * `pipeline_ingest_gates_fast`'s exact-dup short-circuit
-    * fold-through and all three index families generation-guarded.
-    * One row per arriving document with the verdict columns the batch
-    * front door emits — (idCol, exact_dup, nd_text, best_jaccard,
-    * nd_embed, best_cos, admit) — field-identical to the batch
-    * referee on the same rows (spec-pinned, streamed and batch):
+    * three admission gates chained on ONE stream, with an exact-dup
+    * short-circuit fold-through and all three index families
+    * generation-guarded. Its batch face is the one body of
+    * `pipeline_ingest_gates_fast` and `pipeline_ingest_gates_composed`.
+    * One row per arriving document — (idCol, exact_dup, nd_text,
+    * best_jaccard, nd_embed, best_cos, admit) — field-identical to the
+    * all-legs referee `pipeline_ingest_gates` on the same rows, with
+    * the skipped legs NULL on exact dups (spec-pinned, streamed and
+    * batch):
     *
     *   1. EXACT leg, map-side + one skinny stream-static join: the
     *      canonical key md5 probes the committed Bloom bitmap inside
@@ -696,7 +689,7 @@ object StreamingOps {
     *      near-dup verdicts, so its rows emit NO probe units at all —
     *      the MinHash candidate join, the exact-verify text re-read,
     *      and the ANN candidate join all shrink to the surviving
-    *      docs (the `_fast` fold-through; skipped legs report NULL).
+    *      docs (the fold-through; skipped legs report NULL).
     *   3. TEXT near-dup leg, exact-verified IN-STREAM: the map-side
     *      signature (`Dedup.shingleHashesCol`/`charGramHashesCol` +
     *      `minhashComponent` — bit-compatible with the index's batch
@@ -720,7 +713,8 @@ object StreamingOps {
     *      (`AnnIndex.flatProbeCellsCol` — the annGate/batch-shared
     *      assignment), stream-static joined against `corpusCells`
     *      (`AnnIndex.cellTable`), exact cosine on candidates only —
-    *      `embedAnnFlags`' candidate rule verbatim.
+    *      `AnnIndex.cosinePairsIndexed`'s probe×probe candidate rule
+    *      verbatim (the referee's embedding leg).
     *   5. One watermarked windowed aggregate assembles the per-doc
     *      verdicts — the ONLY stateful operator in the plan; state is
     *      bounded by in-flight docs within the watermark horizon.
@@ -874,7 +868,7 @@ object StreamingOps {
           jacc >= lit(jaccardThreshold), jacc))
       .drop("__dtext", "__cstrs", "__strs", "__sig", "__mid")
     // embed candidates: probe cells x the corpus cell table, exact
-    // cosine inline (embedAnnFlags' rule)
+    // cosine inline (cosinePairsIndexed's probe x probe rule)
     val cells = corpusCells.select(col("cell").as("__ccell"),
       col("id").as("__cid"), col("v").as("__cv"),
       col("nrm").as("__cnrm"))

@@ -809,4 +809,16 @@ class PlanShapeSpec extends SparkSpec
       "marginal joins must broadcast:\n" + p)
     assert(!p.contains("WindowExec") && !p.contains("CartesianProduct"), p)
   }
+
+  test("pipeline_ingest_gates_fast fires no more Spark jobs than the " +
+      "all-legs referee it short-circuits") {
+    val q = SparkEntry.queries
+    val names = Seq("pipeline_ingest_gates", "pipeline_ingest_gates_fast")
+    // warm pass: every index both queries serve from is built first
+    names.foreach(n => q(n)(spark, d).count())
+    val Seq(referee, fast) = names.map(n =>
+      sparkWorkOf(q(n)(spark, d).count()).jobs.size)
+    assert(fast <= referee,
+      s"_fast fired $fast jobs, the referee $referee")
+  }
 }

@@ -883,6 +883,35 @@ class AnnIndexSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("duplicate qid")), msgs(e).toString)
   }
 
+  test("searchBatchDist on a flat index ranks probe cells map-side: " +
+      "no nested-loop or cartesian join, no rank window over the " +
+      "query-cell dots") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.joins.{
+      BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val s = spark
+    val emb = s.read.parquet(embPath)
+    val dir = Files.createTempDirectory("annflat").toString
+    AnnIndex.build(emb, "vec_id", "embedding", dir, nCells = 16,
+      m = 32, nCentroids = 64, iters = 1)
+    val qdf = emb.filter(col("vec_id") % 50 === 0)
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = AnnIndex.searchBatchDist(emb, "vec_id", "embedding",
+          dir, qdf, "vec_id", "embedding", probes = 2, k = 10,
+          nCand = 80)
+        .queryExecution.executedPlan
+      val bad = plan.collect {
+        case j: BroadcastNestedLoopJoinExec => j: SparkPlan
+        case j: CartesianProductExec => j
+        case w: WindowExec if w.orderSpec.exists(
+            _.references.exists(_.name == "__d")) => w
+      }
+      assert(bad.isEmpty, s"probe rank must be map-side:\n$plan")
+    } finally s.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("maintenance lease: a held lease makes every maintenance op " +
       "abort loudly (one winner + one clean abort) and leaves the " +
       "index unchanged; searches keep serving; release unblocks") {

@@ -11,8 +11,10 @@ import graft.SparkSpec
 
 /** The composed streaming ingest front door (r17 — VERDICT r16 #1):
   * `StreamingOps.ingestGates` chains the exact / text-near-dup /
-  * embedding-near-dup gates on one stream with the `_fast`
-  * short-circuit fold-through. Pins:
+  * embedding-near-dup gates on one stream with an exact-dup
+  * short-circuit fold-through; its batch face is the one body of
+  * `pipeline_ingest_gates_fast` and `pipeline_ingest_gates_composed`.
+  * Pins:
   *
   *   - verdict semantics on planted structure (exact dup → legs NULL,
   *     near-dup text → exact-verified best_jaccard, near-dup embed →

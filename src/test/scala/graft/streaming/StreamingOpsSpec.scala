@@ -612,7 +612,7 @@ class StreamingOpsSpec extends SparkSpec {
     // probes = nCells -> full coverage: the verdict machinery (self
     // exclusion, threshold, fold) is exercised without confinement
     // misses muddying the expected truth
-    val cells = StreamingOps.corpusAnnCells(corpus, "vec_id",
+    val cells = graft.ext.AnnIndex.cellTable(corpus, "vec_id",
       "embedding", dir, probes = 2).cache()
     assert(cells.count() == 16, "8 vectors x 2 probed cells")
     val docs = Seq(
@@ -700,7 +700,7 @@ class StreamingOpsSpec extends SparkSpec {
       .toString
     graft.ext.AnnIndex.build(corpus, "vec_id", "embedding", dir,
       nCells = 2, m = 2, nCentroids = 4, iters = 1)
-    val cells = StreamingOps.corpusAnnCells(corpus, "vec_id",
+    val cells = graft.ext.AnnIndex.cellTable(corpus, "vec_id",
       "embedding", dir, probes = 2).localCheckpoint(true)
     val in = MemoryStream[(Long, Timestamp, Array[Float])]
     val q = StreamingOps.annGate(
